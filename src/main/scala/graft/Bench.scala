@@ -13,24 +13,6 @@ object Bench {
     // would emit invalid JSON
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
 
-  /** Bytes under this JVM's blockmgr local dirs (shuffle files + spill):
-    * the suite-contamination diagnostic — these accumulate only if the
-    * ContextCleaner falls behind or something pins shuffle dependencies.
-    * Globbed from the local-dir root (DiskBlockManager's fields are
-    * private[spark]); local mode puts blockmgr-* under spark.local.dir. */
-  private def localDirBytes(spark: SparkSession): Long = {
-    // spark.local.dir is documented as a comma-separated list — sum
-    // blockmgr-* across every root, not a File of the joined string
-    val roots = spark.sparkContext.getConf.get("spark.local.dir",
-      System.getProperty("java.io.tmpdir", "/tmp")).split(',').map(_.trim)
-      .filter(_.nonEmpty).map(new java.io.File(_))
-    def size(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
-    roots.flatMap(r => Option(r.listFiles()).getOrElse(Array.empty[java.io.File]))
-      .filter(f => f.getName.startsWith("blockmgr-")).map(size).sum
-  }
-
   private def loadAvg(): Double = BoxState.loadAvg()
   private def foreignJvms(): Int = BoxState.foreignJvms()
 
@@ -94,7 +76,6 @@ object Bench {
     spark.range(2000000).selectExpr("sum(id * 2)").write.mode("overwrite").format("noop").save()
     // optional comma-separated subset for local profiling (driver leaves unset)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    val debug = sys.env.contains("SPARK_GRAFT_BENCH_DEBUG")
     // Single-shot numbers showed ~4x run-to-run noise on untouched code paths
     // (q24 moved 3.7x, q28 6.5x between rounds) — report the per-query MEDIAN
     // of `iters` runs plus the min/max spread so regressions are gradable.
@@ -131,12 +112,6 @@ object Bench {
       foreignCpuMax = math.max(foreignCpuMax, BoxState.foreignShare(lastTicks, nowTicks))
       lastTicks = nowTicks
       loadMax = math.max(loadMax, loadAvg())
-      if (debug) {
-        val rt = Runtime.getRuntime
-        System.err.println(s"[bench-debug] $name t=${r3(elapsed)} cpu=${r3(cpu)} " +
-          s"heapMB=${(rt.totalMemory() - rt.freeMemory()) / (1 << 20)} " +
-          s"localDirMB=${localDirBytes(spark) / (1 << 20)}")
-      }
       (elapsed, cpu)
     }
     // iterate suite-major (all queries, then repeat) so iteration i of one

@@ -371,18 +371,9 @@ object BpeOps {
     // coalesce: null text yields an empty id array, not a kernel NPE.
     // spread-if-narrow first (guide §2.6): the per-row BPE kernel ran
     // single-task off a one-split corpus; no key column is guaranteed in
-    // this generic schema, so spread round-robin (deterministic under
-    // SPARK-23207's sort-before-repartition); no-op at cluster scale
-    val wide = {
-      val conf = spark.sessionState.conf
-      if (docs.isStreaming) docs // stream-safe: micro-batch plans stay as-is
-      else {
-        val est = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (est >= BigInt(conf.filesMaxPartitionBytes) * conf.numShufflePartitions) docs
-        else docs.repartition(conf.numShufflePartitions)
-      }
-    }
-    val staged = wide.withColumn(tmp, coalesce(lower(col(textCol)), lit("")))
+    // this generic schema, so the spread is round-robin
+    val staged = TextOps.spreadNarrow(docs)
+      .withColumn(tmp, coalesce(lower(col(textCol)), lit("")))
     val li = staged.schema.fieldIndex(tmp)
     // containsNull = true, nullable = true: ids are never actually null,
     // but the driver's arrow-level hash compares the ORACLE side through

@@ -386,12 +386,9 @@ object Dedup {
       // verify shingles: the batch side re-shingles its survivors (semi-join
       // first — the semi-join cannot push through the shingle explode); the
       // corpus side reads the INDEX, restricted to surviving ids.
-      // round-robin ON PURPOSE (the minhashNearDups r18 rule): the verify's
-      // collect_set aggregate feeds TWO join sides, and only a post-kernel
-      // exchange gives ReusedExchange a barrier — hash-by-id fused the
-      // aggregate into the kernel stage and the whole union (batch
-      // re-shingle + the 235k-row index shingle-set scan) executed TWICE
-      // per probe (measured in the q51 stage decomposition, r19)
+      // round-robin spread: the survivors' per-row shingle kernel gets the
+      // full width (a probe batch arrives in few splits); a spread keyed by
+      // id, which the set aggregate could reuse, has not been measured
       val newSurvivors = newDf.join(
         broadcast(cand.select(col("id_a").as(idCol)).distinct()), Seq(idCol), "left_semi")
       val newSh = shinglesRaw(newSurvivors.repartition(par), idCol, textCol, shingleSize)

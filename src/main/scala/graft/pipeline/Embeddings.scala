@@ -218,7 +218,7 @@ object Embeddings {
     * [[graft.spark.expressions.NearestCells]] node (constant plan size,
     * same exact arithmetic). Overridable for tests/tuning. */
   private def inlineCellsMax: Int =
-    sys.props.get("graft.ivf.inline.cells.max").map(_.toInt).getOrElse(64)
+    graft.core.SysProps.int("graft.ivf.inline.cells.max", 64, min = 0)
 
   /** Array of the `m` nearest cell ids by (d² asc, id asc) for the current
     * row's (q, n2) — both paths produce bit-identical results; neither

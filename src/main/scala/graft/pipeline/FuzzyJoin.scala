@@ -62,10 +62,11 @@ object FuzzyJoin {
                                           maxDist: Int): DataFrame =
     editDistanceJoinImpl(df, idCol, strCol, maxDist, eager = false)
 
-  /** COUNT of blocked candidate pairs (pre-verify), all three branches
-    * WITHOUT any dedup — exactly what the verify kernel receives (since
-    * r18 the pair-level distinct runs AFTER the verify, so candidates
-    * carry one row per shared blocking key). Exposed for the scale
+  /** COUNT of blocked candidate pairs (pre-verify), all four branches
+    * (symdelete, prefix, segment, tiny) WITHOUT any dedup — exactly what
+    * the verify kernel receives (since r18 the pair-level distinct runs
+    * AFTER the verify, so candidates carry one row per shared blocking
+    * key). Exposed for the scale
     * smoke's cost decomposition: candidate volume is the blocking quality
     * axis; the banded-DP verify and the output materialization are
     * per-candidate / per-true-pair work no blocking scheme can remove.
@@ -117,7 +118,7 @@ object FuzzyJoin {
     * branch takes over, whose per-string blocking state is O(k²) grams at
     * any length. Overridable for tuning (`graft.fuzzy.symdelete.maxlen`). */
   private def symDeleteMaxLen: Int =
-    sys.props.get("graft.fuzzy.symdelete.maxlen").map(_.toInt).getOrElse(40)
+    graft.core.SysProps.int("graft.fuzzy.symdelete.maxlen", 40, min = 0)
 
   /** Branch candidate frames `(id_a, id_b, s_a, s_b)` (symdelete, prefix,
     * segment, tiny) plus the caches to release after consumption. */

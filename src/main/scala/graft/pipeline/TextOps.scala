@@ -19,15 +19,17 @@ object TextOps {
     * a small corpus arrives as FEW parquet splits (at sf0.1 the whole
     * documents table is one 128 MB-bounded split), so a pure-projection
     * kernel — HOF token algebra, regex scans, per-row deflate — runs in ONE
-    * task while 31 cores idle. Spread by the unique key when the optimizer's
-    * size estimate says the scan cannot already fill the shuffle width; at
-    * cluster scale (estimate ≥ splits × width) this is a NO-OP, so the
-    * projection keeps its zero-shuffle plan exactly where the shuffle would
-    * hurt. Decided from `optimizedPlan.stats` — never by executing the plan
-    * (an `.rdd` probe would materialize AQE stages of exchange-bearing
-    * inputs). */
+    * task while 31 cores idle. Spread when the optimizer's size estimate
+    * says the scan cannot already fill the shuffle width: hash-partitioned
+    * by the unique `keys` when given, round-robin when the schema
+    * guarantees none (deterministic under SPARK-23207's
+    * sort-before-repartition). At cluster scale (estimate ≥ splits × width)
+    * this is a NO-OP, so the projection keeps its zero-shuffle plan exactly
+    * where the shuffle would hurt. Decided from `optimizedPlan.stats` —
+    * never by executing the plan (an `.rdd` probe would materialize AQE
+    * stages of exchange-bearing inputs). */
   private[graft] def spreadNarrow[T](df: org.apache.spark.sql.Dataset[T],
-                                     key: Column): org.apache.spark.sql.Dataset[T] = {
+                                     keys: Column*): org.apache.spark.sql.Dataset[T] = {
     // STREAM-SAFE: these kernels also run unchanged inside streaming
     // micro-batch plans, where (a) probing optimizedPlan would trip the
     // batch-only checker and (b) the engine already sizes micro-batches
@@ -36,7 +38,8 @@ object TextOps {
     val par = conf.numShufflePartitions
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est >= BigInt(conf.filesMaxPartitionBytes) * par) df
-    else df.repartition(par, key)
+    else if (keys.isEmpty) df.repartition(par)
+    else df.repartition(par, keys: _*)
   }
 
   /** Whitespace tokens of a lowercase text column. */

@@ -225,7 +225,7 @@ object TrainingSet {
     * it the per-stratum frame broadcast-joins (same results, constant plan
     * size). Overridable for tests/tuning. */
   private def temperatureInlineMaxStrata: Int =
-    sys.props.get("graft.temperature.inline.strata.max").map(_.toInt).getOrElse(64)
+    graft.core.SysProps.int("graft.temperature.inline.strata.max", 64, min = 0)
 
   /** Deterministic global shuffle key: ordering by it (plus the key itself
     * as tiebreaker) is a reproducible corpus-wide permutation — the

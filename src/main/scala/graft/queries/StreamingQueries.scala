@@ -78,8 +78,7 @@ object StreamingQueries {
       val mid = ch.agg(max(col("lsn"))).head().getLong(0) / 2
       // stream-sized child session for the upsert's per-batch window —
       // see q84; the change-stream source is orders-sized
-      val sUps = IceStreaming.sizedSession(s,
-        new java.io.File(s"$d/orders.parquet").length())
+      val sUps = IceStreaming.sizedSession(s, s"$d/orders.parquet")
       def applyBatch(): Unit =
         IceStreaming.streamUpsert(sUps, src.refresh(), tgt, keyIds = Seq(1),
           orderCol = "lsn", checkpoint = ckpt, opCol = Some("op"),
@@ -111,7 +110,7 @@ object StreamingQueries {
       // partition, floor 1) and saturates at the caller's width, so a
       // cluster-scale source keeps the caller's parallelism exactly where
       // the state actually needs it. Results are width-independent.
-      val s = IceStreaming.sizedSession(s0, new java.io.File(s"$d/events.parquet").length())
+      val s = IceStreaming.sizedSession(s0, s"$d/events.parquet")
       val raw = s.readStream
         .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
         .option("pathGlobFilter", "events.parquet")
@@ -156,7 +155,7 @@ object StreamingQueries {
       val unit = graft.Tables.tsUnit(s0, s"$d/events.parquet", "ts")
       // stream-sized child session — see q84; flatMapGroupsWithState pays
       // the same one-state-store-per-shuffle-partition constant
-      val s = IceStreaming.sizedSession(s0, new java.io.File(s"$d/events.parquet").length())
+      val s = IceStreaming.sizedSession(s0, s"$d/events.parquet")
       import s.implicits._
       val raw = s.readStream
         .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")

@@ -27,20 +27,6 @@ object IceWrite {
   /** Reserved prefix for physical partition-directory column names. */
   private[graft] val PartColPrefix = "__gp_"
 
-  /** `-Dgraft.write.profile=true` prints per-stage write-path timings to
-    * stderr (dev observability for the per-ACID-write constant; build.sbt
-    * forwards graft.* sysprops into forked JVMs). */
-  private[graft] val ProfileWrites = java.lang.Boolean.getBoolean("graft.write.profile")
-  private[graft] def ptime[A](label: String)(f: => A): A =
-    if (!ProfileWrites) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[iceprof] $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.3fs")
-      r
-    }
-
   // One standing write child per parent session (weak keys: a stopped and
   // dereferenced parent must not pin its child). The child's conf set is
   // CONSTANT, so every write can share it — and a concurrent write on the
@@ -126,9 +112,9 @@ object IceWrite {
              summary: Map[String, String] = Map.empty,
              props: Map[String, String] = Map.empty): IceTable = {
     val files = writeDataFiles(spark, table, df, table.schema)
-    ptime("commit")(table.newTransaction(branch).appendData(files)
+    table.newTransaction(branch).appendData(files)
       .summaryExtra(summary.toSeq: _*)
-      .updateProperties(props, ownedExclusively = true).commit())
+      .updateProperties(props, ownedExclusively = true).commit()
   }
 
   /** Writes equality-delete files for the rows of `df` projected onto
@@ -475,7 +461,7 @@ object IceWrite {
       // over-estimate badly and fan tiny outputs across the cluster — AND
       // the physical-planning pass that .rdd forces just to count partitions
       val nOut = outFiles.getOrElse {
-        val inParts = ptime("plan: rdd partition count")(aligned.rdd.getNumPartitions)
+        val inParts = aligned.rdd.getNumPartitions
         val targetFileBytes = props.getOrElse("write.target-file-size-bytes",
           (512L << 20).toString).toLong
         val estBytes = aligned.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -497,14 +483,13 @@ object IceWrite {
         s"parquet.bloom.filter.enabled#${k.stripPrefix(BloomProp)}" -> v
     }.foldLeft(writer) { case (w, (k, v)) => w.option(k, v) }
 
-    ptime("write job")(withBlooms
+    withBlooms
       .option("compression", props.getOrElse("write.parquet.compression-codec", "zstd"))
       .option("maxRecordsPerFile",
         props.getOrElse("write.max-records-per-file", "10000000"))
-      .parquet(stagingDir))
+      .parquet(stagingDir)
 
-    ptime("footer scrape")(
-      collectDataFiles(spark, table, stagingDir, writeSchema, partFields.map(_.name), content, equalityIds))
+    collectDataFiles(spark, table, stagingDir, writeSchema, partFields.map(_.name), content, equalityIds)
   }
 
   /** Walks the staging dir, parses hive-style partition dirs back to

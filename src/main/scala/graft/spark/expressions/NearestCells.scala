@@ -33,7 +33,7 @@ object CentroidSet {
     * task; the expression shape (one constant-size node, static kernel
     * call, identical arithmetic) does not change. Overridable for tests. */
   def maxInlineLongs: Long =
-    sys.props.get("graft.ivf.inline.longs.max").map(_.toLong).getOrElse(1L << 24)
+    graft.core.SysProps.long("graft.ivf.inline.longs.max", 1L << 24, min = 0)
 
   def apply(cents: Array[(Long, Array[Long], Long)]): CentroidSet = {
     val dim = cents.head._2.length

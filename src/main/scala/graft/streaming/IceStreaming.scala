@@ -34,17 +34,20 @@ object IceStreaming {
 
   /** A CHILD session (shared SparkContext / catalog, fresh SQLConf — the
     * dupClusters isolation pattern) whose shuffle width derives from the
-    * SOURCE size: `ceil(bytes / 32MB)` partitions, saturating at the
-    * caller's width. Stateful streaming operators allocate one state store
-    * per shuffle partition per micro-batch; a toy-scale stream at the
-    * session's full width spends its wall on store machinery, while a
-    * cluster-scale source (bytes ≥ 32MB × width) keeps the caller's width
-    * exactly where the state needs it. The caller's conf is never touched;
-    * results are width-independent. */
-  def sizedSession(spark: SparkSession, sourceBytes: Long): SparkSession = {
+    * size of the local `sourceFile`: `ceil(bytes / 32MB)` partitions,
+    * saturating at the caller's width. Stateful streaming operators
+    * allocate one state store per shuffle partition per micro-batch; a
+    * toy-scale stream at the session's full width spends its wall on store
+    * machinery, while a cluster-scale source (bytes ≥ 32MB × width) keeps
+    * the caller's width exactly where the state needs it. The caller's conf
+    * is never touched; results are width-independent. A missing path or a
+    * directory fails here rather than sizing the stream as zero bytes. */
+  def sizedSession(spark: SparkSession, sourceFile: String): SparkSession = {
+    val f = new java.io.File(sourceFile)
+    require(f.isFile, s"stream source '$sourceFile' is missing or not a regular file")
     val par = spark.sessionState.conf.numShufflePartitions
     val p = math.max(1L, math.min(par.toLong,
-      (math.max(sourceBytes, 0L) + BytesPerStatePartition - 1) / BytesPerStatePartition)).toInt
+      (f.length() + BytesPerStatePartition - 1) / BytesPerStatePartition)).toInt
     if (p >= par) spark
     else {
       val child = spark.newSession()

@@ -349,7 +349,7 @@ object ManifestIO {
     * entirely. Bounded per kind; evicts least-recently-used.
     */
   private val manifestCacheCap =
-    sys.props.get("graft.manifest.cache.entries").map(_.toInt).getOrElse(256)
+    graft.core.SysProps.int("graft.manifest.cache.entries", 256, min = 1)
   private def lru[V](): java.util.LinkedHashMap[String, V] =
     new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
@@ -377,8 +377,8 @@ object ManifestIO {
     * threads so the JVM exits cleanly.
     */
   private val manifestReadParallelism =
-    sys.props.get("graft.manifest.read.parallelism").map(_.toInt)
-      .getOrElse(math.min(16, Runtime.getRuntime.availableProcessors()))
+    graft.core.SysProps.int("graft.manifest.read.parallelism",
+      math.min(16, Runtime.getRuntime.availableProcessors()), min = 1)
   private lazy val manifestPool = java.util.concurrent.Executors.newFixedThreadPool(
     manifestReadParallelism,
     new java.util.concurrent.ThreadFactory {

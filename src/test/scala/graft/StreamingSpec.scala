@@ -568,6 +568,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getString(0) -> r.getLong(2)).toMap == Map("a" -> 3L, "b" -> 10L, "c" -> 7L))
   }
 
+  test("sizedSession fails naming a missing or directory source instead of sizing it at width 1") {
+    val dir = Files.createTempDirectory("sized").toString
+    for (path <- Seq(s"$dir/events.parquet", dir)) {
+      val err = intercept[IllegalArgumentException](IceStreaming.sizedSession(spark, path))
+      assert(err.getMessage.contains(path), err.getMessage)
+    }
+    val tiny = Files.write(java.nio.file.Paths.get(dir, "src.bin"), Array[Byte](1, 2, 3))
+    assert(IceStreaming.sizedSession(spark, tiny.toString)
+      .conf.get("spark.sql.shuffle.partitions") == "1")
+  }
+
   test("watermarked windowed aggregation matches batch computation") {
     import spark.implicits._
     val src = Files.createTempDirectory("wmsrc").toString
