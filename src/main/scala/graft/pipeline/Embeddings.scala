@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.spark.expressions.NearestCells
 import graft.spark.expressions.VectorFunctions.{dotq, normSq}
 
 /** Similarity search over an embedding column (`Array[Float]`).
@@ -14,15 +16,23 @@ import graft.spark.expressions.VectorFunctions.{dotq, normSq}
   * reproducible top-k at scale. The final cosine is one IEEE division of
   * exact inputs.
   *
-  * Scale paths: brute-force top-k is an intentionally-bounded
-  * queries × corpus join (use for re-ranking candidate sets); the sign-LSH
-  * bucketed variant prunes the corpus to one bucket per query via an
-  * equi-join, the standard recall/throughput trade.
+  * One ANN core serves every search operator. A top-k search picks a
+  * block key — none (brute force), a sign-LSH bucket, or the query's
+  * `nprobe` nearest IVF cells — and a score — exact cosine (descending) or
+  * PQ asymmetric distance, raw or residual (ascending) — and then runs the
+  * one probe path: one broadcast of the query side, one self-exclusion,
+  * one `row_number` window with a neighbor-id tie-break. The pair
+  * operators (LSH near-dups, semantic dedup, the k-NN graph) share one
+  * block self-join. Every nearest-centroid argmin — cell assignment, cell
+  * probes, raw and residual PQ encoding — is the
+  * [[graft.spark.expressions.NearestCells]] kernel.
   *
-  * The bucketed/IVF operators `.cache()` their shared intermediates (both
-  * join sides read them); in a long-lived session, call
-  * `spark.catalog.clearCache()` between unrelated workloads to release
-  * them — the bench/verify harnesses already do.
+  * Caching: an operator that reads its prepared corpus in more than one
+  * Spark job (a centroid or codebook sample, the LSH dimension probe,
+  * training) takes it through [[cacheCorpus]], a size-1 registry. Repeat
+  * calls on the same corpus reuse the cached copy; a different corpus
+  * unpersists it, so a long-lived session pins at most one ANN corpus and
+  * needs no `clearCache()` between workloads. Nothing else is cached.
   */
 object Embeddings {
 
@@ -37,73 +47,164 @@ object Embeddings {
       .select(col(idCol), quantize(col(embCol)).as("q"))
       .withColumn("n2", normSq(col("q")))
 
-  // native codegen kernel (LongArrayDot): a lambda aggregate(zip_with(...))
-  // here is interpreted per element and dominates all-pairs scoring
-  private def dot(a: Column, b: Column): Column = dotq(a, b)
+  // ---- the ANN core ----
 
-  private def cosine(dotCol: Column, na: Column, nb: Column): Column =
-    dotCol.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
+  /** Exact cosine of a pair (qa, na) · (qb, nb) through the native codegen
+    * dot kernel (a lambda aggregate(zip_with(...)) is interpreted per
+    * element and dominates all-pairs scoring). */
+  private def cosine: Column =
+    dotq(col("qa"), col("qb")).cast("double") /
+      (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double")))
+
+  /** ANN sizes arrive from SQL TVF arguments and Scala callers: a zero cell
+    * or codeword count would divide by zero in the sample stride, a zero
+    * nprobe leaves a query without a probe cell, a zero k returns nothing.
+    * Each must be >= 1; the message names the parameter and its value. */
+  private def requirePositive(params: (String, Int)*): Unit = params.foreach {
+    case (name, v) => require(v >= 1, s"$name must be >= 1, got $name=$v")
+  }
+
+  /** The two sides of a top-k search before scoring: corpus rows and query
+    * rows (idCol, q, n2, …), both carrying the block key columns `key`. */
+  private final case class Blocked(corpus: DataFrame, queries: DataFrame, key: Seq[String])
+
+  /** No block key: every query meets every corpus row. */
+  private def unblocked(corpus: DataFrame, queryPred: Column): Blocked =
+    Blocked(corpus, corpus.filter(queryPred), Nil)
+
+  /** IVF block key `c`: a corpus row lives in its nearest cell only; a
+    * query row repeats once for each of its `nprobe` nearest cells. */
+  private def ivfBlocked(corpus: DataFrame, queryPred: Column,
+                         cents: Array[(Long, Array[Long], Long)], nprobe: Int): Blocked = {
+    requirePositive("nprobe" -> nprobe)
+    Blocked(corpus.withColumn("c", cellOf(cents)),
+      corpus.filter(queryPred)
+        .withColumn("c", explode(NearestCells.nearestCellIds(col("q"), col("n2"), cents, nprobe))),
+      Seq("c"))
+  }
+
+  /** Nearest cell id of the current (q, n2) row: one per-row projection,
+    * no shuffle, window or join. */
+  private def cellOf(cents: Array[(Long, Array[Long], Long)]): Column =
+    element_at(NearestCells.nearestCellIds(col("q"), col("n2"), cents, 1), 1)
+
+  /** Keep the `k` best rows per `by` in `order`, ties to the lower `tie`
+    * id — a rank-limited window Spark pushes below its sort. */
+  private def rankLimited(scored: DataFrame, by: String, order: Column, tie: String,
+                          k: Int): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy(col(by)).orderBy(order, col(tie).asc)))
+      .filter(col("rnk") <= k)
+
+  /** The one top-k probe path: corpus rows (neighbor_id, key…, payload)
+    * join the BROADCAST query rows (query_id, key…, payload) on the block
+    * key — no key is a nested loop over the streamed corpus — each query
+    * drops itself, and one window keeps the k best by `score` (ascending
+    * for a distance, descending for a similarity), ties to the lower
+    * neighbor id. Output (query_id, rnk, neighbor_id, `name`). */
+  private def probeTopK(corpus: DataFrame, queries: DataFrame, key: Seq[String],
+                        score: Column, name: String, ascending: Boolean, k: Int): DataFrame =
+    rankLimited(
+      corpus.join(broadcast(queries), key).filter(col("query_id") =!= col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"), score.as(name)),
+      "query_id", if (ascending) col(name).asc else col(name).desc, "neighbor_id", k)
+      .select(col("query_id"), col("rnk"), col("neighbor_id"), col(name))
+
+  /** Exact-cosine top-k through the probe path. */
+  private def cosineTopK(b: Blocked, idCol: String, k: Int): DataFrame = {
+    def side(df: DataFrame, id: String, v: String, n: String) =
+      df.select((col(idCol).as(id) +: b.key.map(col)) :+ col("q").as(v) :+ col("n2").as(n): _*)
+    probeTopK(side(b.corpus, "neighbor_id", "qb", "nb"), side(b.queries, "query_id", "qa", "na"),
+      b.key, cosine, "cos", ascending = false, k)
+  }
+
+  /** The one block self-join of the pair operators: every pair of rows
+    * sharing the block key (an LSH bucket or an IVF cell) that `keep`
+    * admits, scored by exact cosine — (id_a, id_b, key, cos). Candidate
+    * generation is a shuffled equi-join on the key, never an all-pairs
+    * product or a full-corpus broadcast. */
+  private def blockPairs(blocked: DataFrame, idCol: String, key: String,
+                         keep: (Column, Column) => Column): DataFrame = {
+    def side(id: String, v: String, n: String) =
+      blocked.select(col(idCol).as(id), col(key), col("q").as(v), col("n2").as(n))
+    side("id_a", "qa", "na").join(side("id_b", "qb", "nb"), Seq(key))
+      .filter(keep(col("id_a"), col("id_b")))
+      .select(col("id_a"), col("id_b"), col(key), cosine.as("cos"))
+  }
+
+  /** Size-1 cache registry for the prepared corpus of every operator that
+    * reads it in more than one Spark job. Repeat invocations on the SAME
+    * corpus (dashboards re-issuing a query, the bench's iterations, varied
+    * cells/nprobe TVF args that miss the memo) reuse one cached copy; a
+    * DIFFERENT corpus unpersists the previous one, bounding pinned storage
+    * at a single corpus however many tables a long-lived session touches
+    * (settled by two r18 A/B measurements: unpersist-before-materialize
+    * re-scanned the corpus per consumer — 1.6× q121 CPU — and eager
+    * localCheckpoint paid two extra materialization jobs per call — 1.4×;
+    * reuse-with-bounded-pinning is the only variant that is both fast and
+    * leak-free). A corpus the caller cached itself is used as it is and
+    * never unpersisted here. A `spark.catalog.clearCache()` drops the
+    * entry; [[GraftShim.planIsCached]] detects that and the next call
+    * re-caches instead of silently recomputing per consumer. */
+  private[this] val ivfCorpus =
+    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+  private[graft] def cacheCorpus(prepared: DataFrame): DataFrame = ivfCorpus.synchronized {
+    import org.apache.spark.sql.GraftShim.planIsCached
+    val cur = ivfCorpus.get()
+    val alive = cur != null && !cur.sparkSession.sparkContext.isStopped
+    if (alive && (cur.sparkSession eq prepared.sparkSession) &&
+        cur.queryExecution.analyzed.sameResult(prepared.queryExecution.analyzed) &&
+        planIsCached(cur)) cur
+    else if (planIsCached(prepared)) prepared
+    else {
+      if (alive) scala.util.Try(cur.unpersist())
+      val c = prepared.cache()
+      ivfCorpus.set(c)
+      c
+    }
+  }
+
+  // ---- operators ----
 
   /** Exact top-k cosine neighbors for each row matching `queryPred`.
     * Deterministic: ranked by (cosine desc, neighbor id asc) over exact
-    * integer dots. */
+    * integer dots. A bounded query set against the streamed corpus (use for
+    * re-ranking candidate sets). */
   def bruteForceTopK(prepared: DataFrame, idCol: String, k: Int, queryPred: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the pair join is a broadcast nested loop (non-equi condition): spread
-    // the streamed side across the cluster first or it runs single-task
-    val par = prepared.sparkSession.sessionState.conf.numShufflePartitions
-    val q = prepared.filter(queryPred).repartition(par)
-      .select(col(idCol).as("query_id"), col("q").as("qa"), col("n2").as("na"))
-    val c = prepared.select(col(idCol).as("neighbor_id"), col("q").as("qb"), col("n2").as("nb"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
+    requirePositive("k" -> k)
+    cosineTopK(unblocked(prepared, queryPred), idCol, k)
   }
 
-  /** Near-duplicate pairs with cosine ≥ threshold (id_a < id_b). Brute-force
-    * form: broadcasts the WHOLE corpus, so it is only for bounded candidate
-    * sets (re-ranking); the scale path is [[nearDupPairsLSH]]. */
-  def nearDupPairs(prepared: DataFrame, idCol: String, threshold: Double): DataFrame = {
-    val par = prepared.sparkSession.sessionState.conf.numShufflePartitions
-    val a = prepared.select(col(idCol).as("id_a"), col("q").as("qa"), col("n2").as("na"))
-      .repartition(par, col("id_a"))
-    val b = prepared.select(col(idCol).as("id_b"), col("q").as("qb"), col("n2").as("nb"))
-    // broadcast keeps this a BroadcastNestedLoopJoin (codegen) rather than a
-    // CartesianProduct evaluating the scoring expression row-at-a-time; rows
-    // stay narrow (id, vector, norm) and the dot is the native codegen kernel
-    a.join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("cos"))
-      .filter(col("cos") >= threshold)
+  /** Approximate top-k: exact cosine ranking restricted to the query's LSH
+    * bucket. Equi-join on bucket id replaces the full cross product — the
+    * IVF-style scale path; recall is tunable via `planes`. */
+  def annTopK(prepared: DataFrame, idCol: String, k: Int, planes: Int,
+              queryPred: Column): DataFrame = {
+    requirePositive("k" -> k)
+    val buckets = lshBucket(cacheCorpus(prepared), idCol, planes)
+    cosineTopK(Blocked(buckets, buckets.filter(queryPred), Seq("bucket")), idCol, k)
   }
 
   /** Near-duplicate pairs over sign-LSH candidates (id_a < id_b): only pairs
     * landing in the same LSH bucket are scored, so candidate generation is a
     * shuffled EQUI-JOIN on bucket id — never an all-pairs product or a
     * full-corpus broadcast — and the exact quantized cosine verifies the
-    * survivors. This is the 100 TB form of [[nearDupPairs]]; recall is the
-    * standard sign-LSH trade, tunable via `planes` (fewer planes → bigger
-    * buckets → higher recall and more verify work).
+    * survivors. Each vector lives in exactly ONE bucket, so a same-bucket
+    * pair arises exactly once (no candidate dedup pass, unlike banded
+    * minhash); recall is the standard sign-LSH trade, tunable via `planes`
+    * (fewer planes → bigger buckets → higher recall and more verify work).
     */
   def nearDupPairsLSH(prepared: DataFrame, idCol: String, threshold: Double,
-                      planes: Int): DataFrame = {
-    // each vector lives in exactly ONE bucket, so a same-bucket pair arises
-    // exactly once — no candidate dedup pass needed (unlike banded minhash)
-    val buckets = lshBucket(prepared, idCol, planes).cache()
-    val a = buckets.select(col(idCol).as("id_a"), col("bucket"), col("q").as("qa"), col("n2").as("na"))
-    val b = buckets.select(col(idCol).as("id_b"), col("bucket"), col("q").as("qb"), col("n2").as("nb"))
-    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("cos"))
+                      planes: Int): DataFrame =
+    blockPairs(lshBucket(cacheCorpus(prepared), idCol, planes), idCol, "bucket", _ < _)
+      .select(col("id_a"), col("id_b"), col("cos"))
       .filter(col("cos") >= threshold)
-  }
 
   /** Sign-LSH bucket id per vector: bit j = sign of ⟨hyperplane_j, q⟩ over
-    * `planes` deterministic pseudo-random hyperplanes. Hyperplane component
-    * h(plane, dim) = first md5 nibble of "plane:dim" mapped to the odd
-    * integers {-15,…,15} (never zero → unambiguous signs; all-integer dots →
-    * engine-portable buckets).
+    * `planes` (1 to 63, one bit each of a long) deterministic pseudo-random
+    * hyperplanes. Hyperplane component h(plane, dim) = first md5 nibble of
+    * "plane:dim" mapped to the odd integers {-15,…,15} (never zero →
+    * unambiguous signs; all-integer dots → engine-portable buckets).
     *
     * The hyperplanes are driver-computable (planes×dim small constants), so
     * the bucket is a single per-row PROJECTION over inlined literals — a
@@ -113,6 +214,7 @@ object Embeddings {
     * amplification, not the arithmetic, was the cost.
     */
   def lshBucket(prepared: DataFrame, idCol: String, planes: Int): DataFrame = {
+    require(planes >= 1 && planes <= 63, s"planes must be in [1, 63], got planes=$planes")
     val dim = prepared.select(size(col("q"))).head.getInt(0)
     val md = java.security.MessageDigest.getInstance("MD5")
     def component(p: Int, d: Int): Long = {
@@ -133,13 +235,10 @@ object Embeddings {
     * assignment and search shape are identical), each vector is assigned to
     * its nearest centroid by exact quantized L2, and ranking runs only
     * within the query's cell (nprobe = 1). All distances are exact integer
-    * arithmetic: d² = |v|² + |c|² − 2⟨v,c⟩ via the codegen dot kernel, so
-    * assignments are engine-portable. Centroids are driver-collected; up to
-    * `graft.ivf.inline.cells.max` (default 64) they're inlined as plan
-    * literals, above that the matrix rides in one constant-size codegen
-    * node ([[graft.spark.expressions.NearestCells]]) — either way a per-row
-    * argmin with no assignment shuffle; the candidate join is an equi-join
-    * on cell id.
+    * arithmetic: d² = |v|² + |c|² − 2⟨v,c⟩, so assignments are
+    * engine-portable. The centroid matrix rides one constant-size
+    * [[graft.spark.expressions.NearestCells]] node — a per-row argmin with
+    * no assignment shuffle; the candidate join is an equi-join on cell id.
     */
   def ivfTopK(prepared: DataFrame, idCol: String, k: Int, cells: Int,
               queryPred: Column): DataFrame =
@@ -149,6 +248,25 @@ object Embeddings {
     * `nprobe` nearest cells; corpus vectors still live in exactly one cell,
     * so candidate volume (and cost) scales with nprobe/cells while recall
     * recovers neighbors that fall just across a Voronoi boundary. */
+  def ivfTopKProbed(prepared: DataFrame, idCol: String, k: Int, cells: Int,
+                    queryPred: Column, nprobe: Int): DataFrame = {
+    requirePositive("k" -> k)
+    val corpus = cacheCorpus(prepared)
+    cosineTopK(ivfBlocked(corpus, queryPred, sampleCentroids(corpus, idCol, cells), nprobe),
+      idCol, k)
+  }
+
+  /** [[ivfTopKProbed]] with k-means-trained centroids: tighter Voronoi
+    * cells → better recall at the same nprobe when the corpus is clustered
+    * (the data-dependent case where id-sampled centroids mis-bin). */
+  def ivfTopKTrained(prepared: DataFrame, idCol: String, k: Int, cells: Int,
+                     queryPred: Column, nprobe: Int, trainIters: Int = 3): DataFrame = {
+    requirePositive("k" -> k)
+    val corpus = cacheCorpus(prepared)
+    cosineTopK(ivfBlocked(corpus, queryPred, trainCentroids(corpus, idCol, cells, trainIters),
+      nprobe), idCol, k)
+  }
+
   /** Deterministic centroid sample, any id space. Two tiers:
     *
     * FAST PATH — dense ids from 0: every ⌊n/cells⌋-th id by value, one
@@ -166,16 +284,14 @@ object Embeddings {
     * range-shuffle even once swap in a k-means|| sample here, as the class
     * doc notes.
     *
+    * `knownN` spares the count job when the caller already has the row
+    * count (operators that sample twice off the same cached corpus — coarse
+    * cells + PQ codebooks — pay ONE count job instead of one per sample).
+    *
     * Returns (cell id, quantized centroid, |c|²). */
-  def sampleCentroids(prepared: DataFrame, idCol: String, cells: Int): Array[(Long, Array[Long], Long)] =
-    sampleCentroids(prepared, idCol, cells, None)
-
-  /** [[sampleCentroids]] with a caller-supplied row count: operators that
-    * sample twice off the same cached corpus (coarse cells + PQ codebooks —
-    * the q117/q121/q122 shape) pay ONE count job instead of one per sample
-    * (guide §5: the driver section — fewer sequential driver round-trips). */
   def sampleCentroids(prepared: DataFrame, idCol: String, cells: Int,
-                      knownN: Option[Long]): Array[(Long, Array[Long], Long)] = {
+                      knownN: Option[Long] = None): Array[(Long, Array[Long], Long)] = {
+    requirePositive("cells" -> cells)
     val n = knownN.getOrElse(prepared.count()) // one metadata-scale job; estimate via stats at scale
     val m = math.max(n / cells, 1L)
     val dense = prepared
@@ -202,33 +318,6 @@ object Embeddings {
     }
   }
 
-  /** Per-row nearest-cell argmin expression over inlined centroid literals:
-    * an array of exact (d², c) structs sorted ascending — struct ordering
-    * gives the (distance asc, c asc) tie-break — entirely inside codegen,
-    * no n×cells crossJoin shuffle, no window. */
-  private def rankedCellsExpr(cents: Array[(Long, Array[Long], Long)]): Column =
-    array_sort(array(cents.map { case (cid, cq, cn2) =>
-      struct((col("n2") + lit(cn2) - lit(2L) * dotq(col("q"), typedLit(cq))).as("d2"),
-        lit(cid).as("c"))
-    }.toSeq: _*))
-
-  /** Literal inlining is ideal while the plan stays small, but plan size and
-    * per-row codegen cost grow linearly with cells; above this threshold the
-    * centroid matrix moves out of the plan into a single
-    * [[graft.spark.expressions.NearestCells]] node (constant plan size,
-    * same exact arithmetic). Overridable for tests/tuning. */
-  private def inlineCellsMax: Int =
-    graft.core.SysProps.int("graft.ivf.inline.cells.max", 64, min = 0)
-
-  /** Array of the `m` nearest cell ids by (d² asc, id asc) for the current
-    * row's (q, n2) — both paths produce bit-identical results; neither
-    * shuffles, windows, or joins: one projection expression per row. */
-  private def rankedCellIds(cents: Array[(Long, Array[Long], Long)], m: Int): Column =
-    if (cents.length <= inlineCellsMax)
-      slice(rankedCellsExpr(cents), 1, math.min(m, cents.length)).getField("c")
-    else
-      graft.spark.expressions.NearestCells.nearestCellIds(col("q"), col("n2"), cents, m)
-
   /** Lloyd's k-means refinement of the IVF centroids (the trained-centroid
     * scale path the sampled variant documents): starts from the
     * deterministic sample, then each iteration assigns every vector to its
@@ -252,7 +341,7 @@ object Embeddings {
     var cents = initial.getOrElse(sampleCentroids(prepared, idCol, cells))
     val dim = cents.head._2.length
     for (_ <- 1 to iters) {
-      val assign = element_at(rankedCellIds(cents, 1), 1)
+      val assign = cellOf(cents)
       // per-cell dim-array of sums in ONE hash aggregate: dim sum columns,
       // map-side combined, at most `cells` result rows — no n×dim posexplode
       // row expansion, and the driver collect is cells rows (not cells×dim).
@@ -271,9 +360,7 @@ object Embeddings {
       // TakeOrdered branch re-reads the cached corpus inside the same job).
       // d² is recomputed from the assignment's cell id via ONE literal
       // matrix lookup (d² = n2 + |c|² − 2⟨q,c⟩), so plan size stays
-      // constant in `cells` like the guarded assignment path
-      // (rankedCellsExpr here would inline cells× struct expressions,
-      // bypassing the inlineCellsMax guard — review finding r18)
+      // independent of `cells`, like the assignment itself
       val nullArr = lit(null).cast("array<bigint>")
       val rows =
         if (!reseedEmpty)
@@ -330,163 +417,123 @@ object Embeddings {
     cents
   }
 
-  def ivfTopKProbed(prepared: DataFrame, idCol: String, k: Int, cells: Int,
-                    queryPred: Column, nprobe: Int): DataFrame =
-    searchCells(prepared, idCol, k, queryPred, nprobe,
-      sampleCentroids(prepared, idCol, cells))
-
-  /** [[ivfTopKProbed]] with k-means-trained centroids: tighter Voronoi
-    * cells → better recall at the same nprobe when the corpus is clustered
-    * (the data-dependent case where id-sampled centroids mis-bin). */
-  def ivfTopKTrained(prepared: DataFrame, idCol: String, k: Int, cells: Int,
-                     queryPred: Column, nprobe: Int, trainIters: Int = 3): DataFrame = {
-    val cached = prepared.cache() // training iterates over it; search reuses
-    searchCells(cached, idCol, k, queryPred, nprobe,
-      trainCentroids(cached, idCol, cells, trainIters))
-  }
-
-  private def searchCells(prepared: DataFrame, idCol: String, k: Int,
-                          queryPred: Column, nprobe: Int,
-                          cents: Array[(Long, Array[Long], Long)]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // both join sides (corpus assignment + query probes) need the ranked
-    // cells — compute the cells × dots once and cache, like the LSH path
-    val withCells = prepared.withColumn("__cells", rankedCellIds(cents, nprobe)).cache()
-    val assigned = withCells.withColumn("c", element_at(col("__cells"), 1))
-    // probe list only materializes on QUERY rows (filter first, then explode)
-    val q = withCells.filter(queryPred)
-      .select(col(idCol).as("query_id"),
-        explode(col("__cells")).as("c"),
-        col("q").as("qa"), col("n2").as("na"))
-    val c = assigned.select(col(idCol).as("neighbor_id"), col("c"), col("q").as("qb"), col("n2").as("nb"))
-    val scored = q.join(c, Seq("c")).filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
-  }
+  /** Corpus → cell assignment (id, cell) — exposed for the PipelineSpec
+    * skew gates (per-cell populations bound candidate volume). */
+  private[graft] def cellAssignments(prepared: DataFrame, idCol: String,
+                                     cents: Array[(Long, Array[Long], Long)]): DataFrame =
+    prepared.select(col(idCol), cellOf(cents).as("cell"))
 
   // ---- product quantization (Jégou, Douze & Schmid 2011,
   //      "Product Quantization for Nearest Neighbor Search") ----
 
-  /** Per-subspace PQ codebooks from the [[sampleCentroids]] deterministic
-    * id-strided sample: codeword c of subspace j is dims [j·d/m, (j+1)·d/m)
-    * of sampled vector c — reproducible across engines and partitionings
-    * (per-subspace Lloyd refinement belongs to [[trainCentroids]]' scale
-    * path and is deliberately not replicated here). Returns (d, d/m,
-    * per-subspace array of (codeword subvector, its squared norm)). */
-  private def pqCodebooks(prepared: DataFrame, idCol: String, m: Int, k: Int,
-                          knownN: Option[Long] = None)
-      : (Int, Int, Array[Array[(Array[Long], Long)]]) = {
-    val cents = sampleCentroids(prepared, idCol, k, knownN)
-    val d = cents.head._2.length
-    require(m > 0 && d % m == 0, s"subspaces ($m) must divide the dimension ($d)")
-    val sub = d / m
-    val books = Array.tabulate(m) { j =>
-      cents.map { case (_, q, _) =>
-        val cw = q.slice(j * sub, (j + 1) * sub)
-        (cw, cw.map(x => x * x).sum)
+  /** PQ codebooks: `sub` dims per subspace, one codebook (codeword id,
+    * subvector, |·|²) per subspace, and for residual PQ the coarse
+    * centroids the codes are residuals against. */
+  private final case class PqBooks(sub: Int, books: Array[Array[(Long, Array[Long], Long)]],
+                                   coarse: Option[Array[(Long, Array[Long], Long)]]) {
+    /** Residual PQ's per-codeword term 2⟨c_j, cw⟩ for the row's cell `c`:
+      * ‖(q_j − c_j) − cw‖² = ‖q_j − c_j‖² + |cw|² − 2⟨q_j,cw⟩ + 2⟨c_j,cw⟩.
+      * None for raw PQ (a zero centroid). */
+    def bias(j: Int): Option[Column] = coarse.map { cents =>
+      val byCell = cents.toSeq.map { case (_, cq, _) =>
+        val cj = cq.slice(j * sub, (j + 1) * sub)
+        books(j).toSeq.map { case (_, cw, _) =>
+          2L * cj.iterator.zip(cw.iterator).map { case (a, b) => a * b }.sum
+        }
       }
+      element_at(typedLit(byCell), col("c").cast("int") + 1)
     }
-    (d, sub, books)
   }
+
+  /** The one PQ codebook builder, from the [[sampleCentroids]]
+    * deterministic id-strided sample: codeword c of subspace j is dims
+    * [j·d/m, (j+1)·d/m) of (sample_c − centroid(cell(sample_c))) — the
+    * residual of the c-th sample against its nearest `coarse` centroid
+    * (Jégou 2011 §IV: residual codebooks spend their resolution on the
+    * within-cell displacement), or against a zero centroid for raw PQ,
+    * where q − 0 = q. Reproducible across engines and partitionings
+    * (per-subspace Lloyd refinement is deliberately not replicated here);
+    * driver-side, exact integers throughout. */
+  private def pqCodebooks(prepared: DataFrame, idCol: String, m: Int, k: Int,
+                          coarse: Option[Array[(Long, Array[Long], Long)]],
+                          knownN: Option[Long] = None): PqBooks = {
+    requirePositive("m" -> m, "k" -> k)
+    val samples = sampleCentroids(prepared, idCol, k, knownN)
+    val d = samples.head._2.length
+    require(d % m == 0, s"subspaces ($m) must divide the dimension ($d)")
+    val sub = d / m
+    val resid = samples.map { case (_, q, _) =>
+      val c = coarse.fold(new Array[Long](d))(cs => cs(NearestCells.nearestIndex(q, cs))._2)
+      Array.tabulate(d)(i => q(i) - c(i))
+    }
+    PqBooks(sub, Array.tabulate(m) { j =>
+      resid.zipWithIndex.map { case (r, c) =>
+        val cw = r.slice(j * sub, (j + 1) * sub)
+        (c.toLong, cw, cw.map(x => x * x).sum)
+      }
+    }, coarse)
+  }
+
+  /** PQ codes of the current (q[, c]) row, ARRAY<INT>: per subspace the
+    * codeword minimizing ‖r_j − cw‖² through the NearestCells kernel (ties
+    * to the lowest codeword id; the row-constant ‖r_j‖² is dropped). The
+    * residual never materializes: its codeword-dependent part is the
+    * kernel's per-codeword bias. */
+  private def pqCodes(pq: PqBooks): Column =
+    array(pq.books.indices.map { j =>
+      element_at(NearestCells.nearestCellIds(slice(col("q"), j * pq.sub + 1, pq.sub), lit(0L),
+        pq.books(j), 1, pq.bias(j)), 1).cast("int")
+    }: _*)
 
   /** PQ-encode every vector: d quantized longs collapse to `m` small codes
     * (argmin exact integer L2 against each subspace codebook, ties to the
     * lowest codeword id) — 64 dims → 8 bytes-ish per vector, the memory
     * step that makes billion-vector ANN fit an executor fleet. Zero
-    * shuffle: the codebooks ride the plan as literals (m·k·d/m longs — a
-    * few KB), encoding is one projection; subvectors and their norms are
-    * staged ONCE per row (the q96 planning rule) so the k codeword
-    * distances reuse them. Emits (idCol, pq_codes ARRAY<INT>). */
-  def pqEncode(prepared: DataFrame, idCol: String, m: Int = 8, k: Int = 16): DataFrame =
-    pqEncodeWith(prepared, idCol, pqCodebooks(prepared, idCol, m, k), m)
-
-  private def pqEncodeWith(prepared: DataFrame, idCol: String,
-                           books: (Int, Int, Array[Array[(Array[Long], Long)]]),
-                           m: Int, carry: Seq[String] = Nil): DataFrame = {
-    val (_, sub, cb) = books
-    val staged = prepared.select((col(idCol) +: carry.map(col)) ++
-      (0 until m).flatMap { j =>
-        val s = slice(col("q"), j * sub + 1, sub)
-        Seq(s.as(s"__s$j"), normSq(s).as(s"__n$j"))
-      }: _*)
-    val codes = (0 until m).map { j =>
-      // exact (d², c) structs sorted ascending — struct ordering gives the
-      // (distance asc, codeword asc) tie-break inside codegen (the
-      // rankedCellsExpr pattern)
-      element_at(array_sort(array(cb(j).zipWithIndex.map { case ((cw, cn2), c) =>
-        struct((col(s"__n$j") + lit(cn2) - lit(2L) * dotq(col(s"__s$j"), typedLit(cw.toSeq))).as("d2"),
-          lit(c).as("c"))
-      }.toSeq: _*)), 1).getField("c")
-    }
-    staged.select(col(idCol) +: carry.map(col) :+ array(codes: _*).as("pq_codes"): _*)
+    * shuffle: encoding is one projection of `m` kernel nodes, each holding
+    * its codebook by reference. Emits (idCol, pq_codes ARRAY<INT>). */
+  def pqEncode(prepared: DataFrame, idCol: String, m: Int = 8, k: Int = 16): DataFrame = {
+    val corpus = cacheCorpus(prepared)
+    corpus.select(col(idCol), pqCodes(pqCodebooks(corpus, idCol, m, k, None)).as("pq_codes"))
   }
 
-  /** Approximate top-k by PQ ASYMMETRIC distance (ADC): each query keeps
-    * its exact subvectors, every corpus vector only its `m` codes;
-    * distance = Σ_j ‖query_j − codeword(code_j)‖² in exact BIGINT
-    * arithmetic, so ranking is engine-reproducible (ties → neighbor id
-    * asc). The corpus side streams m ints instead of d longs — the PQ
-    * memory win — against a BROADCAST query side (query sets are
-    * corpus-tiny), then the per-query top-k window (the q26 shape,
-    * WindowGroupLimit-bounded). */
+  /** ADC top-k through the probe path (Jégou 2011 §III.B): each query keeps
+    * its exact subvectors, every corpus vector only its `m` codes, and the
+    * distance Σ_j ‖r_j − cw(code_j)‖² is exact BIGINT, so ranking is
+    * engine-reproducible (ties → neighbor id asc). The per-(query, probe
+    * cell) part ‖q − c‖² (|q|² for raw PQ) is staged once on the query
+    * side; each candidate adds Σ_j |cw|² − 2⟨q_j,cw⟩ (+ the residual bias).
+    * Integer sums are exact in any association, so `adc_dist` equals the
+    * per-subspace sum bit for bit. */
+  private def adcTopK(b: Blocked, idCol: String, pq: PqBooks, topK: Int): DataFrame = {
+    val coded = b.corpus.select((col(idCol).as("neighbor_id") +: b.key.map(col)) :+
+      pqCodes(pq).as("pq_codes"): _*)
+    val base = pq.coarse.fold(col("n2")) { cents =>
+      val cell = col("c").cast("int") + 1
+      col("n2") + element_at(typedLit(cents.map(_._3).toSeq), cell) -
+        lit(2L) * dotq(col("q"), element_at(typedLit(cents.map(_._2.toSeq).toSeq), cell))
+    }
+    val queries = b.queries.select((col(idCol).as("query_id") +: b.key.map(col)) ++
+      (base.as("__base") +: pq.books.indices.map(j =>
+        slice(col("q"), j * pq.sub + 1, pq.sub).as(s"__qs$j"))): _*)
+    val dist = pq.books.indices.map { j =>
+      val code = element_at(col("pq_codes"), j + 1) + 1
+      val cw = element_at(typedLit(pq.books(j).map(_._2.toSeq).toSeq), code)
+      val cn2 = element_at(typedLit(pq.books(j).map(_._3).toSeq), code)
+      val d = cn2 - lit(2L) * dotq(col(s"__qs$j"), cw)
+      pq.bias(j).fold(d)(bias => d + element_at(bias, code))
+    }.foldLeft(col("__base"))(_ + _)
+    probeTopK(coded, queries, b.key, dist, "adc_dist", ascending = true, topK)
+  }
+
+  /** Approximate top-k by PQ ASYMMETRIC distance (ADC) over EVERY corpus
+    * code: the corpus side streams m ints instead of d longs — the PQ
+    * memory win — against the broadcast query side, then the per-query
+    * top-k window (the q26 shape, WindowGroupLimit-bounded). */
   def pqTopK(prepared: DataFrame, idCol: String, topK: Int, queryPred: Column,
              m: Int = 8, k: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val books = pqCodebooks(prepared, idCol, m, k)
-    val (_, sub, cb) = books
-    val par = prepared.sparkSession.sessionState.conf.numShufflePartitions
-    val coded = pqEncodeWith(prepared, idCol, books, m)
-      .select(col(idCol).as("neighbor_id"), col("pq_codes"))
-      .repartition(par, col("neighbor_id"))
-    val queries = prepared.filter(queryPred)
-      .select(col(idCol).as("query_id") +: (0 until m).flatMap { j =>
-        val s = slice(col("q"), j * sub + 1, sub)
-        Seq(s.as(s"__qs$j"), normSq(s).as(s"__qn$j"))
-      }: _*)
-    val dist = (0 until m).map { j =>
-      val code = element_at(col("pq_codes"), j + 1)
-      val cw = element_at(typedLit(cb(j).map(_._1.toSeq).toSeq), code + 1)
-      val cn2 = element_at(typedLit(cb(j).map(_._2).toSeq), code + 1)
-      col(s"__qn$j") + cn2 - lit(2L) * dotq(col(s"__qs$j"), cw)
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    coded.join(broadcast(queries), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dist.as("adc_dist"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= topK)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("adc_dist"))
-  }
-
-  /** Size-1 cache registry for the PQ/IVF index builders' prepared corpus.
-    * Repeat invocations on the SAME corpus (dashboards re-issuing a query,
-    * the bench's iterations, varied cells/nprobe TVF args that miss the
-    * memo) reuse one cached copy; a DIFFERENT corpus unpersists the
-    * previous one, bounding pinned storage at a single corpus however many
-    * tables a long-lived session touches (ADVICE r17 #3, settled by two
-    * r18 A/B measurements: unpersist-before-materialize re-scanned the
-    * corpus per consumer — 1.6× q121 CPU — and eager localCheckpoint paid
-    * two extra materialization jobs per call — 1.4×; reuse-with-bounded-
-    * pinning is the only variant that is both fast and leak-free). A
-    * `spark.catalog.clearCache()` (the bench/verify per-query hygiene)
-    * drops the entry; [[GraftShim.planIsCached]] detects that and the next
-    * call re-caches instead of silently recomputing per consumer. */
-  private[this] val ivfCorpus =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private[graft] def cacheCorpus(prepared: DataFrame): DataFrame = ivfCorpus.synchronized {
-    val cur = ivfCorpus.get()
-    val alive = cur != null && !cur.sparkSession.sparkContext.isStopped
-    if (alive && (cur.sparkSession eq prepared.sparkSession) &&
-        cur.queryExecution.analyzed.sameResult(prepared.queryExecution.analyzed) &&
-        org.apache.spark.sql.GraftShim.planIsCached(cur)) cur
-    else {
-      if (alive) scala.util.Try(cur.unpersist())
-      val c = prepared.cache()
-      ivfCorpus.set(c)
-      c
-    }
+    requirePositive("topK" -> topK)
+    val corpus = cacheCorpus(prepared)
+    adcTopK(unblocked(corpus, queryPred), idCol, pqCodebooks(corpus, idCol, m, k, None), topK)
   }
 
   /** IVFADC (Jégou, Douze & Schmid 2011 §IV — the billion-vector search
@@ -498,94 +545,21 @@ object Embeddings {
     * compute drops to ~nprobe/cells of the corpus (VERDICT r16 #3).
     *
     * Scale shape: the corpus index is ONE zero-shuffle projection emitting
-    * (id, cell, m codes) — cell assignment is the per-row argmin over
-    * inlined centroid literals, encoding the per-subspace argmin over
-    * literal codebooks; the candidate step is a broadcast EQUI-join on
+    * (id, cell, m codes); the candidate step is a broadcast EQUI-join on
     * cell id against the exploded query probes (queries are corpus-tiny),
-    * never a corpus-wide nested loop. Distances stay exact BIGINT (the
-    * pqTopK ADC contract), so the DuckDB oracle replays every cell
-    * assignment, code, and ranking bit-for-bit; recall follows the
-    * standard nprobe/cells dial. */
+    * never a corpus-wide nested loop. Distances stay exact BIGINT, so the
+    * DuckDB oracle replays every cell assignment, code, and ranking
+    * bit-for-bit; recall follows the standard nprobe/cells dial. */
   def pqTopKIVF(prepared: DataFrame, idCol: String, topK: Int, queryPred: Column,
                 cells: Int = 8, nprobe: Int = 2, m: Int = 8, k: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // four consumers read the prepared frame (coarse sample, codebook
-    // sample, corpus encode, query probes): one cached corpus copy via the
-    // size-1 [[cacheCorpus]] registry — reused across invocations on the
-    // same corpus, released when a different corpus arrives
-    val cached = cacheCorpus(prepared)
+    requirePositive("topK" -> topK)
+    val corpus = cacheCorpus(prepared)
     // ONE count job shared by the coarse sample and the codebook sample
     // (guide §5 driver round-trips); the count also fills the cache
-    val n = cached.count()
-    val cents = sampleCentroids(cached, idCol, cells, Some(n))
-    val books = pqCodebooks(cached, idCol, m, k, Some(n))
-    val (_, sub, cb) = books
-    // corpus index: (neighbor_id, cell, pq_codes) — at rest this is the
-    // m-codes-per-vector memory footprint plus one small int; `prepare`
-    // already spread the corpus, so no extra shuffle here
-    val coded = pqEncodeWith(
-        cached.withColumn("__cell", element_at(rankedCellIds(cents, 1), 1)),
-        idCol, books, m, carry = Seq("__cell"))
-      .select(col(idCol).as("neighbor_id"), col("__cell").as("c"), col("pq_codes"))
-    // query side: nprobe probe rows per query, each carrying the staged
-    // exact subvectors + norms the ADC distance reuses per subspace
-    val queries = cached.filter(queryPred)
-      .withColumn("__probes", rankedCellIds(cents, nprobe))
-      .select(col(idCol).as("query_id") +: explode(col("__probes")).as("c") +:
-        (0 until m).flatMap { j =>
-          val s = slice(col("q"), j * sub + 1, sub)
-          Seq(s.as(s"__qs$j"), normSq(s).as(s"__qn$j"))
-        }: _*)
-    val dist = (0 until m).map { j =>
-      val code = element_at(col("pq_codes"), j + 1)
-      val cw = element_at(typedLit(cb(j).map(_._1.toSeq).toSeq), code + 1)
-      val cn2 = element_at(typedLit(cb(j).map(_._2).toSeq), code + 1)
-      col(s"__qn$j") + cn2 - lit(2L) * dotq(col(s"__qs$j"), cw)
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    coded.join(broadcast(queries), Seq("c")).filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dist.as("adc_dist"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= topK)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("adc_dist"))
-  }
-
-  /** Nearest trained centroid for one driver-side vector: argmin of
-    * |c|² − 2⟨q,c⟩ (the |q|² term is constant), ties to the lowest cell id —
-    * the same ordering the per-row codegen argmin uses. */
-  private def nearestCentroid(cents: Array[(Long, Array[Long], Long)],
-                              q: Array[Long]): Array[Long] =
-    cents.minBy { case (cid, cq, cn2) =>
-      (cn2 - 2L * q.iterator.zip(cq.iterator).map { case (a, b) => a * b }.sum, cid)
-    }._2
-
-  /** Per-subspace PQ codebooks over coarse-quantizer RESIDUALS (Jégou 2011
-    * §IV): codeword c of subspace j is dims [j·d/m, (j+1)·d/m) of
-    * (sample_c − centroid(cell(sample_c))) — the residual of the c-th
-    * id-strided sample against its own nearest TRAINED centroid. Residual
-    * codebooks spend their quantization resolution on the within-cell
-    * displacement instead of re-encoding the coarse component raw vectors
-    * waste it on. All driver-side (k samples × cells distances), exact
-    * integers throughout. */
-  private def pqResidualCodebooks(prepared: DataFrame, idCol: String, m: Int, k: Int,
-                                  cents: Array[(Long, Array[Long], Long)],
-                                  knownN: Option[Long] = None)
-      : (Int, Int, Array[Array[(Array[Long], Long)]]) = {
-    val samples = sampleCentroids(prepared, idCol, k, knownN)
-    val d = samples.head._2.length
-    require(m > 0 && d % m == 0, s"subspaces ($m) must divide the dimension ($d)")
-    val sub = d / m
-    val resid = samples.map { case (_, q, _) =>
-      val c = nearestCentroid(cents, q)
-      Array.tabulate(d)(i => q(i) - c(i))
-    }
-    val books = Array.tabulate(m) { j =>
-      resid.map { r =>
-        val cw = r.slice(j * sub, (j + 1) * sub)
-        (cw, cw.map(x => x * x).sum)
-      }
-    }
-    (d, sub, books)
+    val n = corpus.count()
+    val cents = sampleCentroids(corpus, idCol, cells, Some(n))
+    adcTopK(ivfBlocked(corpus, queryPred, cents, nprobe), idCol,
+      pqCodebooks(corpus, idCol, m, k, None, Some(n)), topK)
   }
 
   /** Jégou-faithful IVFADC (2011 §IV, the full design point): the coarse
@@ -599,87 +573,80 @@ object Embeddings {
     *
     * Scale shape unchanged from [[pqTopKIVF]]: the corpus index is one
     * zero-shuffle projection emitting (id, cell, m codes) — the residual
-    * never materializes per row; encoding argmin uses the identity
-    * ‖r_j − cw‖² = ‖r_j‖² + ‖cw‖² − 2(⟨q_j,cw⟩ − ⟨c_j,cw⟩), where the
-    * ⟨centroid_j, codeword⟩ table (cells × m × k longs) is driver-computed
-    * and rides the plan as literals, so per subspace the row pays ONE
-    * codegen dot kernel per codeword plus constant lookups. Query-side ADC
-    * reconstructs the residual distance per probed cell the same way. The
-    * candidate step stays a broadcast EQUI-join on cell id; everything is
-    * exact BIGINT, so the DuckDB oracle replays training (including
-    * reseeds), assignment, residual codes, and ADC bit-for-bit. */
+    * never materializes per row: the ⟨centroid_j, codeword⟩ table (cells ×
+    * m × k longs) is driver-computed and rides the plan as the encoding
+    * kernel's bias and the ADC's per-candidate term. Everything is exact
+    * BIGINT, so the DuckDB oracle replays training (including reseeds),
+    * assignment, residual codes, and ADC bit-for-bit. */
   def pqTopKIVFTrained(prepared: DataFrame, idCol: String, topK: Int, queryPred: Column,
                        cells: Int = 8, nprobe: Int = 2, m: Int = 8, k: Int = 16,
                        trainIters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // one cached corpus copy via the size-1 [[cacheCorpus]] registry, shared
-    // by training's repeated passes, the two sampling collects, the encode,
-    // and the probe side (the pqTopKIVF convention)
-    val cellIdx = col("c").cast("int") + 1
-    val cached = cacheCorpus(prepared)
+    requirePositive("topK" -> topK)
+    val corpus = cacheCorpus(prepared)
     // ONE count job shared by the training init sample and the codebook
     // sample (guide §5 driver round-trips); the count also fills the cache
-    val n = cached.count()
-    val cents = trainCentroids(cached, idCol, cells, trainIters, reseedEmpty = true,
-      initial = Some(sampleCentroids(cached, idCol, cells, Some(n))))
-    val books = pqResidualCodebooks(cached, idCol, m, k, cents, Some(n))
+    val n = corpus.count()
+    val cents = trainCentroids(corpus, idCol, cells, trainIters, reseedEmpty = true,
+      initial = Some(sampleCentroids(corpus, idCol, cells, Some(n))))
     require(cents.map(_._1).toSeq == (0L until cents.length.toLong),
       "coarse cells must be consecutively numbered from 0 (sampleCentroids contract)")
-    val (_, sub, cb) = books
-    // driver literal tables, indexed by cell id then (for D) codeword:
-    //   centSubs(j)(cell) = centroid subvector,  cc2(j)(cell) = its |·|²,
-    //   dTab(j)(cw)(cell) = ⟨centroid_j(cell), codeword⟩
-    val centSubs: Array[Seq[Seq[Long]]] = Array.tabulate(m)(j =>
-      cents.map(_._2.slice(j * sub, (j + 1) * sub).toSeq).toSeq)
-    val cc2: Array[Seq[Long]] = Array.tabulate(m)(j =>
-      centSubs(j).map(cs => cs.iterator.map(x => x * x).sum))
-    val dTab: Array[Array[Seq[Long]]] = Array.tabulate(m)(j =>
-      cb(j).map { case (cw, _) =>
-        centSubs(j).map(cs => cs.iterator.zip(cw.iterator).map { case (a, b) => a * b }.sum)
-      })
-    // corpus index: (neighbor_id, cell, residual pq codes) in ONE projection
-    val staged = cached.select(col(idCol).as("neighbor_id") +:
-      element_at(rankedCellIds(cents, 1), 1).as("c") +:
-      (0 until m).map(j => slice(col("q"), j * sub + 1, sub).as(s"__s$j")): _*)
-    val codes = (0 until m).map { j =>
-      // argmin over codewords of ‖r_j − cw‖² minus its row-constant ‖r_j‖²
-      // term: |cw|² − 2(⟨q_j,cw⟩ − D(cell,j,cw)) — ties (equal distance) to
-      // the lowest codeword id, identical to the raw-vector PQ convention
-      element_at(array_sort(array(cb(j).zipWithIndex.map { case ((cw, cn2), cwi) =>
-        struct((lit(cn2) - lit(2L) * (dotq(col(s"__s$j"), typedLit(cw.toSeq)) -
-          element_at(typedLit(dTab(j)(cwi)), cellIdx))).as("d2"),
-          lit(cwi).as("c"))
-      }.toSeq: _*)), 1).getField("c")
-    }
-    val coded = staged.select(col("neighbor_id"), col("c"), array(codes: _*).as("pq_codes"))
-    // query side: nprobe probe rows per query; the residual is per probe
-    // CELL, so the ADC distance reconstructs it from the staged raw
-    // subvectors + per-cell literal lookups
-    val queries = cached.filter(queryPred)
-      .withColumn("__probes", rankedCellIds(cents, nprobe))
-      .select(col(idCol).as("query_id") +: explode(col("__probes")).as("c") +:
-        (0 until m).flatMap { j =>
-          val s = slice(col("q"), j * sub + 1, sub)
-          Seq(s.as(s"__qs$j"), normSq(s).as(s"__qn$j"))
-        }: _*)
-    val dist = (0 until m).map { j =>
-      // ‖(q_j − c_j) − cw‖² = (|q_j|² + |c_j|² − 2⟨q_j,c_j⟩)
-      //                      + |cw|² − 2⟨q_j,cw⟩ + 2⟨c_j,cw⟩
-      val code = element_at(col("pq_codes"), j + 1)
-      val cw = element_at(typedLit(cb(j).map(_._1.toSeq).toSeq), code + 1)
-      val cn2 = element_at(typedLit(cb(j).map(_._2).toSeq), code + 1)
-      val dcw = element_at(element_at(typedLit(dTab(j).map(_.toSeq).toSeq), code + 1), cellIdx)
-      val qc = dotq(col(s"__qs$j"), element_at(typedLit(centSubs(j)), cellIdx))
-      val ccn = element_at(typedLit(cc2(j)), cellIdx)
-      col(s"__qn$j") + ccn - lit(2L) * qc +
-        cn2 - lit(2L) * dotq(col(s"__qs$j"), cw) + lit(2L) * dcw
-    }.reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    coded.join(broadcast(queries), Seq("c")).filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), dist.as("adc_dist"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= topK)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("adc_dist"))
+    adcTopK(ivfBlocked(corpus, queryPred, cents, nprobe), idCol,
+      pqCodebooks(corpus, idCol, m, k, Some(cents), Some(n)), topK)
+  }
+
+  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
+    * arXiv:2303.09540): cluster the corpus into IVF Voronoi cells, then mark
+    * as duplicates all but the lowest-id member of every within-cell group
+    * whose pairwise cosine reaches `threshold`. Returns the DROPPED rows:
+    * (id, cell, dup_of = lowest earlier same-cell near-dup, max_cos).
+    *
+    * Scale shape: cell assignment is the same per-row argmin as
+    * [[ivfTopK]] (zero shuffle), and the pair join is an equi-join on cell
+    * id. Cost is Σ|cell|², so `cells` must grow with the corpus to bound
+    * cell size (SemDeDup uses ~10⁵ clusters at billion-scale); cross-cell
+    * near-dups are the standard recall trade — semantically-placed cells
+    * miss fewer of them than random LSH buckets.
+    */
+  def semanticDedup(prepared: DataFrame, idCol: String, cells: Int,
+                    threshold: Double): DataFrame = {
+    val corpus = cacheCorpus(prepared)
+    val cents = sampleCentroids(corpus, idCol, cells)
+    blockPairs(corpus.withColumn("cell", cellOf(cents)), idCol, "cell", _ < _)
+      .filter(col("cos") >= threshold)
+      .groupBy(col("id_b").as(idCol), col("cell"))
+      .agg(min(col("id_a")).as("dup_of"), max(col("cos")).as("max_cos"))
+  }
+
+  /** Mutual k-NN graph within IVF Voronoi cells: an undirected edge
+    * (id_a < id_b, cosine) exists iff each endpoint is in the other's
+    * within-cell top-k — the neighborhood graph that seeds graph-based
+    * dedup clustering and diversity sampling over embedding corpora.
+    *
+    * Scale shape: cell assignment is [[ivfTopK]]'s zero-shuffle per-row
+    * argmin, candidates come from a cell equi-join (cost Σ|cell|², bounded
+    * by growing `cells` with the corpus), directed top-k is one
+    * rank-limited window per endpoint, and the mutual check is a self-join
+    * on the (k·n)-row edge list — every shuffle moves edges, never
+    * vectors × cells. Cross-cell neighbors are the standard IVF recall
+    * trade. The result is localCheckpointed: its consumers (an edge
+    * listing, PageRank over the edges) read it more than once. */
+  def knnGraph(prepared: DataFrame, idCol: String, k: Int, cells: Int): DataFrame =
+    knnGraphLazy(prepared, idCol, k, cells).localCheckpoint(true)
+
+  /** Lazy [[knnGraph]] (no checkpoint) — exposes the full plan for the
+    * plan-shape gates and the plan dumper. */
+  private[graft] def knnGraphLazy(prepared: DataFrame, idCol: String, k: Int, cells: Int): DataFrame = {
+    requirePositive("k" -> k)
+    val corpus = cacheCorpus(prepared)
+    val cents = sampleCentroids(corpus, idCol, cells)
+    val knn = rankLimited(blockPairs(corpus.withColumn("c", cellOf(cents)), idCol, "c", _ =!= _),
+        "id_a", col("cos").desc, "id_b", k)
+      .select(col("id_a"), col("id_b"), col("cos"))
+    // mutual = the reversed edge also survives its endpoint's top-k
+    val rev = knn.select(col("id_b").as("id_a"), col("id_a").as("id_b"))
+    knn.join(rev, Seq("id_a", "id_b"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), col("cos"))
   }
 
   /** Maximal-marginal-relevance re-rank (Carbonell & Goldstein 1998):
@@ -690,40 +657,33 @@ object Embeddings {
     * trades relevance for novelty — the standard diversified-retrieval /
     * diverse-exemplar-selection combiner.
     *
-    * Scale shape: this is the documented BOUNDED RE-RANK exception (the
-    * [[nearDupPairs]] contract) — the corpus pass lives in the candidate
-    * retriever ([[bruteForceTopK]] here; any ANN list works upstream), and
-    * the greedy runs driver-side over the k0-bounded candidate set
-    * (k0 × dim quantized longs — model-scale; k0·topK score updates).
-    * Deterministic and engine-replayable: integer dots, one double
-    * division per cosine, and the same λ-arithmetic the DuckDB oracle's
-    * recursive CTE replays step for step. */
+    * Scale shape: a BOUNDED RE-RANK — the corpus pass lives in the
+    * candidate retriever ([[bruteForceTopK]] here; any ANN list works
+    * upstream), and the greedy runs driver-side over the k0-bounded
+    * candidate set (k0 × dim quantized longs — model-scale; k0·topK score
+    * updates). Deterministic and engine-replayable: integer dots, one
+    * double division per cosine, and the same λ-arithmetic the DuckDB
+    * oracle's recursive CTE replays step for step. */
   def mmrRerank(prepared: DataFrame, idCol: String, queryPred: Column,
                 k0: Int = 50, topK: Int = 10, lambda: Double = 0.5): DataFrame = {
     require(k0 >= topK && topK >= 1, s"need k0 >= topK >= 1: k0=$k0 topK=$topK")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1]: $lambda")
     val spark = prepared.sparkSession
-    // three consumers (retriever query side, retriever corpus side, the
-    // candidate-vector fetch) — cache for ONE corpus pass; everything here
-    // is eagerly collected, so the cache releases before returning and the
-    // result frame carries no lineage on it
-    val cached = prepared.cache()
-    val (rel, vecs) = try {
-      val candRows = bruteForceTopK(cached, idCol, k0, queryPred)
-        .select(col("query_id"), col("neighbor_id"), col("cos")).collect()
-      val qids = candRows.map(_.getLong(0)).distinct
-      require(qids.length == 1, s"mmrRerank re-ranks ONE probe's candidate " +
-        s"list; found ${qids.length} distinct probes among the candidate rows " +
-        "(empty = queryPred matched nothing, or the corpus has no neighbors)")
-      val rel0: Map[Long, Double] =
-        candRows.map(r => r.getLong(1) -> r.getDouble(2)).toMap
-      // candidate vectors: k0 rows of (quantized vector, norm) — model-scale
-      val vecs0: Map[Long, (Array[Long], Long)] = cached
-        .filter(col(idCol).isin(rel0.keys.toSeq: _*))
-        .select(col(idCol), col("q"), col("n2")).collect()
-        .map(r => r.getLong(0) -> (r.getSeq[Long](1).toArray, r.getLong(2))).toMap
-      (rel0, vecs0)
-    } finally cached.unpersist()
+    // two jobs read the corpus (the retriever, the candidate-vector fetch);
+    // both are collected here, so the result frame carries no lineage on it
+    val corpus = cacheCorpus(prepared)
+    val candRows = bruteForceTopK(corpus, idCol, k0, queryPred)
+      .select(col("query_id"), col("neighbor_id"), col("cos")).collect()
+    val qids = candRows.map(_.getLong(0)).distinct
+    require(qids.length == 1, s"mmrRerank re-ranks ONE probe's candidate " +
+      s"list; found ${qids.length} distinct probes among the candidate rows " +
+      "(empty = queryPred matched nothing, or the corpus has no neighbors)")
+    val rel: Map[Long, Double] = candRows.map(r => r.getLong(1) -> r.getDouble(2)).toMap
+    // candidate vectors: k0 rows of (quantized vector, norm) — model-scale
+    val vecs: Map[Long, (Array[Long], Long)] = corpus
+      .filter(col(idCol).isin(rel.keys.toSeq: _*))
+      .select(col(idCol), col("q"), col("n2")).collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Long](1).toArray, r.getLong(2))).toMap
     // cosine is undefined on a zero vector, and NaN scores would break the
     // bit-for-bit oracle replay (Spark's greedy skips NaN where SQL DESC
     // sorts it first) — reject loudly instead of ranking garbage
@@ -782,7 +742,6 @@ object Embeddings {
   def maxSimTopK(docs: DataFrame, idCol: String, textCol: String,
                  queries: Seq[(String, String)], topK: Int,
                  maxDocTokens: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(queries.nonEmpty && topK >= 1, "need at least one query and topK >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -822,110 +781,5 @@ object Embeddings {
         Window.partitionBy(col("qid")).orderBy(col("maxsim").desc, col(idCol).asc)).cast("long"))
       .filter(col("rnk") <= topK)
       .select(col("qid"), col("rnk"), col(idCol), col("maxsim"))
-  }
-
-  /** Corpus → trained-cell assignment (id, cell) — exposed for the
-    * PipelineSpec skew gates (per-cell populations bound candidate
-    * volume). */
-  private[graft] def cellAssignments(prepared: DataFrame, idCol: String,
-                                     cents: Array[(Long, Array[Long], Long)]): DataFrame =
-    prepared.select(col(idCol), element_at(rankedCellIds(cents, 1), 1).as("cell"))
-
-  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    * arXiv:2303.09540): cluster the corpus into IVF Voronoi cells, then mark
-    * as duplicates all but the lowest-id member of every within-cell group
-    * whose pairwise cosine reaches `threshold`. Returns the DROPPED rows:
-    * (id, cell, dup_of = lowest earlier same-cell near-dup, max_cos).
-    *
-    * Scale shape: cell assignment is the same per-row argmin over inlined
-    * centroid literals as [[ivfTopK]] (zero shuffle), and the pair join is
-    * an equi-join on cell id. Cost is Σ|cell|², so `cells` must grow with
-    * the corpus to bound cell size (SemDeDup uses ~10⁵ clusters at
-    * billion-scale); cross-cell near-dups are the standard recall trade —
-    * semantically-placed cells miss fewer of them than random LSH buckets.
-    */
-  def semanticDedup(prepared: DataFrame, idCol: String, cells: Int,
-                    threshold: Double): DataFrame = {
-    val cents = sampleCentroids(prepared, idCol, cells)
-    // both join sides read the assignment — cache, like the LSH/IVF paths
-    val assigned = prepared
-      .withColumn("cell", element_at(rankedCellIds(cents, 1), 1))
-      .cache()
-    val a = assigned.select(col(idCol).as("id_a"), col("cell"), col("q").as("qa"), col("n2").as("na"))
-    val b = assigned.select(col(idCol).as("id_b"), col("cell"), col("q").as("qb"), col("n2").as("nb"))
-    a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
-      .select(col("id_b").as(idCol), col("cell"), col("id_a"),
-        cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .groupBy(col(idCol), col("cell"))
-      .agg(min(col("id_a")).as("dup_of"), max(col("cos")).as("max_cos"))
-  }
-
-  /** Mutual k-NN graph within IVF Voronoi cells: an undirected edge
-    * (id_a < id_b, cosine) exists iff each endpoint is in the other's
-    * within-cell top-k — the neighborhood graph that seeds graph-based
-    * dedup clustering and diversity sampling over embedding corpora.
-    *
-    * Scale shape: cell assignment is the zero-shuffle per-row argmin over
-    * inlined centroid literals ([[ivfTopK]]'s), candidates come from a cell
-    * equi-join (cost Σ|cell|², bounded by growing `cells` with the corpus),
-    * directed top-k is one rank-limited window per endpoint, and the mutual
-    * check is a self-join on the (k·n)-row edge list — every shuffle moves
-    * edges, never vectors × cells. Cross-cell neighbors are the standard
-    * IVF recall trade. */
-  def knnGraph(prepared: DataFrame, idCol: String, k: Int, cells: Int): DataFrame =
-    knnGraphImpl(prepared, idCol, k, cells, eager = true)
-
-  /** Lazy [[knnGraph]] (no cache, no checkpoint) — exposes the full plan for
-    * the plan-shape gates; production callers want the eager variant, which
-    * releases its assignment cache on return. */
-  private[graft] def knnGraphLazy(prepared: DataFrame, idCol: String, k: Int, cells: Int): DataFrame =
-    knnGraphImpl(prepared, idCol, k, cells, eager = false)
-
-  private def knnGraphImpl(prepared: DataFrame, idCol: String, k: Int, cells: Int,
-                           eager: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cents = sampleCentroids(prepared, idCol, cells)
-    // both join sides read the assignment — cache, like the IVF search path
-    val assigned0 = prepared
-      .withColumn("c", element_at(rankedCellIds(cents, 1), 1))
-    val assigned = if (eager) assigned0.cache() else assigned0
-    try {
-      val a = assigned.select(col(idCol).as("id_a"), col("c"), col("q").as("qa"), col("n2").as("na"))
-      val b = assigned.select(col(idCol).as("id_b"), col("c"), col("q").as("qb"), col("n2").as("nb"))
-      val scored = a.join(b, Seq("c")).filter(col("id_a") =!= col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("cos"))
-      val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b").asc)
-      val knn = scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-        .select(col("id_a"), col("id_b"), col("cos"))
-      // mutual = the reversed edge also survives its endpoint's top-k;
-      // eager (localCheckpoint) so the assignment cache can be released here
-      val rev = knn.select(col("id_b").as("id_a"), col("id_a").as("id_b"))
-      val res = knn.join(rev, Seq("id_a", "id_b"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), col("cos"))
-      if (eager) res.localCheckpoint(true) else res
-    } finally if (eager) assigned.unpersist()
-  }
-
-  /** Approximate top-k: exact cosine ranking restricted to the query's LSH
-    * bucket. Equi-join on bucket id replaces the full cross product — the
-    * IVF-style scale path; recall is tunable via `planes`. */
-  def annTopK(prepared: DataFrame, idCol: String, k: Int, planes: Int,
-              queryPred: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // both join sides read the bucketed vectors — cache so the hyperplane
-    // dot aggregation runs once
-    val buckets = lshBucket(prepared, idCol, planes).cache()
-    val q = buckets.filter(queryPred)
-      .select(col(idCol).as("query_id"), col("bucket"), col("q").as("qa"), col("n2").as("na"))
-    val c = buckets.select(col(idCol).as("neighbor_id"), col("bucket"), col("q").as("qb"), col("n2").as("nb"))
-    val scored = q.join(c, Seq("bucket")).filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(dot(col("qa"), col("qb")), col("na"), col("nb")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"), col("cos"))
   }
 }

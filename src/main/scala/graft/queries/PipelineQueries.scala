@@ -60,7 +60,7 @@ object PipelineQueries {
   private val pairsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
 
-  private def nearDupPairs(s: SparkSession, d: String): DataFrame = {
+  private def minhashPairs(s: SparkSession, d: String): DataFrame = {
     val cur = pairsCache.get(d)
     if (cur != null && cur._1.sparkContext.isStopped) pairsCache.remove(d, cur)
     if (cur != null && (cur._1 eq s) && !s.sparkContext.isStopped) cur._2
@@ -86,7 +86,7 @@ object PipelineQueries {
     if (cur != null && cur._1.sparkContext.isStopped) clustersCache.remove(d, cur)
     if (cur != null && (cur._1 eq s) && !s.sparkContext.isStopped) cur._2
     else {
-      val c = Dedup.dupClusters(nearDupPairs(s, d))
+      val c = Dedup.dupClusters(minhashPairs(s, d))
       clustersCache.put(d, (s, c)); c
     }
   }
@@ -196,9 +196,9 @@ object PipelineQueries {
     // MinHash → LSH band bucketing → exact Jaccard verify (3-gram shingles,
     // 16 hashes, 4 bands): the classic near-dup pipeline end to end. The
     // pair frame is the STANDING state shared with q47/q82 (see
-    // nearDupPairs): first run builds, steady state reads the checkpoint.
+    // minhashPairs): first run builds, steady state reads the checkpoint.
     "q24_minhash_dedup" -> ((s, d) =>
-      nearDupPairs(s, d).orderBy("id_a", "id_b")),
+      minhashPairs(s, d).orderBy("id_a", "id_b")),
 
     // SimHash near-dups via pigeonhole nibble blocking.
     "q25_simhash" -> ((s, d) =>
@@ -217,9 +217,7 @@ object PipelineQueries {
         .orderBy("query_id", "rnk")),
 
     // Embedding near-duplicate pairs (cosine ≥ 0.35) over sign-LSH
-    // candidates (6 hyperplanes): bucket equi-join + exact cosine verify —
-    // the scale path; the brute all-pairs form stays available as
-    // Embeddings.nearDupPairs for bounded re-rank sets.
+    // candidates (6 hyperplanes): bucket equi-join + exact cosine verify.
     "q27_embedding_neardup" -> ((s, d) =>
       Embeddings.nearDupPairsLSH(
         Embeddings.prepare(Tables.embeddings(s, d), "vec_id", "embedding"),
@@ -432,7 +430,7 @@ object PipelineQueries {
     // Near-dup PAIRS → duplicate CLUSTERS: connected components via
     // iterative min-label propagation over the minhash pair graph, so
     // chains of pairwise matches collapse to one keep-group each.
-    // Pair input comes from the SHARED standing pair frame (nearDupPairs):
+    // Pair input comes from the SHARED standing pair frame (minhashPairs):
     // steady-state timing measures the clustering loop itself.
     "q47_dup_clusters" -> ((s, d) =>
       dupClusterFrame(s, d)
@@ -744,10 +742,10 @@ object PipelineQueries {
     // Cross-source duplicate leakage: the near-dup pair mass by unordered
     // source pair — diagonal = within-source redundancy, off-diagonal =
     // duplication leaking across sources. Consumes the SHARED standing pair
-    // frame (nearDupPairs): incremental cost is the rollup only, never a
+    // frame (minhashPairs): incremental cost is the rollup only, never a
     // re-run of the whole q24 pipeline.
     "q82_cross_source_dups" -> ((s, d) =>
-      Dedup.crossSourceLeakageFromPairs(nearDupPairs(s, d),
+      Dedup.crossSourceLeakageFromPairs(minhashPairs(s, d),
         Tables.documents(s, d), "doc_id", "source")
         .orderBy("src_lo", "src_hi")),
 
@@ -889,7 +887,7 @@ object PipelineQueries {
     // gate covers the canonicalization rules themselves.
     "q96_url_canonical" -> ((s, d) => {
       val dom = urlDomains(s, d)
-      val pairs = nearDupPairs(s, d)
+      val pairs = minhashPairs(s, d)
       val ends = pairs.select(col("id_a").as("doc_id"))
         .unionAll(pairs.select(col("id_b").as("doc_id")))
       // dup mass folds in as per-doc endpoint counts so `dom` is consumed
@@ -1369,7 +1367,8 @@ object PipelineQueries {
   /** Shared IVF chain: quantize → norms → deterministic sampled centroids
     * (8 cells) → per-vector nearest-cell assignment, ending in `cell`
     * (vec_id, q, n2, c) — the oracle analogue of
-    * [[graft.pipeline.Embeddings.sampleCentroids]] + `rankedCellsExpr`.
+    * [[graft.pipeline.Embeddings.sampleCentroids]] + the NearestCells
+    * assignment, ties to the lowest cell id.
     * Used by q36 (IVF search) and q54 (semantic dedup). */
   private lazy val ivfCellCtes =
     """params AS (SELECT greatest(count(*) // 8, 1) AS m FROM embeddings),

@@ -119,4 +119,11 @@ object GraftShim {
       d.sparkSession.sharedState.cacheManager.lookupCachedData(d).isDefined
     case _ => false
   }
+
+  /** How many plans the session's CacheManager holds — the bound an
+    * operator-level cache registry keeps. */
+  def cachedEntries(spark: SparkSession): Int = spark match {
+    case s: org.apache.spark.sql.classic.SparkSession => s.sharedState.cacheManager.numCachedEntries
+    case _ => 0
+  }
 }

@@ -1444,6 +1444,35 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("ANN parameters fail fast, naming the parameter and value, from Scala and SQL") {
+    import graft.pipeline.Embeddings
+    import org.apache.spark.sql.functions.col
+    val sfDir = "/root/testdata/sf0.001"
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir not present")
+    Tables.embeddings(spark, sfDir).createOrReplaceTempView("embeddings_v")
+    def prep = Embeddings.prepare(Tables.embeddings(spark, sfDir), "vec_id", "embedding")
+    def rejects(expected: String)(call: => Any): Unit = {
+      val e = intercept[Exception](call)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(expected)), s"'$expected' not in: ${msgs.mkString(" | ")}")
+    }
+    val q = col("vec_id") < 10
+    rejects("cells=0")(Embeddings.ivfTopK(prep, "vec_id", 3, cells = 0, q))
+    rejects("k=0")(Embeddings.pqEncode(prep, "vec_id", m = 8, k = 0))
+    rejects("m=0")(Embeddings.pqTopK(prep, "vec_id", 3, q, m = 0))
+    rejects("planes=0")(Embeddings.annTopK(prep, "vec_id", 3, planes = 0, q))
+    rejects("planes=64")(Embeddings.nearDupPairsLSH(prep, "vec_id", 0.5, planes = 64))
+    rejects("nprobe=0")(Embeddings.pqTopKIVF(prep, "vec_id", 3, q, cells = 4, nprobe = 0))
+    rejects("k=-1")(Embeddings.bruteForceTopK(prep, "vec_id", -1, q))
+    rejects("topK=0")(Embeddings.pqTopKIVFTrained(prep, "vec_id", 0, q))
+    rejects("nprobe=0")(spark.sql("SELECT * FROM ann_ivf('embeddings_v', 'vec_id', " +
+      "'embedding', 3, 4, 0, 'vec_id < 10')").collect())
+    rejects("k=0")(spark.sql("SELECT * FROM pq_topk('embeddings_v', 'vec_id', " +
+      "'embedding', 3, 'vec_id < 10', 8, 0)").collect())
+    spark.catalog.clearCache()
+  }
+
   test("time-series TVFs are SQL-reachable and parity-equal to the Scala API") {
     import graft.pipeline.TimeSeries
     import org.apache.spark.sql.functions.{col, expr}

@@ -593,40 +593,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(double == Set(0L, 1L, 3L, 4L, 5L)) // all other vectors reachable at nprobe=2
   }
 
-  test("NearestCells path (cells above inline threshold) matches the literal path exactly") {
+  test("ANN argmin is one NearestCells projection: constant plan size") {
     import spark.implicits._
-    // 12 vectors across 3 loose clusters; cells = 3 so both paths rank
-    // multiple centroids, including (d², id) ties via duplicate vectors
-    val vecs = Seq(
-      (0L, Array(1.0f, 0.0f, 0.1f)), (1L, Array(0.9f, 0.1f, 0.0f)), (2L, Array(1.0f, 0.0f, 0.1f)),
-      (3L, Array(0.0f, 1.0f, 0.1f)), (4L, Array(0.1f, 0.9f, 0.0f)), (5L, Array(0.0f, 1.0f, 0.1f)),
-      (6L, Array(0.1f, 0.0f, 1.0f)), (7L, Array(0.0f, 0.1f, 0.9f)), (8L, Array(0.1f, 0.0f, 1.0f)),
-      (9L, Array(0.6f, 0.6f, 0.0f)), (10L, Array(0.0f, 0.6f, 0.6f)), (11L, Array(0.6f, 0.0f, 0.6f)))
-      .toDF("vec_id", "embedding")
-    val prepared = Embeddings.prepare(vecs, "vec_id", "embedding")
-    val prop = "graft.ivf.inline.cells.max"
-    def allFour(): (Seq[Row], Seq[Row], Seq[Row], Seq[(Long, Seq[Long], Long)]) = (
-      Embeddings.ivfTopKProbed(prepared, "vec_id", k = 4, cells = 3,
-        col("vec_id") === 9, nprobe = 2).orderBy("query_id", "rnk").collect().toSeq,
-      Embeddings.semanticDedup(prepared, "vec_id", cells = 3, threshold = 0.98)
-        .orderBy("vec_id").collect().toSeq,
-      Embeddings.knnGraph(prepared, "vec_id", k = 2, cells = 3)
-        .orderBy("id_a", "id_b").collect().toSeq,
-      Embeddings.trainCentroids(prepared, "vec_id", cells = 3, iters = 2)
-        .toSeq.map(t => (t._1, t._2.toSeq, t._3)))
-    val literal = allFour() // default threshold 64 → literal struct-sort path
-    sys.props(prop) = "0"   // force every call through the NearestCells node
-    try {
-      val native = allFour()
-      assert(native == literal, "NearestCells path diverged from literal path")
-      // the assignment is a pure projection in both paths: no window, no join
-      val assignedPlan = prepared
-        .withColumn("c", element_at(graft.spark.expressions.NearestCells.nearestCellIds(
-          col("q"), col("n2"), Embeddings.sampleCentroids(prepared, "vec_id", 3), 1), 1))
-        .queryExecution.executedPlan.toString
-      assert(!assignedPlan.contains("Window") && !assignedPlan.contains("Join"),
-        s"cell assignment must stay a per-row projection:\n$assignedPlan")
-    } finally sys.props.remove(prop)
+    val prepared = Embeddings.prepare((0L until 64L).map(id =>
+        id -> (0 until 8).map(j => (((id * 7 + j * 3) % 11) - 5).toFloat * 1e-6f))
+      .toDF("vec_id", "embedding"), "vec_id", "embedding")
+    // the assignment is a pure projection: no window, no join
+    val assignedPlan = Embeddings.cellAssignments(prepared, "vec_id",
+      Embeddings.sampleCentroids(prepared, "vec_id", 3)).queryExecution.executedPlan.toString
+    assert(!assignedPlan.contains("Window") && !assignedPlan.contains("Join"),
+      s"cell assignment must stay a per-row projection:\n$assignedPlan")
+    // cells and codewords ride inside the kernel node, never the plan: the
+    // same number of nodes at 4 and at 32, and no per-centroid struct sort
+    def plans(f: Int => org.apache.spark.sql.DataFrame): Seq[String] =
+      Seq(4, 32).map(f(_).queryExecution.executedPlan.toString)
+    def kernels(plan: String): Int = "nearest_cells".r.findAllMatchIn(plan).size
+    val ivf = plans(c => Embeddings.ivfTopK(prepared, "vec_id", k = 3, cells = c, col("vec_id") < 4))
+    val pq = plans(k => Embeddings.pqEncode(prepared, "vec_id", m = 2, k = k))
+    (ivf ++ pq).foreach(p => assert(!p.contains("array_sort"), p))
+    Seq(ivf, pq).foreach { case Seq(at4, at32) =>
+      assert(kernels(at4) > 0 && kernels(at4) == kernels(at32), s"$at4\n$at32")
+    }
   }
 
   test("centroid matrices above the inline bound route through a Broadcast, bit-identically") {
@@ -1920,6 +1907,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!org.apache.spark.sql.GraftShim.planIsCached(b))
     val b2 = Embeddings.cacheCorpus(mk(9))
     assert(org.apache.spark.sql.GraftShim.planIsCached(b2))
+    // every ANN operator on corpus A, then on corpus B: the registry's one
+    // corpus is the only cache entry left behind
+    spark.catalog.clearCache()
+    Seq(mk(8), mk(9)).foreach { p =>
+      val pred = col("vec_id") < 2
+      Seq(Embeddings.bruteForceTopK(p, "vec_id", 2, pred),
+        Embeddings.annTopK(p, "vec_id", 2, planes = 2, pred),
+        Embeddings.nearDupPairsLSH(p, "vec_id", 0.5, planes = 2),
+        Embeddings.ivfTopKProbed(p, "vec_id", 2, cells = 2, pred, nprobe = 2),
+        Embeddings.ivfTopKTrained(p, "vec_id", 2, cells = 2, pred, nprobe = 1),
+        Embeddings.pqEncode(p, "vec_id", m = 2, k = 2),
+        Embeddings.pqTopK(p, "vec_id", 2, pred, m = 2, k = 2),
+        Embeddings.pqTopKIVF(p, "vec_id", 2, pred, cells = 2, nprobe = 1, m = 2, k = 2),
+        Embeddings.pqTopKIVFTrained(p, "vec_id", 2, pred, cells = 2, nprobe = 1, m = 2, k = 2),
+        Embeddings.semanticDedup(p, "vec_id", cells = 2, threshold = 0.5),
+        Embeddings.knnGraph(p, "vec_id", k = 2, cells = 2),
+        Embeddings.mmrRerank(p, "vec_id", col("vec_id") === 1, k0 = 3, topK = 2)
+      ).foreach(_.collect())
+    }
+    assert(org.apache.spark.sql.GraftShim.cachedEntries(spark) <= 1,
+      s"ANN operators leaked ${org.apache.spark.sql.GraftShim.cachedEntries(spark)} cache entries")
     spark.catalog.clearCache()
   }
 
