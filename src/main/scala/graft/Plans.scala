@@ -13,17 +13,22 @@ import org.apache.spark.sql.SparkSession
   */
 object Plans {
   /** Queries whose declared form `localCheckpoint`s (truncating the
-    * interesting plan to a `Scan ExistingRDD`): dump the LAZY inner plan
-    * under `<query>__inner_<suffix>.txt` as well. */
+    * interesting plan to a `Scan ExistingRDD`): dump the LAZY inner plan —
+    * the operator's plan builder called with an `identity` pin — under
+    * `<query>__inner_<suffix>.txt` as well. */
   private def innerPlans(sfDir: String)
       : Map[String, SparkSession => org.apache.spark.sql.DataFrame] = Map(
-    "q86_fuzzy_join" -> (s => graft.pipeline.FuzzyJoin.editDistanceJoinLazy(
+    "q86_fuzzy_join" -> (s => graft.pipeline.FuzzyJoin.editDistanceJoinPlan(identity)(
       Tables.customer(s, sfDir).filter(org.apache.spark.sql.functions.col("c_custkey") % 3 === 0),
       "c_custkey", "c_name", maxDist = 2)),
-    "q77_jaccard_join" -> (s => graft.pipeline.Dedup.jaccardJoinExactLazy(
-      Tables.documents(s, sfDir), "doc_id", "text", 3, 1, 2)),
-    "q78_containment" -> (s => graft.pipeline.Dedup.containmentJoinLazy(
-      Tables.documents(s, sfDir), "doc_id", "text", 3, 10, 1, 5)),
+    "q77_jaccard_join" -> (s => graft.pipeline.Dedup.jaccardJoinPlan(identity)(
+      graft.pipeline.Dedup.docShingleArrays(Tables.documents(s, sfDir), "doc_id", "text", 3),
+      "doc_id", 1, 2)),
+    "q78_containment" -> (s => graft.pipeline.Dedup.containmentJoinPlan(
+      graft.pipeline.Dedup.docShingleArrays(Tables.documents(s, sfDir), "doc_id", "text", 3),
+      "doc_id", 10, 1, 5)),
+    "q24_minhash_dedup" -> (s => graft.pipeline.Dedup.minhashNearDups(
+      Tables.documents(s, sfDir), "doc_id", "text", 3, 16, 4, 0.5)),
     "q73_knn_graph" -> (s => graft.pipeline.Embeddings.knnGraphLazy(
       graft.pipeline.Embeddings.prepare(Tables.embeddings(s, sfDir), "vec_id", "embedding"),
       "vec_id", k = 3, cells = 8))

@@ -37,6 +37,7 @@ object Dedup {
     // the single hottest stage of the minhash pipeline.) get() is 0-based and
     // null past the end; concat_ws skips nulls, which reproduces slice()'s
     // shorter-tail-window semantics exactly.
+    require(n >= 1, s"shingleSize must be >= 1, got shingleSize=$n")
     val w = TextOps.tokens(col(textCol))
     df.select(col(idCol), w.as("_w"))
       .select(col(idCol), col("_w"),
@@ -87,6 +88,7 @@ object Dedup {
     * constants ([[permA]]/[[permB]]) — decorrelated, deterministic, and
     * mirrored literal-for-literal by the oracle. */
   def minhashSignatures(sh: DataFrame, idCol: String, numHashes: Int): DataFrame = {
+    require(numHashes >= 1, s"numHashes must be >= 1, got numHashes=$numHashes")
     val p = MinhashPrime
     val withH = sh.select(col(idCol),
       (expr("cast(conv(substr(md5(cast(sh as binary)), 1, 15), 16, 10) as bigint)") % p).as("h0"))
@@ -97,8 +99,11 @@ object Dedup {
 
   /** LSH banding: group `rows` consecutive minhashes per band, hash the band
     * to a signature; documents sharing any (band, signature) are candidate
-    * near-duplicates. */
+    * near-duplicates. `bands` must divide `numHashes` (a remainder drops
+    * hashes; `bands > numHashes` puts every document in one bucket). */
   def lshBands(sigs: DataFrame, idCol: String, numHashes: Int, bands: Int): DataFrame = {
+    require(bands >= 1 && bands <= numHashes && numHashes % bands == 0,
+      s"bands must divide numHashes=$numHashes, got bands=$bands")
     val rows = numHashes / bands
     val stackArgs: Seq[Column] = (0 until bands).flatMap { b =>
       val sig = md5(concat_ws("|",
@@ -119,39 +124,42 @@ object Dedup {
       .select(col("id_a"), col("id_b")).distinct()
   }
 
-  /** Exact n-gram Jaccard for given candidate pairs: per-doc shingle-SET
-    * arrays joined onto each candidate, |A∩B| via one codegen'd
-    * array_intersect, |A∪B| = |A|+|B|−|A∩B|. Runs only over LSH
-    * survivors — the verify stage of the classic pipeline. The array
-    * shape (vs expanding each candidate by all of A's shingles through
-    * two shuffles and a re-aggregate — the pre-r12 plan) keeps the verify
-    * at two AQE-broadcastable equi-joins plus O(|A|+|B|) per pair; a
-    * candidate with no shared shingle (LSH false positive) gets
-    * jaccard 0 from the empty intersection, same as the old left-join
-    * coalesce. Input multiplicity is ignored (collect_set builds the
-    * SETS), so callers can feed the raw shingle stream without paying a
-    * corpus-wide distinct shuffle first. */
-  def jaccardVerify(sh: DataFrame, candidates: DataFrame, idCol: String): DataFrame =
-    jaccardVerifyArr(sh.groupBy(col(idCol)).agg(collect_set(col("sh")).as("__arr")),
-      candidates, idCol)
+  /** Per-doc shingle-SET arrays (`idCol, __arr`) from a shingle stream
+    * (`idCol, sh`), duplicates allowed: the one set aggregate. */
+  private def setArrays(sh: DataFrame, idCol: String): DataFrame =
+    sh.groupBy(col(idCol)).agg(collect_set(col("sh")).as("__arr"))
 
-  /** [[jaccardVerify]] over PRE-AGGREGATED per-doc shingle-set arrays
-    * (`idCol, __arr`) — the seam that lets a caller holding a cached
-    * doc-array frame (q77/q78's standing shape) verify without a second
-    * corpus-scale collect_set aggregate. */
-  def jaccardVerifyArr(docArr: DataFrame, candidates: DataFrame, idCol: String): DataFrame =
-    candidates
-      .join(docArr.select(col(idCol).as("id_a"), col("__arr").as("__ca")), "id_a")
-      .join(docArr.select(col(idCol).as("id_b"), col("__arr").as("__cb")), "id_b")
-      // intersection STAGED under an alias (the repetitionStats HOF-staging
-      // rule): inlined, the two references (numerator + union denominator)
-      // each build the per-row hash set — the verify kernel's whole cost —
-      // twice per candidate pair
+  /** The one overlap verify: candidates (`id_a, id_b`) joined to a left and
+    * a right per-doc set frame (`idCol, __arr`), giving `id_a, id_b, inter,
+    * na, nb` as longs (|A∩B|, |A|, |B|) — two AQE-broadcastable equi-joins
+    * plus one codegen'd array_intersect per pair. `inter` is STAGED (the
+    * repetitionStats HOF-staging rule): inlined, each reference would
+    * rebuild the per-row hash set, the verify's whole cost. */
+  private def overlap(cand: DataFrame, left: DataFrame, right: DataFrame,
+                      idCol: String): DataFrame =
+    cand
+      .join(left.select(col(idCol).as("id_a"), col("__arr").as("__ca")), "id_a")
+      .join(right.select(col(idCol).as("id_b"), col("__arr").as("__cb")), "id_b")
       .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("__ca"), col("__cb"))).cast("double").as("__i"),
-        (size(col("__ca")) + size(col("__cb"))).cast("double").as("__t"))
-      .select(col("id_a"), col("id_b"),
-        (col("__i") / (col("__t") - col("__i"))).as("jaccard"))
+        size(array_intersect(col("__ca"), col("__cb"))).cast("long").as("inter"),
+        size(col("__ca")).cast("long").as("na"),
+        size(col("__cb")).cast("long").as("nb"))
+
+  /** `id_a, id_b, jaccard` from [[overlap]]'s counts:
+    * |A∩B| / (|A|+|B|−|A∩B|). The integer difference is exact in a double. */
+  private def jaccardOf(ov: DataFrame): DataFrame =
+    ov.select(col("id_a"), col("id_b"),
+      (col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")).cast("double")).as("jaccard"))
+
+  /** Exact n-gram Jaccard for given candidate pairs over a shingle stream
+    * (`idCol, sh`): [[overlap]] against its per-doc sets. Runs only over
+    * LSH survivors — the verify stage of the classic pipeline; an LSH
+    * false positive with no shared shingle gets jaccard 0. */
+  def jaccardVerify(sh: DataFrame, candidates: DataFrame, idCol: String): DataFrame = {
+    val sets = setArrays(sh, idCol)
+    jaccardOf(overlap(candidates, sets, sets, idCol))
+  }
 
   /** Paragraph-granularity near-dup: split each page into paragraphs on
     * blank lines, run the standing MinHash band pipeline PER PARAGRAPH,
@@ -220,6 +228,7 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5): DataFrame = {
+    requireThreshold(threshold)
     // signatures are duplicate-insensitive (min over a multiset == min over
     // its set), so they read the RAW shingle stream — no distinct shuffle on
     // the full corpus. Band rows and candidates are cached: each feeds two
@@ -253,6 +262,9 @@ object Dedup {
       idCol, textCol, shingleSize)
     jaccardVerify(shSets, cand, idCol).filter(col("jaccard") >= threshold)
   }
+
+  private def requireThreshold(t: Double): Unit =
+    require(t > 0 && t <= 1, s"threshold must be in (0, 1], got threshold=$t")
 
   /** Cross-source duplicate leakage: [[minhashNearDups]] pairs rolled up
     * by UNORDERED source pair — the governance view that shows where
@@ -367,22 +379,23 @@ object Dedup {
     * pays the batch's signature chain plus survivor verification only. The
     * batch's signature chain runs with the INDEX's pinned parameters.
     *
-    * EAGER: the result is materialized (localCheckpoint) before returning so
-    * the two internal caches (candidate pairs, survivor shingle sets) can be
-    * released — a standing pipeline calling this per micro-batch must not
-    * accumulate one cache entry pair per batch forever. */
+    * EAGER: the result is checkpointed through [[CallCache]] so the
+    * candidate-pair cache is released before returning — a standing
+    * pipeline calling this per micro-batch must not accumulate one cache
+    * entry per batch forever. */
   def probeNearDupsIndexed(newDf: DataFrame, index: NearDupIndex,
                            idCol: String, textCol: String,
                            threshold: Double = 0.5): DataFrame = {
+    requireThreshold(threshold)
     val par = newDf.sparkSession.sessionState.conf.numShufflePartitions
     val (shingleSize, numHashes, bands) =
       (index.shingleSize, index.numHashes, index.numBands)
     val nb = bandChain(newDf, idCol, textCol, shingleSize, numHashes, bands)
-    val cand = nb.select(col("band"), col("sig"), col(idCol).as("id_a"))
-      .join(index.bands.select(col("band"), col("sig"), col(idCol).as("id_b")),
-        Seq("band", "sig"))
-      .select(col("id_a"), col("id_b")).distinct().cache()
-    try {
+    CallCache { pin =>
+      val cand = pin(nb.select(col("band"), col("sig"), col(idCol).as("id_a"))
+        .join(index.bands.select(col("band"), col("sig"), col(idCol).as("id_b")),
+          Seq("band", "sig"))
+        .select(col("id_a"), col("id_b")).distinct())
       // verify shingles: the batch side re-shingles its survivors (semi-join
       // first — the semi-join cannot push through the shingle explode); the
       // corpus side reads the INDEX, restricted to surviving ids.
@@ -401,22 +414,10 @@ object Dedup {
       // could not deduplicate across the union (measured in the q51 stage
       // decomposition: the whole union, index scan included, ran twice per
       // probe). Now each subtree executes exactly once, unioned nowhere.
-      val aggNew = newSh.groupBy(col(idCol))
-        .agg(collect_set(col("sh")).as("__arr"))
-        .select(col(idCol).as("id_a"), col("__arr").as("__ca"))
-      val aggCor = corpusSh.groupBy(col(idCol))
-        .agg(collect_set(col("sh")).as("__arr"))
-        .select(col(idCol).as("id_b"), col("__arr").as("__cb"))
-      cand.join(aggNew, "id_a").join(aggCor, "id_b")
-        .select(col("id_a"), col("id_b"),
-          size(array_intersect(col("__ca"), col("__cb"))).cast("double").as("__i"),
-          (size(col("__ca")) + size(col("__cb"))).cast("double").as("__t"))
-        .select(col("id_a"), col("id_b"),
-          (col("__i") / (col("__t") - col("__i"))).as("jaccard"))
+      jaccardOf(overlap(cand, setArrays(newSh, idCol), setArrays(corpusSh, idCol), idCol))
         .filter(col("jaccard") >= threshold)
         .select(col("id_a").as("id_new"), col("id_b").as("dup_of"), col("jaccard"))
-        .localCheckpoint(true)
-    } finally cand.unpersist()
+    }
   }
 
   /** Groups near-duplicate PAIRS into duplicate CLUSTERS (connected
@@ -625,10 +626,15 @@ object Dedup {
     * `numSegments` signature segments of `segmentBits` bits each (hamming ≤
     * numSegments−1 ⇒ at least one segment matches exactly — an equi-join,
     * never a cross product). Defaults block a 16-bit signature on nibbles;
-    * use (4, 16) for [[simhash64]] signatures. */
+    * use (4, 16) for [[simhash64]] signatures. Segments must fit 64 bits. */
   def simhashNearDups(sigs: DataFrame, idCol: String, maxHamming: Int,
                       numSegments: Int = 4, segmentBits: Int = 4): DataFrame = {
-    require(maxHamming < numSegments, "pigeonhole needs maxHamming < numSegments")
+    require(maxHamming >= 0 && maxHamming < numSegments, "pigeonhole needs 0 <= maxHamming < " +
+      s"numSegments, got maxHamming=$maxHamming numSegments=$numSegments")
+    require(segmentBits >= 1 && segmentBits <= 63,
+      s"segmentBits must be in [1, 63], got segmentBits=$segmentBits")
+    require(numSegments.toLong * segmentBits <= 64,
+      s"numSegments * segmentBits must be <= 64, got numSegments=$numSegments segmentBits=$segmentBits")
     val mask = (1L << segmentBits) - 1
     // both sides of the self-join read seg: cache it (numSegments small rows
     // per doc) so the signature aggregation runs once
@@ -664,24 +670,18 @@ object Dedup {
     * ones. ⌈t·n⌉ is computed as (tNum·n + tDen − 1) DIV tDen — exact integer
     * arithmetic, bit-identical on any engine.
     *
-    * 100 TB shape: shingle sets are cached (they feed the per-doc counts,
-    * the document-frequency aggregate, the prefix ranking, and the verify
-    * stage); shuffles are keyed on doc id (window) and shingle (df + join) —
-    * both near-uniform; verification reuses [[jaccardVerify]] over
-    * candidates only. The worst case (a corpus-wide hot shingle in many
-    * prefixes) is bounded by the df-asc ordering: a token lands in prefixes
-    * only when a document has few rarer alternatives.
+    * 100 TB shape: shingle sets are pinned (they feed the document-
+    * frequency aggregate, the prefix ranking, and the verify stage);
+    * shuffles are keyed on doc id (window) and shingle (df + join) — both
+    * near-uniform; [[overlap]] verifies candidates only. The worst case (a
+    * corpus-wide hot shingle in many prefixes) is bounded by the df-asc
+    * ordering: a token lands in prefixes only when a document has few
+    * rarer alternatives.
     */
   def jaccardJoinExact(df: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 3, tNum: Long = 1, tDen: Long = 2): DataFrame =
-    jaccardJoinImpl(df, idCol, textCol, shingleSize, tNum, tDen, eager = true)
-
-  /** Lazy [[jaccardJoinExact]] (no cache, no checkpoint) — exposes the full
-    * logical plan for the plan-shape gates; production callers want the
-    * eager variant, which releases its caches on return. */
-  private[graft] def jaccardJoinExactLazy(df: DataFrame, idCol: String, textCol: String,
-                                          shingleSize: Int = 3, tNum: Long = 1, tDen: Long = 2): DataFrame =
-    jaccardJoinImpl(df, idCol, textCol, shingleSize, tNum, tDen, eager = false)
+    CallCache(pin => jaccardJoinPlan(pin)(
+      pin(docShingleArrays(df, idCol, textCol, shingleSize)), idCol, tNum, tDen))
 
   /** Canonical per-doc shingle-SET arrays (`idCol, __arr`) — the single
     * corpus-scale aggregate behind [[jaccardJoinExact]] and
@@ -689,90 +689,75 @@ object Dedup {
     * replaced was the suite's largest transient memory consumer — the r12
     * driver-record outliers traced to exactly that footprint under box
     * contention). A caller running BOTH joins over the same corpus should
-    * build this once, persist it, and use the `OnArrays` variants — the
+    * build this once, persist it, and use the `OnArrays` entries — the
     * q77/q78 standing-state shape. */
   def docShingleArrays(df: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int): DataFrame = {
     val par = df.sparkSession.sessionState.conf.numShufflePartitions
-    shinglesRaw(df.repartition(par, col(idCol)), idCol, textCol, shingleSize)
-      .groupBy(col(idCol)).agg(collect_set(col("sh")).as("__arr"))
+    setArrays(shinglesRaw(df.repartition(par, col(idCol)), idCol, textCol, shingleSize), idCol)
   }
 
   /** [[jaccardJoinExact]] over a PRE-BUILT (and caller-persisted)
     * [[docShingleArrays]] frame: skips the corpus-scale collect_set
-    * aggregate entirely. The frame is not cached or unpersisted here —
+    * aggregate entirely. The frame is not pinned or unpersisted here —
     * its lifetime belongs to the caller. */
   def jaccardJoinExactOnArrays(docArr: DataFrame, idCol: String,
                                tNum: Long = 1, tDen: Long = 2): DataFrame =
-    jaccardJoinArrImpl(docArr, idCol, tNum, tDen, eager = true, ownArr = false)
+    CallCache(jaccardJoinPlan(_)(docArr, idCol, tNum, tDen))
 
-  private def jaccardJoinImpl(df: DataFrame, idCol: String, textCol: String,
-                              shingleSize: Int, tNum: Long, tDen: Long,
-                              eager: Boolean): DataFrame =
-    jaccardJoinArrImpl(docShingleArrays(df, idCol, textCol, shingleSize),
-      idCol, tNum, tDen, eager, ownArr = eager)
-
-  private def jaccardJoinArrImpl(docArr0: DataFrame, idCol: String,
-                                 tNum: Long, tDen: Long,
-                                 eager: Boolean, ownArr: Boolean): DataFrame = {
+  /** The [[jaccardJoinExact]] plan over per-doc set arrays; `pin` marks the
+    * prefix frame, which the candidate self-join reads twice. Called with
+    * `identity`, it is the whole lazy plan. */
+  private[graft] def jaccardJoinPlan(pin: CallCache.Pin)(
+      docArr: DataFrame, idCol: String, tNum: Long, tDen: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(tNum > 0 && tNum <= tDen, s"threshold $tNum/$tDen must be in (0, 1]")
-    // the doc-array frame is cached only when this call OWNS it (built it
-    // from raw text); a standing frame passed in via OnArrays is the
-    // caller's to persist and release
-    val docArr = if (ownArr) docArr0.cache() else docArr0
-    var cached: List[DataFrame] = if (ownArr) List(docArr) else Nil
-    try {
-      val sh = docArr.select(col(idCol), explode(col("__arr")).as("sh"))
-      val dfreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      // rank and set size come out of ONE partition-by-doc exchange: the
-      // count runs as an unordered frame over the same partitioning, so no
-      // separate counts aggregate + join-back is needed
-      val w = Window.partitionBy(col(idCol)).orderBy(col("df").asc, col("sh").asc)
-      // cached: the candidate self-join consumes the prefix twice, and
-      // exchange reuse does not deduplicate the aliased branches — without
-      // the cache each side re-runs the df-aggregate, its join, and the
-      // ranking window
-      val prefix0 = sh.join(dfreq, "sh")
-        .select(col(idCol), col("sh"), row_number().over(w).as("rn"),
-          count(lit(1)).over(Window.partitionBy(col(idCol))).as("n_sh"))
-        .filter(col("rn") <=
-          col("n_sh") - expr(s"CAST((n_sh * $tNum + ${tDen - 1}) DIV $tDen AS BIGINT)") + 1)
-        .select(col(idCol), col("sh"), col("rn"), col("n_sh"))
-      val prefix = if (eager) { cached ::= prefix0.cache(); prefix0 } else prefix0
-      // PPJoin length filter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so a pair
-      // can reach t = tNum/tDen only when na·tNum ≤ nb·tDen in BOTH
-      // directions — size-incompatible candidates are dropped before the
-      // distinct and the 3-join verify ever see them.
-      //
-      // PPJoin POSITIONAL filter on top: a match at ordered positions
-      // (i, j) bounds the overlap by min(na−i, nb−j)+1 (every further
-      // shared token sits strictly after the match in BOTH ordered sets),
-      // and J ≥ t needs overlap·(tNum+tDen) ≥ (na+nb)·tNum. The first
-      // (globally smallest) shared token of a qualifying pair — the one
-      // AllPairs guarantees inside both prefixes — always satisfies the
-      // bound, so dropping failing INSTANCES loses no pair; it only stops
-      // late-prefix coincidences from reaching the distinct and the
-      // 3-join verify. Both filters are exact integer cross-multiplication.
-      val cand = prefix.select(col("sh"), col(idCol).as("id_a"),
-          col("rn").as("ra"), col("n_sh").as("na"))
-        .join(prefix.select(col("sh"), col(idCol).as("id_b"),
-          col("rn").as("rb"), col("n_sh").as("nb")), "sh")
-        .filter(col("id_a") < col("id_b") &&
-          col("na") * tNum <= col("nb") * tDen && col("nb") * tNum <= col("na") * tDen &&
-          (least(col("na") - col("ra"), col("nb") - col("rb")) + 1) * (tNum + tDen) >=
-            (col("na") + col("nb")) * tNum)
-        .select(col("id_a"), col("id_b")).distinct()
-      // eager (localCheckpoint) so the doc-array cache can be released here
-      // instead of accumulating across calls in a long-lived session.
-      // (A survivor-restricted verify — minhashNearDups' broadcast
-      // semi-join — was measured SLOWER here: prefix-filter candidates
-      // cover most of the corpus, so the restriction saves no shuffle and
-      // adds a distinct + broadcast.)
-      val res = jaccardVerifyArr(docArr, cand, idCol)
-        .filter(col("jaccard") >= lit(tNum.toDouble / tDen))
-      if (eager) res.localCheckpoint(true) else res
-    } finally cached.foreach(_.unpersist())
+    val sh = docArr.select(col(idCol), explode(col("__arr")).as("sh"))
+    val dfreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+    // rank and set size come out of ONE partition-by-doc exchange: the
+    // count runs as an unordered frame over the same partitioning, so no
+    // separate counts aggregate + join-back is needed
+    val w = Window.partitionBy(col(idCol)).orderBy(col("df").asc, col("sh").asc)
+    // pinned: the candidate self-join consumes the prefix twice, and
+    // exchange reuse does not deduplicate the aliased branches — without
+    // the cache each side re-runs the df-aggregate, its join, and the
+    // ranking window
+    val prefix = pin(sh.join(dfreq, "sh")
+      .select(col(idCol), col("sh"), row_number().over(w).as("rn"),
+        count(lit(1)).over(Window.partitionBy(col(idCol))).as("n_sh"))
+      .filter(col("rn") <=
+        col("n_sh") - expr(s"CAST((n_sh * $tNum + ${tDen - 1}) DIV $tDen AS BIGINT)") + 1)
+      .select(col(idCol), col("sh"), col("rn"), col("n_sh")))
+    // PPJoin length filter: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so a pair
+    // can reach t = tNum/tDen only when na·tNum ≤ nb·tDen in BOTH
+    // directions — size-incompatible candidates are dropped before the
+    // distinct and the 3-join verify ever see them.
+    //
+    // PPJoin POSITIONAL filter on top: a match at ordered positions
+    // (i, j) bounds the overlap by min(na−i, nb−j)+1 (every further
+    // shared token sits strictly after the match in BOTH ordered sets),
+    // and J ≥ t needs overlap·(tNum+tDen) ≥ (na+nb)·tNum. The first
+    // (globally smallest) shared token of a qualifying pair — the one
+    // AllPairs guarantees inside both prefixes — always satisfies the
+    // bound, so dropping failing INSTANCES loses no pair; it only stops
+    // late-prefix coincidences from reaching the distinct and the
+    // 3-join verify. Both filters are exact integer cross-multiplication.
+    val cand = prefix.select(col("sh"), col(idCol).as("id_a"),
+        col("rn").as("ra"), col("n_sh").as("na"))
+      .join(prefix.select(col("sh"), col(idCol).as("id_b"),
+        col("rn").as("rb"), col("n_sh").as("nb")), "sh")
+      .filter(col("id_a") < col("id_b") &&
+        col("na") * tNum <= col("nb") * tDen && col("nb") * tNum <= col("na") * tDen &&
+        (least(col("na") - col("ra"), col("nb") - col("rb")) + 1) * (tNum + tDen) >=
+          (col("na") + col("nb")) * tNum)
+      .select(col("id_a"), col("id_b")).distinct()
+    // (A survivor-restricted verify — minhashNearDups' broadcast semi-join
+    // — was measured SLOWER here: prefix-filter candidates cover most of
+    // the corpus.) J ≥ t as an exact integer test on the true overlap: it
+    // references `inter` once, so the join condition it is pushed into
+    // builds one per-pair hash set, not two.
+    jaccardOf(overlap(cand, docArr, docArr, idCol)
+      .filter(col("inter") * (tDen + tNum) >= (col("na") + col("nb")) * tNum))
   }
 
   /** Containment join — quote/subset detection: ordered pairs where at
@@ -788,104 +773,76 @@ object Dedup {
     * is complete for any pair sharing ≥ 1 sub-`maxDf` shingle (pairs whose
     * every common shingle is corpus-hot are boilerplate, not quotes).
     *
-    * 100 TB shape: one shingle cache feeding df-aggregate + verify, the
-    * block join keyed on rare shingles only, verification only over
-    * blocked candidates. `maxDf` directly caps inverted-list length, so
-    * candidate volume is ≤ maxDf² per rare shingle. */
+    * 100 TB shape: one pinned set-array frame feeding df-aggregate +
+    * verify, the block join keyed on rare shingles only, verification only
+    * over blocked candidates. `maxDf` directly caps inverted-list length,
+    * so candidate volume is ≤ maxDf² per rare shingle. */
   def containmentJoin(df: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, maxDf: Long = 10,
                       tNum: Long = 4, tDen: Long = 5): DataFrame =
-    containmentJoinImpl(df, idCol, textCol, shingleSize, maxDf, tNum, tDen, eager = true)
-
-  /** Lazy [[containmentJoin]] (no cache, no checkpoint) — plan-shape gates. */
-  private[graft] def containmentJoinLazy(df: DataFrame, idCol: String, textCol: String,
-                                         shingleSize: Int = 3, maxDf: Long = 10,
-                                         tNum: Long = 4, tDen: Long = 5): DataFrame =
-    containmentJoinImpl(df, idCol, textCol, shingleSize, maxDf, tNum, tDen, eager = false)
+    CallCache(pin => containmentJoinPlan(
+      pin(docShingleArrays(df, idCol, textCol, shingleSize)), idCol, maxDf, tNum, tDen))
 
   /** [[containmentJoin]] over a PRE-BUILT (and caller-persisted)
     * [[docShingleArrays]] frame — the q77/q78 standing-state seam; the
-    * frame is not cached or unpersisted here. */
+    * frame is not pinned or unpersisted here. */
   def containmentJoinOnArrays(docArr: DataFrame, idCol: String,
                               maxDf: Long = 10,
                               tNum: Long = 4, tDen: Long = 5): DataFrame =
-    containmentJoinArrImpl(docArr, idCol, maxDf, tNum, tDen,
-      eager = true, ownArr = false)
+    CallCache(_ => containmentJoinPlan(docArr, idCol, maxDf, tNum, tDen))
 
-  private def containmentJoinImpl(df: DataFrame, idCol: String, textCol: String,
-                                  shingleSize: Int, maxDf: Long,
-                                  tNum: Long, tDen: Long, eager: Boolean): DataFrame =
-    containmentJoinArrImpl(docShingleArrays(df, idCol, textCol, shingleSize),
-      idCol, maxDf, tNum, tDen, eager, ownArr = eager)
-
-  private def containmentJoinArrImpl(docArr0: DataFrame, idCol: String,
-                                     maxDf: Long, tNum: Long, tDen: Long,
-                                     eager: Boolean, ownArr: Boolean): DataFrame = {
+  /** The [[containmentJoin]] plan over per-doc set arrays (which the
+    * entries own; nothing else is read twice). */
+  private[graft] def containmentJoinPlan(docArr: DataFrame, idCol: String,
+                                         maxDf: Long, tNum: Long, tDen: Long): DataFrame = {
     require(tNum > 0 && tNum <= tDen, s"threshold $tNum/$tDen must be in (0, 1]")
-    // the per-doc shingle-set arrays ([[docShingleArrays]] — the single
-    // corpus-scale aggregate) feed the blocking chain (re-exploded,
-    // shuffle-free off the cache), the n_sh counts (size(__arr)), and the
-    // array-intersect verify. Row size is bounded by the document's own
-    // length (the doc text was already a row). Cached only when owned.
-    val docArr = if (ownArr) docArr0.cache() else docArr0
-    val cached: List[DataFrame] = if (ownArr) List(docArr) else Nil
-    try {
-      val shD = docArr.select(col(idCol), explode(col("__arr")).as("sh"))
-      // rare = blocking shingles: document frequency in [2, maxDf] (df = 1
-      // shingles cannot witness a pair; df is counted over distinct
-      // (doc, sh), which the set-arrays guarantee). Two-pass on purpose:
-      // the df-filter runs BEFORE any id-list collection, so a corpus-hot
-      // shingle (df in the millions at 100 TB) is never collected into an
-      // executor-side list.
-      val rare = shD.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-        .filter(col("df") >= 2 && col("df") <= maxDf).select("sh")
-      // candidate pairs by ENUMERATING each rare shingle's inverted list
-      // (≤ maxDf ids, sorted → id_a < id_b by construction) instead of a
-      // self-join: the join output and its shuffle never materialize; the
-      // groupBy(sh) after the rare join reuses the join's partitioning.
-      val rareLists = shD.join(rare, "sh")
-        .groupBy(col("sh")).agg(sort_array(collect_list(col(idCol))).as("ids"))
-      val cand = rareLists.select(explode(flatten(transform(col("ids"), (x, i) =>
-          transform(slice(col("ids"), i + lit(2), size(col("ids"))), y =>
-            struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b")).distinct()
-      // EXACT intersection via the per-doc arrays: two equi-joins keyed on
-      // the candidate ids (AQE upgrades them to broadcasts when the array
-      // side is small), then one codegen'd array_intersect per pair —
-      // instead of expanding every candidate by ALL of A's shingles
-      // (|cand|·|A| rows through two shuffles and a re-aggregate, the old
-      // shape and q78's dominant cost). Same |A∩B| bit-for-bit: the
-      // arrays ARE the distinct shingle sets. na/nb ride along as
-      // size(arr) — no separate count joins. (The r11 intersection-bound
-      // prune is gone with the expansion it protected: per-pair verify
-      // cost is now O(|A|+|B|) hashing, cheaper than the prune's four
-      // joins + aggregate at every threshold.)
-      val sized = cand
-        .join(docArr.select(col(idCol).as("id_a"), col("__arr").as("__ca")), "id_a")
-        .join(docArr.select(col(idCol).as("id_b"), col("__arr").as("__cb")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          size(array_intersect(col("__ca"), col("__cb"))).cast("long").as("inter"),
-          size(col("__ca")).cast("long").as("na"),
-          size(col("__cb")).cast("long").as("nb"))
-      // both directions of each unordered candidate, filtered independently:
-      // integer cross-multiplication keeps the threshold test exact. The
-      // directions come from ONE pass (explode of a 2-struct array) — a
-      // self-union here would re-execute the whole inter/sized chain per
-      // branch, since exchange reuse does not fire across the aliased
-      // branches.
-      // (No pair-level length filter exists for containment: the smaller
-      // side is ALWAYS a feasible source — C(min→max) can reach 1.0 at any
-      // size ratio — unlike Jaccard's symmetric min/max bound.)
-      // eager (localCheckpoint) so the shingle cache can be released here
-      val res = sized.select(explode(array(
-          struct(col("id_a").as("src_id"), col("id_b").as("sup_id"),
-            col("inter"), col("na").as("n_src")),
-          struct(col("id_b").as("src_id"), col("id_a").as("sup_id"),
-            col("inter"), col("nb").as("n_src")))).as("dir"))
-        .filter(col("dir.inter") * tDen >= col("dir.n_src") * tNum)
-        .select(col("dir.src_id").as("src_id"), col("dir.sup_id").as("sup_id"),
-          (col("dir.inter").cast("double") / col("dir.n_src")).as("containment"))
-      if (eager) res.localCheckpoint(true) else res
-    } finally cached.foreach(_.unpersist())
+    // df = 1 shingles cannot witness a pair: maxDf < 2 blocks on nothing
+    require(maxDf >= 2, s"maxDf must be >= 2, got maxDf=$maxDf")
+    // the per-doc shingle-set arrays feed the blocking chain (re-exploded,
+    // shuffle-free off the pinned frame) and the overlap verify. Row size is
+    // bounded by the document's own length (the doc text was already a row).
+    val shD = docArr.select(col(idCol), explode(col("__arr")).as("sh"))
+    // rare = blocking shingles: document frequency in [2, maxDf] (df = 1
+    // shingles cannot witness a pair; df is counted over distinct
+    // (doc, sh), which the set-arrays guarantee). Two-pass on purpose:
+    // the df-filter runs BEFORE any id-list collection, so a corpus-hot
+    // shingle (df in the millions at 100 TB) is never collected into an
+    // executor-side list.
+    val rare = shD.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      .filter(col("df") >= 2 && col("df") <= maxDf).select("sh")
+    // candidate pairs by ENUMERATING each rare shingle's inverted list
+    // (≤ maxDf ids, sorted → id_a < id_b by construction) instead of a
+    // self-join: the join output and its shuffle never materialize; the
+    // groupBy(sh) after the rare join reuses the join's partitioning.
+    val rareLists = shD.join(rare, "sh")
+      .groupBy(col("sh")).agg(sort_array(collect_list(col(idCol))).as("ids"))
+    val cand = rareLists.select(explode(flatten(transform(col("ids"), (x, i) =>
+        transform(slice(col("ids"), i + lit(2), size(col("ids"))), y =>
+          struct(x.as("id_a"), y.as("id_b")))))).as("p"))
+      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b")).distinct()
+    // EXACT intersection via the [[overlap]] verify — instead of expanding
+    // every candidate by ALL of A's shingles (|cand|·|A| rows through two
+    // shuffles and a re-aggregate, the old shape and q78's dominant cost).
+    // Same |A∩B| bit-for-bit: the arrays ARE the distinct shingle sets.
+    // (The r11 intersection-bound prune is gone with the expansion it
+    // protected: per-pair verify cost is now O(|A|+|B|) hashing, cheaper
+    // than the prune's four joins + aggregate at every threshold.)
+    //
+    // both directions of each unordered candidate, filtered independently:
+    // integer cross-multiplication keeps the threshold test exact. The
+    // directions come from ONE pass (explode of a 2-struct array) — a
+    // self-union here would re-execute the whole overlap chain per branch,
+    // since exchange reuse does not fire across the aliased branches.
+    // (No pair-level length filter exists for containment: the smaller
+    // side is ALWAYS a feasible source — C(min→max) can reach 1.0 at any
+    // size ratio — unlike Jaccard's symmetric min/max bound.)
+    overlap(cand, docArr, docArr, idCol).select(explode(array(
+        struct(col("id_a").as("src_id"), col("id_b").as("sup_id"),
+          col("inter"), col("na").as("n_src")),
+        struct(col("id_b").as("src_id"), col("id_a").as("sup_id"),
+          col("inter"), col("nb").as("n_src")))).as("dir"))
+      .filter(col("dir.inter") * tDen >= col("dir.n_src") * tNum)
+      .select(col("dir.src_id").as("src_id"), col("dir.sup_id").as("sup_id"),
+        (col("dir.inter").cast("double") / col("dir.n_src")).as("containment"))
   }
 }

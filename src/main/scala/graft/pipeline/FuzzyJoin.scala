@@ -53,14 +53,7 @@ object FuzzyJoin {
     * Output: `id_a BIGINT, id_b BIGINT, dist BIGINT`, one row per pair. */
   def editDistanceJoin(df: DataFrame, idCol: String, strCol: String,
                        maxDist: Int): DataFrame =
-    editDistanceJoinImpl(df, idCol, strCol, maxDist, eager = true)
-
-  /** Lazy [[editDistanceJoin]] (no cache, no checkpoint) — exposes the full
-    * logical plan for the plan-shape gates; production callers want the
-    * eager variant, which releases its caches on return. */
-  private[graft] def editDistanceJoinLazy(df: DataFrame, idCol: String, strCol: String,
-                                          maxDist: Int): DataFrame =
-    editDistanceJoinImpl(df, idCol, strCol, maxDist, eager = false)
+    CallCache(editDistanceJoinPlan(_)(df, idCol, strCol, maxDist))
 
   /** COUNT of blocked candidate pairs (pre-verify), all four branches
     * (symdelete, prefix, segment, tiny) WITHOUT any dedup — exactly what
@@ -70,23 +63,23 @@ object FuzzyJoin {
     * smoke's cost decomposition: candidate volume is the blocking quality
     * axis; the banded-DP verify and the output materialization are
     * per-candidate / per-true-pair work no blocking scheme can remove.
-    * Runs eager so the prefix frame caches for its self-join (uncached,
-    * each join side would re-run the gram-df aggregate + ranking window —
-    * measured 4x the full join's wall time) and releases before return. */
+    * Runs through [[CallCache]] so the prefix frame caches for its
+    * self-join (uncached, each join side would re-run the gram-df
+    * aggregate + ranking window — measured 4x the full join's wall time)
+    * and releases before return. */
   private[graft] def editDistanceCandidateCount(df: DataFrame, idCol: String,
-                                                strCol: String, maxDist: Int): Long = {
-    val (cands, cache) =
-      candidateBranches(df, idCol, strCol, maxDist, eager = true)
-    try {
+                                                strCol: String, maxDist: Int): Long =
+    CallCache.run { pin =>
       val ids = Seq("id_a", "id_b").map(col)
-      cands.map(_.select(ids: _*)).reduce(_ unionByName _).count()
-    } finally cache.foreach(_.unpersist())
-  }
+      candidateBranches(pin)(df, idCol, strCol, maxDist)
+        .map(_.select(ids: _*)).reduce(_ unionByName _)
+    }(_.count())
 
-  private def editDistanceJoinImpl(df: DataFrame, idCol: String, strCol: String,
-                                   maxDist: Int, eager: Boolean): DataFrame = {
-    val (cands, cache) =
-      candidateBranches(df, idCol, strCol, maxDist, eager)
+  /** The [[editDistanceJoin]] plan; `pin` marks the frames a branch
+    * self-join reads twice. Called with `identity`, it is the whole lazy
+    * plan. */
+  private[graft] def editDistanceJoinPlan(pin: CallCache.Pin)(
+      df: DataFrame, idCol: String, strCol: String, maxDist: Int): DataFrame = {
     val k = maxDist
     // VERIFY BEFORE DEDUP (r18, guide §2.3/§2.4): the candidate frames
     // carry duplicates (one per shared blocking key), but the banded
@@ -104,11 +97,7 @@ object FuzzyJoin {
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
       .distinct()
 
-    val res = cands.map(verify).reduce(_ unionByName _)
-    // eager: the branch caches must not outlive the call in a long-lived
-    // session (the jaccardJoinExact pattern)
-    if (eager) try res.localCheckpoint(true) finally cache.foreach(_.unpersist())
-    else res
+    candidateBranches(pin)(df, idCol, strCol, maxDist).map(verify).reduce(_ unionByName _)
   }
 
   /** Upper length bound for the deletion-neighborhood branch (strings up
@@ -121,10 +110,9 @@ object FuzzyJoin {
     graft.core.SysProps.int("graft.fuzzy.symdelete.maxlen", 40, min = 0)
 
   /** Branch candidate frames `(id_a, id_b, s_a, s_b)` (symdelete, prefix,
-    * segment, tiny) plus the caches to release after consumption. */
-  private def candidateBranches(df: DataFrame, idCol: String, strCol: String,
-                                maxDist: Int, eager: Boolean)
-      : (Seq[DataFrame], List[DataFrame]) = {
+    * segment, tiny); the variant and prefix frames go through `pin`. */
+  private def candidateBranches(pin: CallCache.Pin)(
+      df: DataFrame, idCol: String, strCol: String, maxDist: Int): Seq[DataFrame] = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
     val k = maxDist
     val q = k + 1            // gram size; also the segment count
@@ -178,7 +166,7 @@ object FuzzyJoin {
     val variants0 = (if (k >= 2) d0.unionByName(d1).unionByName(d2)
                      else d0.unionByName(d1))
       .dropDuplicates("id", "v")
-    val variants = if (eager && useSym) variants0.cache() else variants0
+    val variants = if (useSym) pin(variants0) else variants0
     val symCand =
       if (!useSym) base.limit(0).select(col("id").as("id_a"), col("id").as("id_b"),
         col("s").as("s_a"), col("s").as("s_b"))
@@ -209,7 +197,7 @@ object FuzzyJoin {
       .partitionBy(col("id")).orderBy(col("gdf").asc, col("g").asc, col("pos").asc)
     // Prefix rows carry the string (id, len, g, s): the self-join output is
     // pipelined straight into the banded-Levenshtein verify (no pair-level
-    // exchange — see editDistanceJoinImpl), so the string column rides the
+    // exchange — see editDistanceJoinPlan), so the string column rides the
     // join instead of re-attaching via two post-distinct joins. On
     // boilerplate-heavy fixed-format corpora the prefix buckets can
     // degenerate toward all-pairs (every string carries the same
@@ -218,13 +206,12 @@ object FuzzyJoin {
     // gram at two positions blocks the same pairs, so (id, g) dedups —
     // without it a degenerate hot gram multiplies its per-string
     // occurrence count into the join output multiplicatively.
-    // Cached: the self-join consumes the gram/df/window chain twice.
-    val prefix0 = grams.join(gdf, "g")
+    // Pinned: the self-join consumes the gram/df/window chain twice.
+    val prefix = pin(grams.join(gdf, "g")
       .select(col("id"), col("s"), col("len"), col("g"), row_number().over(w).as("rn"))
       .filter(col("rn") <= prefLen)
       .select(col("id"), col("s"), col("len"), col("g"))
-      .dropDuplicates("id", "g")
-    val prefix = if (eager) prefix0.cache() else prefix0
+      .dropDuplicates("id", "g"))
     val prefixCand = prefix
       .select(col("g"), col("id").as("id_a"), col("len").as("len_x"), col("s").as("s_a"))
       .join(prefix.select(col("g"), col("id").as("id_b"), col("len").as("len_y"),
@@ -296,8 +283,6 @@ object FuzzyJoin {
         when(col("id") < col("id_y"), col("s")).otherwise(col("s_y")).as("s_a"),
         when(col("id") < col("id_y"), col("s_y")).otherwise(col("s")).as("s_b"))
 
-    val caches = (if (eager) List(prefix) else Nil) ++
-      (if (eager && useSym) List(variants) else Nil)
-    (Seq(symCand, prefixCand, segCand, tinyCand), caches)
+    Seq(symCand, prefixCand, segCand, tinyCand)
   }
 }

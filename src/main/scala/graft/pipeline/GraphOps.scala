@@ -35,48 +35,40 @@ object GraphOps {
     * 100 TB posture: per round, one equi-join of the edge list with the
     * current rank vector (both keyed by source id — the shuffle reuses the
     * edge partitioning across rounds) and one hash aggregate keyed by
-    * destination. The edge list is consumed `iters` times, so it is cached
-    * and released after the (eagerly materialized) final vector — the
-    * dupClusters loop pattern. High-degree hubs are map-side-combined by
-    * the partial aggregate, not a hot reducer.
+    * destination. The edge list is consumed `iters` times, so it is pinned
+    * through [[CallCache]] and released after the checkpointed final
+    * vector. High-degree hubs are map-side-combined by the partial
+    * aggregate, not a hot reducer.
     *
     * Output: `id BIGINT, pr BIGINT` (fixed-point rank).
     */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
                iters: Int = 3, scale: Long = 1000000000000L): DataFrame =
-    pageRankImpl(edges, aCol, bCol, iters, scale, eager = true)
+    CallCache(pageRankPlan(_)(edges, aCol, bCol, iters, scale))
 
-  /** Lazy [[pageRank]] (no cache, no checkpoint) — exposes the full plan
-    * for the plan-shape gates; production callers want the eager variant,
-    * which releases the edge cache on return. */
-  private[graft] def pageRankLazy(edges: DataFrame, aCol: String, bCol: String,
-                                  iters: Int = 3, scale: Long = 1000000000000L): DataFrame =
-    pageRankImpl(edges, aCol, bCol, iters, scale, eager = false)
-
-  private def pageRankImpl(edges: DataFrame, aCol: String, bCol: String,
-                           iters: Int, scale: Long, eager: Boolean): DataFrame = {
+  /** The [[pageRank]] plan; `pin` marks the degree-joined edge list. Called
+    * with `identity`, it is the whole lazy plan. */
+  private[graft] def pageRankPlan(pin: CallCache.Pin)(
+      edges: DataFrame, aCol: String, bCol: String,
+      iters: Int = 3, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && scale >= 100 && scale % 100 == 0,
       s"iters=$iters scale=$scale (scale must be a positive multiple of 100)")
     val dir = edges.select(col(aCol).cast("long").as("s"), col(bCol).cast("long").as("t"))
       .unionByName(edges.select(col(bCol).cast("long").as("s"), col(aCol).cast("long").as("t")))
     val deg = dir.groupBy(col("s")).agg(count(lit(1)).as("d"))
-    val e0 = dir.join(deg, "s")
-    val e = if (eager) e0.cache() else e0
-    try {
-      val base = scale * 15 / 100 // exact: scale % 100 == 0 is required above
-      var r = deg.select(col("s").as("id"), lit(scale).as("r"))
-      var it = 0
-      while (it < iters) {
-        r = e.join(r, e("s") === r("id"))
-          .select(col("t"), expr("r div d").as("contrib"))
-          .groupBy(col("t"))
-          .agg(sum(col("contrib")).as("insum"))
-          .select(col("t").as("id"),
-            (lit(base) + expr("(85 * insum) div 100")).as("r"))
-        it += 1
-      }
-      val res = r.select(col("id"), col("r").cast("long").as("pr"))
-      if (eager) res.localCheckpoint(true) else res
-    } finally if (eager) e.unpersist()
+    val e = pin(dir.join(deg, "s"))
+    val base = scale * 15 / 100 // exact: scale % 100 == 0 is required above
+    var r = deg.select(col("s").as("id"), lit(scale).as("r"))
+    var it = 0
+    while (it < iters) {
+      r = e.join(r, e("s") === r("id"))
+        .select(col("t"), expr("r div d").as("contrib"))
+        .groupBy(col("t"))
+        .agg(sum(col("contrib")).as("insum"))
+        .select(col("t").as("id"),
+          (lit(base) + expr("(85 * insum) div 100")).as("r"))
+      it += 1
+    }
+    r.select(col("id"), col("r").cast("long").as("pr"))
   }
 }

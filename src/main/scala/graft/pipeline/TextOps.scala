@@ -769,16 +769,16 @@ object TextOps {
       case Some(id) => df.repartition(par, col(id))
       case None => df.repartition(par)
     }
-    val perSrcTok = spread
-      .select(col(srcCol).as("source"), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c_s"))
-      .cache() // feeds the corpus-count aggregate, the totals, and the join
-    try {
+    CallCache { pin =>
+      // pinned: feeds the corpus-count aggregate, the totals, and the join
+      val perSrcTok = pin(spread
+        .select(col(srcCol).as("source"), explode(tokens(col(textCol))).as("tok"))
+        .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c_s")))
       val perTok = perSrcTok.groupBy(col("tok")).agg(sum(col("c_s")).as("c"))
       val totals = perSrcTok.groupBy(col("source"))
         .agg(sum(col("c_s")).as("n_s"), count(lit(1)).as("n_types"))
       val grand = perSrcTok.agg(sum(col("c_s")).as("n"))
-      val res = perSrcTok.join(perTok, "tok")
+      perSrcTok.join(perTok, "tok")
         .join(broadcast(totals), "source")
         .crossJoin(broadcast(grand))
         .groupBy(col("source"))
@@ -789,8 +789,6 @@ object TextOps {
         .select(col("source"), col("n_toks"), col("n_types"), col("l1"),
           (col("l1").cast("double") / (lit(2L) * col("__ns") * col("__n")).cast("double"))
             .as("tv"))
-        .localCheckpoint(true)
-      res
-    } finally perSrcTok.unpersist()
+    }
   }
 }

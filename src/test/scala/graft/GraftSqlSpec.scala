@@ -1473,6 +1473,40 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.catalog.clearCache()
   }
 
+  test("similarity-join sizes fail fast, naming the parameter and value, from Scala and SQL") {
+    import graft.pipeline.Dedup
+    import spark.implicits._
+    val docs = Seq(1L -> "a b c d e", 2L -> "a b c d f").toDF("doc_id", "text")
+    docs.createOrReplaceTempView("sizes_docs_v")
+    def rejects(expected: String)(call: => Any): Unit = {
+      val e = intercept[Exception](call)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(_.contains(expected)), s"'$expected' not in: ${msgs.mkString(" | ")}")
+    }
+    val sigs = Dedup.simhash64(docs, "doc_id", "text")
+    rejects("shingleSize=0")(Dedup.minhashNearDups(docs, "doc_id", "text", shingleSize = 0))
+    rejects("bands=0")(Dedup.minhashNearDups(docs, "doc_id", "text", bands = 0))
+    rejects("numHashes=0")(Dedup.minhashNearDups(docs, "doc_id", "text", numHashes = 0))
+    rejects("bands=32")(Dedup.minhashNearDups(docs, "doc_id", "text", numHashes = 16, bands = 32))
+    rejects("bands=3")(Dedup.buildNearDupIndex(docs, "doc_id", "text", numHashes = 16, bands = 3))
+    rejects("threshold=NaN")(Dedup.minhashNearDups(docs, "doc_id", "text", threshold = Double.NaN))
+    rejects("threshold=0.0")(Dedup.probeNearDupsIndexed(docs,
+      Dedup.buildNearDupIndex(docs, "doc_id", "text"), "doc_id", "text", threshold = 0.0))
+    rejects("maxDf=1")(Dedup.containmentJoin(docs, "doc_id", "text", maxDf = 1))
+    rejects("segmentBits=64")(Dedup.simhashNearDups(sigs, "doc_id", maxHamming = 0,
+      numSegments = 1, segmentBits = 64))
+    rejects("numSegments=5")(Dedup.simhashNearDups(sigs, "doc_id", maxHamming = 3,
+      numSegments = 5, segmentBits = 16))
+    rejects("threshold=1.5")(spark.sql(
+      "SELECT * FROM minhash_pairs('sizes_docs_v', 'doc_id', 'text', 1.5)").collect())
+    rejects("maxDf=1")(spark.sql(
+      "SELECT * FROM containment_join('sizes_docs_v', 'doc_id', 'text', 1, 1, 5)").collect())
+    rejects("maxHamming=-1")(spark.sql(
+      "SELECT * FROM simhash_pairs('sizes_docs_v', 'doc_id', 'text', -1)").collect())
+    spark.catalog.clearCache()
+  }
+
   test("time-series TVFs are SQL-reachable and parity-equal to the Scala API") {
     import graft.pipeline.TimeSeries
     import org.apache.spark.sql.functions.{col, expr}

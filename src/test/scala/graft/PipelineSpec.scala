@@ -1443,6 +1443,46 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally arrs.unpersist()
   }
 
+  test("call-scoped join operators leave no cache entry, also when the checkpoint job throws") {
+    import spark.implicits._
+    import graft.pipeline.{FuzzyJoin, GraphOps}
+    import org.apache.spark.sql.GraftShim.cachedEntries
+    // near-duplicate pairs across odd (batch) and even (index) ids
+    val base = (1 to 12).map(i => s"w$i").mkString(" ")
+    val d = (1L to 8L).map(i => (i, s"$base x${i / 2} y$i", if (i % 2 == 0) "web" else "books"))
+      .toDF("doc_id", "text", "source")
+    // checkpointed, so the OnArrays entries read a frame with no cache entry
+    val arrs = Dedup.docShingleArrays(d, "doc_id", "text", 3).localCheckpoint(true)
+    val names = d.select(col("doc_id"), substring(col("text"), 30, 14).as("s"))
+    val index = Dedup.buildNearDupIndex(d.filter(col("doc_id") % 2 === 0), "doc_id", "text")
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("id_a", "id_b")
+    spark.catalog.clearCache()
+    def leavesNoCache(what: String)(call: => Any): Unit = {
+      call
+      assert(cachedEntries(spark) == 0, s"$what left ${cachedEntries(spark)} cache entries")
+    }
+    leavesNoCache("jaccardJoinExact")(Dedup.jaccardJoinExact(d, "doc_id", "text", 3, 1, 2))
+    leavesNoCache("jaccardJoinExactOnArrays")(Dedup.jaccardJoinExactOnArrays(arrs, "doc_id", 1, 2))
+    leavesNoCache("containmentJoin")(Dedup.containmentJoin(d, "doc_id", "text", 3, 10, 1, 5))
+    leavesNoCache("containmentJoinOnArrays")(Dedup.containmentJoinOnArrays(arrs, "doc_id", 10, 1, 5))
+    leavesNoCache("probeNearDupsIndexed")(Dedup.probeNearDupsIndexed(
+      d.filter(col("doc_id") % 2 === 1), index, "doc_id", "text"))
+    leavesNoCache("editDistanceJoin")(FuzzyJoin.editDistanceJoin(names, "doc_id", "s", maxDist = 2))
+    leavesNoCache("editDistanceCandidateCount")(
+      FuzzyJoin.editDistanceCandidateCount(names, "doc_id", "s", maxDist = 2))
+    leavesNoCache("pageRank")(GraphOps.pageRank(edges, "id_a", "id_b"))
+    leavesNoCache("sourceDivergence")(TextOps.sourceDivergence(d, "text", "source"))
+    // the checkpoint job fails inside the shingle kernel: the pins built
+    // before it still go
+    val poisoned = d.withColumn("text",
+      when(col("doc_id") === 3, raise_error(lit("poisoned row"))).otherwise(col("text")))
+    leavesNoCache("a failing jaccardJoinExact") {
+      val e = intercept[Exception](Dedup.jaccardJoinExact(poisoned, "doc_id", "text", 3, 1, 2))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("poisoned row")), e.toString)
+    }
+  }
+
   test("dsirWeights: hand-checked quantized scores, all raw docs appear") {
     // target "a b a b": ct("a b") = 2, ct("b a") = 1, Tt = 3
     // raw: doc1 "a b" (target-common bigram), doc2 "x y" (target-absent),

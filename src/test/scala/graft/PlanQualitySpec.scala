@@ -535,22 +535,41 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The lazy exact-Jaccard plan: the plan builder with an `identity` pin
+    * (the production entry localCheckpoints, which would hide the plan
+    * behind an RDD scan). */
+  private def jaccardJoinPlan = graft.pipeline.Dedup.jaccardJoinPlan(identity)(
+    graft.pipeline.Dedup.docShingleArrays(graft.Tables.documents(spark, sf), "doc_id", "text", 3),
+    "doc_id", tNum = 1, tDen = 2)
+
   test("exact jaccard join: every join is an equi-join (prefix/shingle/id keys)") {
-    // lazy variant: the production function localCheckpoints (cache release)
-    val plan = physicalPlan(graft.pipeline.Dedup.jaccardJoinExactLazy(
-      graft.Tables.documents(spark, sf), "doc_id", "text",
-      shingleSize = 3, tNum = 1, tDen = 2).orderBy("id_a", "id_b"))
+    val plan = physicalPlan(jaccardJoinPlan.orderBy("id_a", "id_b"))
     assert(!plan.contains("CartesianProduct"),
       s"prefix filtering degenerated to all-pairs:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"non-equi join in the similarity-join plan:\n$plan")
   }
 
+  test("exact jaccard join: the threshold join condition builds one array_intersect") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the threshold is pushed into the id_b verify join's condition; every
+    // array_intersect reference there builds its own per-pair hash set
+    val conds = jaccardJoinPlan.queryExecution.executedPlan
+      .collect { case j: BaseJoinExec => j.condition }.flatten
+      .filter(_.find(_.isInstanceOf[ArrayIntersect]).isDefined)
+    assert(conds.nonEmpty, "threshold not pushed into a verify join condition")
+    conds.foreach { c =>
+      val n = c.collect { case a: ArrayIntersect => a }.size
+      assert(n == 1, s"$n array_intersect calls in the join condition: $c")
+    }
+  }
+
   test("containment join: rare-shingle blocking keeps every join an equi-join") {
-    // lazy variant: the production function localCheckpoints (cache release)
-    val plan = physicalPlan(graft.pipeline.Dedup.containmentJoinLazy(
-      graft.Tables.documents(spark, sf), "doc_id", "text",
-      shingleSize = 3, maxDf = 10, tNum = 1, tDen = 5).orderBy("src_id", "sup_id"))
+    // the plan builder: the production entry localCheckpoints (cache release)
+    val plan = physicalPlan(graft.pipeline.Dedup.containmentJoinPlan(
+      graft.pipeline.Dedup.docShingleArrays(graft.Tables.documents(spark, sf), "doc_id", "text", 3),
+      "doc_id", maxDf = 10, tNum = 1, tDen = 5).orderBy("src_id", "sup_id"))
     assert(!plan.contains("CartesianProduct"),
       s"containment blocking degenerated to all-pairs:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
@@ -564,8 +583,9 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fuzzy join: every branch is an equi-join (gram/segment/bucket keys)") {
-    // lazy variant: the production function localCheckpoints (cache release)
-    val plan = physicalPlan(graft.pipeline.FuzzyJoin.editDistanceJoinLazy(
+    // the plan builder with an identity pin: the production entry
+    // localCheckpoints (cache release)
+    val plan = physicalPlan(graft.pipeline.FuzzyJoin.editDistanceJoinPlan(identity)(
       graft.Tables.customer(spark, sf), "c_custkey", "c_name", maxDist = 2)
       .orderBy("id_a", "id_b"))
     assert(!plan.contains("CartesianProduct"),
@@ -577,9 +597,10 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pagerank: edge/rank joins are equi-joins, contributions combine map-side") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-    // lazy variant: the production function localCheckpoints (cache release)
+    // the plan builder with an identity pin: the production entry
+    // localCheckpoints (cache release)
     val plan = physicalPlan(
-      graft.pipeline.GraphOps.pageRankLazy(edges, "id_a", "id_b", iters = 2))
+      graft.pipeline.GraphOps.pageRankPlan(identity)(edges, "id_a", "id_b", iters = 2))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"non-equi join in the pagerank plan:\n$plan")
     // the per-destination sum must partially aggregate before the exchange
