@@ -25,11 +25,15 @@ object Bench {
     * the official cpu width may write the committed `BENCH_full.json`;
     * subsets go to the scratch file and tainted/nonstandard-width full
     * runs to `BENCH_tainted.json` — a loaded-box run self-identifies
-    * instead of clobbering the official record (it happened in r13). */
+    * instead of clobbering the official record (it happened in r13). The
+    * records land in the working tree that runs the bench (`user.dir`, the
+    * checkout `sbt runMain` starts in), so a second clone — the old side of
+    * an A/B — writes its own files, never the first checkout's. */
   private[graft] def recordPath(isSubset: Boolean, tainted: Boolean, cpus: Int): String =
-    if (isSubset) "/root/repo/BENCH_only.json"
-    else if (tainted || cpus != OfficialCpus) "/root/repo/BENCH_tainted.json"
-    else "/root/repo/BENCH_full.json"
+    java.nio.file.Paths.get(sys.props("user.dir"),
+      if (isSubset) "BENCH_only.json"
+      else if (tainted || cpus != OfficialCpus) "BENCH_tainted.json"
+      else "BENCH_full.json").toString
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

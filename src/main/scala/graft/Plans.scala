@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev-only plan dumper (not part of the driver contract): writes
   * `.explain("formatted")` for declared queries to
-  * `<SPARK_GRAFT_PLANS_DIR>/<query>_<suffix>.txt` (default `plans/r19`) so
+  * `<SPARK_GRAFT_PLANS_DIR>/<query>_<suffix>.txt` (default `plans/r19` in
+  * the working tree that runs it) so
   * optimization claims ("2 Exchange -> 1", "SortMergeJoin ->
   * BroadcastHashJoin") are checkable without running Spark. Spark runs on
   * `SPARK_GRAFT_CPUS` cores (default: all of this machine's). Run:
@@ -13,9 +14,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Plans {
   /** Queries whose declared form `localCheckpoint`s (truncating the
-    * interesting plan to a `Scan ExistingRDD`): dump the LAZY inner plan —
-    * the operator's plan builder called with an `identity` pin — under
-    * `<query>__inner_<suffix>.txt` as well. */
+    * interesting plan to a `Scan ExistingRDD`): dump only the LAZY inner
+    * plan — the operator's plan builder called with an `identity` pin —
+    * under `<query>__inner_<suffix>.txt`. Their outer form is never built:
+    * building it runs the whole job chain just to print the checkpoint
+    * scan. */
   private def innerPlans(sfDir: String)
       : Map[String, SparkSession => org.apache.spark.sql.DataFrame] = Map(
     "q86_fuzzy_join" -> (s => graft.pipeline.FuzzyJoin.editDistanceJoinPlan(identity)(
@@ -50,11 +53,12 @@ object Plans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // round-parameterized via env (ADVICE r18): default to the current round
-    val dir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r19"))
+    val dir = java.nio.file.Paths.get(sys.props("user.dir"))
+      .resolve(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r19"))
     java.nio.file.Files.createDirectories(dir)
+    val inner = innerPlans(sfDir)
     SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only.forall(_.contains(name)) && !inner.contains(name) }
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
@@ -70,7 +74,7 @@ object Plans {
         }
         spark.catalog.clearCache()
       }
-    innerPlans(sfDir)
+    inner
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
         try {

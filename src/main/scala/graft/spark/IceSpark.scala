@@ -85,8 +85,8 @@ object IceWrite {
     * atomic commit of data + delete files otherwise pays two sequential
     * per-job constants (the dominant cost of a tiny ACID write; Spark's
     * scheduler interleaves the jobs across the shared core pool). Callers
-    * must not pass work that mutates shared session state (the
-    * positionDeleteFiles conf dance stays sequential for this reason).
+    * must not pass work that mutates shared session state (setting the
+    * reader's constant field-id flags is the one benign exception).
     * If `a` throws, the pending `b` job finishes into its own orphaned
     * staging dir and is never committed — the same abandonment any failed
     * write leaves. */
@@ -160,46 +160,33 @@ object IceWrite {
   private[graft] def positionDeleteFiles(spark: SparkSession, table: IceTable,
                                          predicate: org.apache.spark.sql.Column,
                                          branch: Option[String] = None): Seq[DataFile] =
-    matchedPositions(spark, table, predicate, branch) { matches =>
+    matchedPositions(spark, table, predicate, branch).map { matches =>
       writeDataFiles(spark, table, matches, PosDeleteSchema,
         content = ContentPositionDeletes)
     }.getOrElse(Nil)
 
-  /** Runs `use` over the (file_path, pos) DataFrame of current-snapshot rows
-    * matching `predicate` — the shared front half of BOTH positional-delete
-    * writers (parquet files and deletion vectors). `use` must consume the
-    * frame EAGERLY (an action): the field-id read confs are restored when
-    * this returns. None ⇔ pruning proved no file can match.
+  /** The (file_path, pos) DataFrame of current-snapshot rows matching
+    * `predicate` — the shared front half of BOTH positional-delete writers
+    * (parquet files and deletion vectors). None ⇔ pruning proved no file
+    * can match.
     */
-  private def matchedPositions[T](spark: SparkSession, table: IceTable,
-                                  predicate: org.apache.spark.sql.Column,
-                                  branch: Option[String])(use: DataFrame => T): Option[T] = {
+  private def matchedPositions(spark: SparkSession, table: IceTable,
+                               predicate: org.apache.spark.sql.Column,
+                               branch: Option[String]): Option[DataFrame] = {
     val snap = table.currentSnapshot(branch)
       .getOrElse(throw new IllegalStateException("cannot delete from an empty table"))
     // manifest/file pruning on the DELETE predicate: a file whose stats
     // prove it cannot contain matching rows need not be read at all — a
     // partition-scoped DELETE at 100 TB touches O(partition) files, not
     // O(table). Pruning is inexact-safe (only removes never-matching files).
-    val paths = IceScan.prunedDataFilePaths(spark, table, Seq(predicate), snap)
-    if (paths.isEmpty) return None
-    // resolve parquet columns by PARQUET:field_id like the scan path: files
-    // written before a RENAME COLUMN must still bind the predicate to the
-    // renamed column, not evaluate it against nulls. Restored in finally —
-    // unlike scan, every action completes inside this call.
-    val fieldIdConfs = Seq("spark.sql.parquet.fieldId.read.enabled",
-      "spark.sql.parquet.fieldId.read.ignoreMissing")
-    val prev = fieldIdConfs.map(k => k -> spark.conf.getOption(k))
-    fieldIdConfs.foreach(spark.conf.set(_, "true"))
-    try {
-      val matches = spark.read.schema(IceScan.readSparkSchema(table, table.schema)).parquet(paths: _*)
-        .filter(predicate)
-        .select(col("_metadata.file_path").as("file_path"),
-          col("_metadata.row_index").as("pos"))
-      Some(use(matches))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    val files = IceScan.prunedDataFiles(spark, table, Seq(predicate), snap)
+    // the reader resolves columns by field id like the scan: files written
+    // before a RENAME COLUMN still bind the predicate to the renamed column
+    if (files.isEmpty) None
+    else Some(IceScan.readFiles(spark, files, IceScan.readSparkSchema(table, table.schema))
+      .filter(predicate)
+      .select(col("_metadata.file_path").as("file_path"),
+        col("_metadata.row_index").as("pos")))
   }
 
   /** Reads one deletion-vector blob back into its bitmap. */
@@ -240,7 +227,7 @@ object IceWrite {
     val snap = table.currentSnapshot(branch)
       .getOrElse(throw new IllegalStateException("cannot delete from an empty table"))
     val perFile: Seq[(String, Array[Byte])] =
-      matchedPositions(spark, table, predicate, branch) { matches =>
+      matchedPositions(spark, table, predicate, branch).map { matches =>
         import spark.implicits._
         matches.toDF("_1", "_2").as[(String, Long)]
           .groupByKey(_._1)
@@ -504,37 +491,35 @@ object IceWrite {
       table.spec.partitionType(table.schema).fields.map(f => f.name -> f.fieldType).toMap
     } else Map.empty
 
-    val paths = sortedPathsOf(fs, stagingDir)
+    val files = statsFiles(sortedPathsOf(fs, stagingDir), stagingDir, conf, writeSchema,
+      partTypes, content, equalityIds)
 
     // distinct_counts population (A4; reference leaves the manifest field
     // empty, parquet.rs:85-90): one extra per-file approx_count_distinct
     // aggregation over the just-written files, opt-in via table property —
     // unlike footer scraping it reads data pages, so it is priced as a
     // deliberate write-time trade for optimizer NDV stats
-    val distinctByFile: Map[String, Map[Int, Long]] =
-      if (content != ContentData || paths.isEmpty ||
-          !table.metadata.properties.get("write.metadata.distinct-counts.enabled").contains("true"))
-        Map.empty
-      else {
-        val primFields = writeSchema.fields.filter(_.fieldType match {
-          case _: IceType.StructT | _: IceType.ListT | _: IceType.MapT => false
-          case _ => true
-        })
-        if (primFields.isEmpty) Map.empty
-        else {
-          val aggs = primFields.map(f => approx_count_distinct(col(f.name)).as(f.name))
-          spark.read.schema(writeSchema.toSpark).parquet(paths: _*)
-            .groupBy(col("_metadata.file_path").as("__p"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect() // one row per written file — metadata scale
-            .map(r => new Path(r.getString(0)).getName ->
-              primFields.zipWithIndex.map { case (f, i) => f.id -> r.getLong(i + 1) }.toMap)
-            .toMap
-        }
-      }
-
-    statsFiles(paths, stagingDir, conf, writeSchema,
-      partTypes, content, equalityIds, distinctByFile)
+    val primFields = writeSchema.fields.filter(_.fieldType match {
+      case _: IceType.StructT | _: IceType.ListT | _: IceType.MapT => false
+      case _ => true
+    })
+    if (content != ContentData || files.isEmpty || primFields.isEmpty ||
+        !table.metadata.properties.get("write.metadata.distinct-counts.enabled").contains("true"))
+      files
+    else {
+      val aggs = primFields.map(f => approx_count_distinct(col(f.name)).as(f.name))
+      val distinctByFile: Map[String, Map[Int, Long]] =
+        IceScan.readFiles(spark, files.map(ManifestEntry(StatusAdded, None, None, None, _)),
+            writeSchema.toSpark)
+          .groupBy(col("_metadata.file_path").as("__p"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect() // one row per written file — metadata scale
+          .map(r => new Path(r.getString(0)).getName ->
+            primFields.zipWithIndex.map { case (f, i) => f.id -> r.getLong(i + 1) }.toMap)
+          .toMap
+      files.map(d => d.copy(distinctCounts =
+        distinctByFile.getOrElse(new Path(d.filePath).getName, Map.empty)))
+    }
   }
 
   /** Imports EXISTING parquet files into the table IN PLACE (no copy, no
@@ -565,7 +550,7 @@ object IceWrite {
     require(paths.nonEmpty, s"no parquet files under $sourceDir")
     val specOrder = table.spec.fields.map(_.name)
     val files0 = statsFiles(paths, sourceDir.stripSuffix("/"), conf, table.schema,
-      partTypes, ContentData, Nil, Map.empty)
+      partTypes, ContentData, Nil)
     // every required column AND every partition source column must exist in
     // every imported file: a missing optional column reads as null (fine),
     // a missing required one is corruption waiting for a scan — and unlike
@@ -623,8 +608,7 @@ object IceWrite {
   private def statsFiles(sortedPaths: Seq[String], baseDir: String,
                          conf: org.apache.hadoop.conf.Configuration,
                          writeSchema: IceSchema, partTypes: Map[String, IceType],
-                         content: Int, equalityIds: Seq[Int],
-                         distinctByFile: Map[String, Map[Int, Long]]): Seq[DataFile] = {
+                         content: Int, equalityIds: Seq[Int]): Seq[DataFile] = {
     // footer scraping is per-file independent driver IO — a partitioned
     // write emits one file per (task, dir) and a serial scrape of hundreds
     // of footers dominates small-table commit latency (measured: ~60% of a
@@ -644,8 +628,7 @@ object IceWrite {
           Some(name -> v)
         }
       }.toSeq
-      ParquetStats.dataFile(p, conf, writeSchema, partition, content, equalityIds,
-        distinctCounts = distinctByFile.getOrElse(new Path(p).getName, Map.empty))
+      ParquetStats.dataFile(p, conf, writeSchema, partition, content, equalityIds)
     }
     if (sortedPaths.size <= 1) sortedPaths.map(statsOf)
     else {
@@ -665,9 +648,10 @@ object IceWrite {
 /** Snapshot-aware scan → DataFrame (reference: S1 — datafusion_iceberg/src/
   * table.rs:162-728). Planning is driver-side and O(manifests): manifest
   * pruning via partition summaries (P3), file pruning via column min/max,
-  * then a DataFrame over exactly the surviving parquet paths. Catalyst
-  * re-applies filters (Inexact semantics) and handles projection pruning,
-  * so pruning here only ever removes IO, never correctness.
+  * then relations built straight from the surviving manifest entries
+  * ([[readFiles]]: the manifest is the file index, no listing or stat).
+  * Catalyst re-applies filters (Inexact semantics) and handles projection
+  * pruning, so pruning here only ever removes IO, never correctness.
   */
 object IceScan {
 
@@ -693,18 +677,13 @@ object IceScan {
     */
   val NameMappingProp = "schema.name-mapping.default"
 
-  /** Renders a manifest-stored path exactly like `_metadata.file_path`
-    * (FileSystem-qualified, any scheme) — the ONE definition of path
-    * equality between manifest entries and rows derived from scans. Both
-    * the MoR delete tag-map and the positional-delete rewrite compare
-    * through this; a second inline copy drifting (e.g. on URI encoding)
-    * would make them silently disagree. */
   /** Canonical partition tag: the manifest's raw Avro partition values
     * rendered to one stable string. Byte arrays hex-encode
     * (Object.toString is identity-based and would give the SAME partition
     * different tags per manifest entry); null renders as a reserved
-    * sentinel. Shared by the MoR fold's scoped-delete anti-join keys and
-    * Maintenance's eq->pos delete conversion. */
+    * sentinel. Every [[readFiles]] row carries its file's tag as the
+    * `_metadata.partition_tag` constant — the key of the MoR fold's
+    * scoped-delete anti-joins and of Maintenance's eq->pos conversion. */
   private[graft] def pkTag(p: Seq[(String, Any)]): String = p.map {
     case (_, null) => "\u0000"
     case (_, b: Array[Byte]) => b.map("%02x".format(_)).mkString
@@ -714,10 +693,95 @@ object IceScan {
     case (_, v) => v.toString
   }.mkString("\u0001")
 
+  /** The delete-scoping rule, shared by the MoR read fold and the eq->pos
+    * conversion in [[graft.table.Maintenance]]: a delete file written
+    * unpartitioned (global equality delete) round-trips through the
+    * manifest's partition struct as all-null values, so only a delete with
+    * a real partition tuple of the data files' arity is scoped to that
+    * partition; every other delete applies table-wide. */
+  private[graft] def scopedDelete(data: Seq[ManifestEntry]): ManifestEntry => Boolean = {
+    val arity = data.headOption.map(_.dataFile.partition.size).getOrElse(0)
+    d => {
+      val p = d.dataFile.partition
+      arity > 0 && p.size == arity && p.exists(_._2 != null)
+    }
+  }
+
+  /** Renders a manifest-stored path FileSystem-qualified (any scheme), the
+    * form [[readFiles]] hands Spark, so it equals the `_metadata.file_path`
+    * that positional-delete rows and DV `referenced_data_file` store — the
+    * ONE definition of path equality between manifest entries and those
+    * keys (the positional-delete live-path joins compare through it). */
   private[graft] def qualifiedPath(hconf: org.apache.hadoop.conf.Configuration,
                                    p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
     hp.getFileSystem(hconf).makeQualified(hp).toString
+  }
+
+  /** The one reader of table files: a DataFrame over exactly `entries`
+    * (data or delete files the table lists) read with `schema`. The
+    * relation is built straight from the manifest — a [[ManifestFileIndex]]
+    * at the manifest's sizes, no `DataSource` resolution, no stat or
+    * listing — and each file's partition tag, sequence number and
+    * `first_row_id` ride as `_metadata` constants ([[ManifestParquetFormat]]).
+    *
+    * The entries' exact row and byte sums (and, for the field ids
+    * `columnOf` names, the summed distinct_counts — a safe overestimate) reach
+    * the optimizer as the relation's catalog statistics (the DSv2
+    * `SupportsReportStatistics` analogue; reference:
+    * datafusion_iceberg/src/statistics.rs:20-146). With
+    * `spark.sql.cbo.enabled` or planStats Spark then sizes the plan from
+    * rows × row width instead of compressed file bytes, which
+    * under-estimate broadcast memory several-fold at scale; with both off
+    * the byte sum equals the file index's, so default planning is unchanged.
+    */
+  private[graft] def readFiles(spark: SparkSession, entries: Seq[ManifestEntry],
+                               schema: org.apache.spark.sql.types.StructType,
+                               columnOf: Int => Option[String] = _ => None): DataFrame = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata, HadoopFsRelation, LogicalRelation}
+    // id-based column resolution (rename-safe); tolerate id-less files.
+    // Set on the CALLER's session and deliberately NOT restored: the
+    // returned DataFrame plans lazily, and Spark reads these flags from the
+    // conf of the session that runs the action — restoring here would
+    // silently revert the caller's later action to name-based resolution.
+    // Neither a per-relation option nor a child session carrying the flags
+    // is an alternative in stock Spark: ParquetFileFormat overwrites these
+    // keys from the session conf, and a child-session relation acted on by
+    // the caller reads nulls (checked on Spark 4.1.2; see the
+    // ConfHygieneSpec class doc). Both flags are no-ops for schemas without
+    // field-id metadata, so leaving them set is safe for non-graft reads.
+    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val files = entries.map { e =>
+      val d = e.dataFile
+      val tag = if (d.partition.exists(_._2 != null)) pkTag(d.partition) else null
+      FileStatusWithMetadata(
+        new org.apache.hadoop.fs.FileStatus(d.fileSizeInBytes, false, 0, 0L, 0L,
+          new org.apache.hadoop.fs.Path(qualifiedPath(hconf, d.filePath))),
+        Map(ManifestParquetFormat.PartitionTag -> tag,
+          ManifestParquetFormat.SequenceNumber -> Long.box(e.sequenceNumber.getOrElse(0L)),
+          ManifestParquetFormat.FirstRowId -> d.firstRowId.map(Long.box).orNull))
+    }
+    val dataSchema = org.apache.spark.sql.GraftShim.nullable(schema)
+    val ndv = entries.iterator.flatMap(_.dataFile.distinctCounts).toSeq
+      .groupBy(_._1).flatMap { case (id, xs) =>
+        columnOf(id).map(_ -> CatalogColumnStat(distinctCount = Some(BigInt(xs.map(_._2).sum))))
+      }
+    val stats = CatalogStatistics(
+      entries.iterator.map(e => BigInt(e.dataFile.fileSizeInBytes)).sum,
+      Some(entries.iterator.map(e => BigInt(e.dataFile.recordCount)).sum), ndv)
+    val relation = HadoopFsRelation(ManifestFileIndex(files), new org.apache.spark.sql.types.StructType(),
+      dataSchema, None, new ManifestParquetFormat, Map.empty)(spark)
+    org.apache.spark.sql.GraftShim.ofRows(spark, LogicalRelation(relation, CatalogTable(
+      identifier = TableIdentifier("__graft_scan"),
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty,
+      schema = dataSchema,
+      provider = Some("parquet"),
+      stats = Some(stats))))
   }
 
   /** The Spark schema a scan should read with: field-id metadata drives
@@ -766,19 +830,6 @@ object IceScan {
   private def scanInternal(spark: SparkSession, table: IceTable, options: ScanOptions,
                            exprsFor: org.apache.spark.sql.types.StructType =>
                              Seq[org.apache.spark.sql.catalyst.expressions.Expression]): DataFrame = {
-    // id-based column resolution (rename-safe); tolerate id-less files.
-    // Deliberately NOT restored: the returned DataFrame plans lazily, and
-    // Spark reads these flags from the SESSION conf at physical-planning
-    // time — restoring here would silently revert the caller's later action
-    // to name-based resolution. A per-relation option map is NOT an
-    // alternative in stock Spark: ParquetFileFormat overwrites these keys
-    // from the session conf when it builds the reader, so
-    // `.option("spark.sql.parquet.fieldId.read.enabled", ...)` is silently
-    // ignored (verified empirically; ConfHygieneSpec pins the behavioral
-    // consequence instead). Both flags are no-ops for schemas without
-    // field-id metadata, so leaving them set is safe for non-graft reads.
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
     val snapshot: Option[Snapshot] = options.snapshotId
       .flatMap(table.snapshotById)
       .orElse(table.currentSnapshot(options.branch))
@@ -803,16 +854,15 @@ object IceScan {
     }
   }
 
-  /** Data-file paths surviving manifest + file-stats pruning for `filters`
-    * at `snap` — the write paths (positional DELETE/UPDATE target reads)
-    * share the scan's pruning instead of reading every file. */
-  private[graft] def prunedDataFilePaths(spark: SparkSession, table: IceTable,
-                                         filters: Seq[Column], snap: Snapshot): Seq[String] = {
+  /** Data-file entries surviving manifest + file-stats pruning for
+    * `filters` at `snap` — the write paths (positional DELETE/UPDATE target
+    * reads) share the scan's pruning instead of reading every file. */
+  private[graft] def prunedDataFiles(spark: SparkSession, table: IceTable,
+                                     filters: Seq[Column], snap: Snapshot): Seq[ManifestEntry] = {
     val schema = table.metadata.currentSchema
     val exprs = resolveFilters(spark, schema.toSpark, filters)
     prunedEntries(table, schema, snap, exprs, None)
       .filter(_.dataFile.content == ContentData)
-      .map(_.dataFile.filePath)
   }
 
   /** CDC changelog read (natural S4 extension of the incremental scan;
@@ -1052,11 +1102,11 @@ object IceScan {
     * Partition scoping lives in the JOIN KEY, not the plan shape: one global
     * sequence-ordered fold covers every partition, with partition-scoped
     * delete files anti-joining on (equality cols, partition tag) — the tag
-    * is a canonical rendering of the manifest's partition tuple, attached to
-    * both sides by broadcast (file path → tag) maps. Union width is
-    * therefore O(distinct delete sequence points), not O(delete-affected
-    * partitions): thousands of affected partitions at 100 TB no longer
-    * explode the logical plan.
+    * is a canonical rendering of the manifest's partition tuple, which
+    * [[readFiles]] attaches to both sides as the `_metadata.partition_tag`
+    * constant. Union width is therefore O(distinct delete sequence points),
+    * not O(delete-affected partitions): thousands of affected partitions at
+    * 100 TB no longer explode the logical plan.
     */
   private def buildDataFrame(spark: SparkSession, table: IceTable, schema: IceSchema,
                              sparkSchema: org.apache.spark.sql.types.StructType,
@@ -1074,15 +1124,9 @@ object IceScan {
     // the same metadata columns the positional masks do
     val withPos = posAll.nonEmpty || rowLineage
 
-    val arity = data.headOption.map(_.dataFile.partition.size).getOrElse(0)
-    // a delete file written unpartitioned (global equality delete) round-trips
-    // through the manifest's partition struct as all-null values — only a
-    // delete with a real partition tuple is scoped to that partition
-    val (scoped, global) = deletes.partition { d =>
-      val p = d.dataFile.partition
-      arity > 0 && p.size == arity && p.exists(_._2 != null)
-    }
-    val needPath = withPos || scoped.nonEmpty
+    val (scoped, global) = deletes.partition(scopedDelete(data))
+    // the partition-tag key column of the scoped-delete anti-joins
+    val TagCol = "__graft_pk"
 
     // delete-side broadcast size gate on the manifest's file_size_in_bytes,
     // which the driver already holds ([[deleteFitsBroadcast]])
@@ -1117,97 +1161,67 @@ object IceScan {
         StructField("_last_updated_sequence_number", LongType, nullable = true,
           md(LastUpdatedSeqFieldId)))
     }
-    /** Attaches/completes the lineage columns for one file group.
-      * Virtual files derive both from the broadcast (path → first_row_id,
-      * seq) map; MATERIALIZED files keep their stored `_row_id` and
-      * COALESCE a null `_last_updated_sequence_number` to the file's
-      * sequence number — an UPDATE writes replacement rows with their
-      * preserved ids but leaves the sequence column null, because the
-      * commit's sequence number is only final at commit time (CAS retries
-      * re-stamp manifests, never parquet). */
-    def attachLineage(df: DataFrame, es: Seq[ManifestEntry],
-                      materialized: Boolean): DataFrame = {
-      val hc = spark.sparkContext.hadoopConfiguration
-      val rows = es.map { e =>
-        val first: java.lang.Long =
-          if (materialized) e.dataFile.firstRowId.map(Long.box).orNull
-          else Long.box(e.dataFile.firstRowId.getOrElse(throw new IllegalStateException(
-            s"row-lineage scan: data file ${e.dataFile.filePath} has neither an " +
-              "assigned first_row_id nor a materialized _row_id column (it predates " +
-              "write.row-lineage.enabled) — compact() the table to backfill lineage")))
-        (IceScan.qualifiedPath(hc, e.dataFile.filePath), first,
-          e.sequenceNumber.getOrElse(0L))
-      }
-      val joined = df.join(broadcast(rows.toDF("__lin_path", "__lin_first", "__lin_seq")),
-        df("__graft_path") === col("__lin_path"), "left")
-      val completed =
-        if (materialized) joined
-          .withColumn("_row_id", col("_row_id"))
-          .withColumn("_last_updated_sequence_number",
-            coalesce(col("_last_updated_sequence_number"), col("__lin_seq")))
-        else joined
-          .withColumn("_row_id", col("__lin_first") + col("__graft_pos"))
-          .withColumn("_last_updated_sequence_number", col("__lin_seq"))
-      completed.drop("__lin_path", "__lin_first", "__lin_seq")
-    }
-
-    def readFiles(entries: Seq[ManifestEntry]): DataFrame =
+    def readData(entries: Seq[ManifestEntry]): DataFrame =
       if (entries.isEmpty) {
+        import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
         var fields = sparkSchema.fields
-        if (needPath) fields = fields :+
-          org.apache.spark.sql.types.StructField("__graft_path", org.apache.spark.sql.types.StringType)
-        if (withPos) fields = fields :+
-          org.apache.spark.sql.types.StructField("__graft_pos", org.apache.spark.sql.types.LongType)
+        if (withPos) fields = fields ++ Seq(StructField("__graft_path", StringType),
+          StructField("__graft_pos", LongType))
+        if (scoped.nonEmpty) fields = fields :+ StructField(TagCol, StringType)
         if (rowLineage) fields = fields ++ lineageStructFields
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(fields))
+          StructType(fields))
       } else if (defaultedFields.nonEmpty || rowLineage) {
         entries.groupBy(e => (missingDefaulted(e), rowLineage && hasMatLineage(e)))
           .toSeq.sortBy { case ((miss, mat), _) => (miss.mkString(","), mat) }
           .map { case ((miss, mat), es) =>
-            val base = readFileGroup(es, materializedLineage = mat)
-            val filled = miss.foldLeft(base) { (df, id) =>
+            miss.foldLeft(readFileGroup(es, materializedLineage = mat)) { (df, id) =>
               val f = schema.fieldById(id).get
               df.withColumn(f.name,
                 graft.spec.DefaultValues.toColumn(f.fieldType, f.initialDefault.get))
             }
-            if (rowLineage) attachLineage(filled, es, materialized = mat) else filled
           }.reduce(_ unionByName _)
       } else readFileGroup(entries)
 
+    /** One read of a data-file group, with the `_metadata` columns the
+      * masks, the scoped-delete fold and row lineage key on. Lineage:
+      * virtual files derive `_row_id` as first_row_id + row position and
+      * take the file's sequence number; MATERIALIZED files keep their
+      * stored `_row_id` and COALESCE a null `_last_updated_sequence_number`
+      * to the file's sequence number — an UPDATE writes replacement rows
+      * with their preserved ids but leaves the sequence column null,
+      * because the commit's sequence number is only final at commit time
+      * (CAS retries re-stamp manifests, never parquet). */
     def readFileGroup(entries: Seq[ManifestEntry],
                       materializedLineage: Boolean = false): DataFrame = {
-        val readSchema =
-          if (materializedLineage)
-            org.apache.spark.sql.types.StructType(sparkSchema.fields ++ lineageStructFields)
-          else sparkSchema
-        val df = spark.read.schema(readSchema).parquet(entries.map(_.dataFile.filePath): _*)
-        val withMeta0 =
-          if (needPath) df.withColumn("__graft_path", col("_metadata.file_path")) else df
-        val withMeta =
-          if (withPos) withMeta0.withColumn("__graft_pos", col("_metadata.row_index"))
-          else withMeta0
-        // exact row/byte totals from the surviving manifest entries → the
-        // optimizer (SupportsReportStatistics analogue; rows × width sizing
-        // under CBO/planStats instead of compressed-bytes underestimates).
-        // Per-column NDVs (summed across files — a safe overestimate) ride
-        // along when the table populates distinct_counts at write.
-        val ndv: Map[String, Long] = entries.iterator
-          .flatMap(_.dataFile.distinctCounts).toSeq
-          .groupBy(_._1).flatMap { case (id, xs) =>
-            schema.fieldById(id).map(_.name -> xs.map(_._2).sum)
-          }
-        org.apache.spark.sql.GraftShim.withScanStats(spark, withMeta,
-          entries.iterator.map(e => BigInt(e.dataFile.recordCount)).sum,
-          entries.iterator.map(e => BigInt(e.dataFile.fileSizeInBytes)).sum,
-          ndv)
+      val readSchema =
+        if (materializedLineage)
+          org.apache.spark.sql.types.StructType(sparkSchema.fields ++ lineageStructFields)
+        else sparkSchema
+      val meta = scala.collection.immutable.ListMap.newBuilder[String, Column]
+      if (withPos) meta ++= Seq("__graft_path" -> col("_metadata.file_path"),
+        "__graft_pos" -> col("_metadata.row_index"))
+      if (scoped.nonEmpty) meta += TagCol -> ManifestParquetFormat.partitionTag
+      val seq = ManifestParquetFormat.sequenceNumber
+      if (rowLineage && materializedLineage)
+        meta += "_last_updated_sequence_number" -> coalesce(col("_last_updated_sequence_number"), seq)
+      else if (rowLineage) {
+        entries.find(_.dataFile.firstRowId.isEmpty).foreach(e => throw new IllegalStateException(
+          s"row-lineage scan: data file ${e.dataFile.filePath} has neither an " +
+            "assigned first_row_id nor a materialized _row_id column (it predates " +
+            "write.row-lineage.enabled) — compact() the table to backfill lineage"))
+        meta ++= Seq("_row_id" -> (ManifestParquetFormat.firstRowId + col("_metadata.row_index")),
+          "_last_updated_sequence_number" -> seq)
       }
+      val df = IceScan.readFiles(spark, entries, readSchema, id => schema.fieldById(id).map(_.name))
+      val extra = meta.result()
+      if (extra.isEmpty) df else df.withColumns(extra)
+    }
 
     def maskParquetPositions(df: DataFrame): DataFrame =
       if (posDeletes.isEmpty) df
       else {
-        val delDf = spark.read.schema(IceWrite.PosDeleteSchema.toSpark)
-          .parquet(posDeletes.map(_.dataFile.filePath): _*)
+        val delDf = IceScan.readFiles(spark, posDeletes, IceWrite.PosDeleteSchema.toSpark)
           .select(col("file_path").as("__graft_path"), col("pos").as("__graft_pos"))
         df.join(maybeBroadcast(delDf, posDeletes.map(_.dataFile.fileSizeInBytes).sum),
           Seq("__graft_path", "__graft_pos"), "left_anti")
@@ -1264,34 +1278,7 @@ object IceScan {
       if (!withPos) df
       else maskDvPositions(maskParquetPositions(df)).drop("__graft_path", "__graft_pos")
 
-    if (deletes.isEmpty) return maskPositions(readFiles(data))
-
-    // canonical partition tag ([[IceScan.pkTag]], shared with the
-    // eq→pos delete conversion in Maintenance)
-    val TagCol = "__graft_pk"
-    def pkTag(p: Seq[(String, Any)]): String = IceScan.pkTag(p)
-
-    // tag-map keys must render exactly like `_metadata.file_path` (which is
-    // FileSystem-qualified, e.g. "file:/tmp/…"), while manifests may store
-    // raw paths — qualify driver-side with the same Hadoop resolution
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def qualified(p: String): String = IceScan.qualifiedPath(hconf, p)
-
-    // (data file path → tag) for files in delete-affected partitions ONLY:
-    // clean partitions keep a null tag and can never match a scoped delete
-    // (equi-join null semantics), so the broadcast map stays proportional to
-    // the affected region, not the table
-    val affectedTags: Set[String] = scoped.map(d => pkTag(d.dataFile.partition)).toSet
-    val dataTags: Seq[(String, String)] = data.flatMap { e =>
-      val t = pkTag(e.dataFile.partition)
-      if (affectedTags.contains(t)) Some(qualified(e.dataFile.filePath) -> t) else None
-    }
-    lazy val dataTagDf = broadcast(dataTags.toDF("__graft_tpath", TagCol))
-    def tagged(df: DataFrame): DataFrame =
-      if (scoped.isEmpty) df
-      else if (dataTags.isEmpty) df.withColumn(TagCol, lit(null).cast("string"))
-      else df.join(dataTagDf, df("__graft_path") === col("__graft_tpath"), "left")
-        .drop("__graft_tpath")
+    if (deletes.isEmpty) return maskPositions(readData(data))
 
     /** ONE sequence-ordered fold across all partitions (table.rs:498-679):
       * ascending sequence order, deletes before data at equal sequence (a
@@ -1308,7 +1295,7 @@ object IceScan {
       for (ds <- delSeqs) {
         val (older, newer) = remaining.partition(_.sequenceNumber.getOrElse(0L) < ds)
         if (older.nonEmpty) {
-          val df = tagged(readFiles(older))
+          val df = readData(older)
           acc = if (acc == null) df else acc.unionByName(df)
         }
         remaining = newer
@@ -1321,14 +1308,8 @@ object IceScan {
             .partition(scoped.contains)
           for ((eqIds, files) <- scopedAt.groupBy(_.dataFile.equalityIds).toSeq.sortBy(_._1.mkString(","))) {
             val eqCols = eqIds.flatMap(id => schema.fieldById(id)).map(_.name)
-            val delTagDf = broadcast(
-              files.map(f => (qualified(f.dataFile.filePath), pkTag(f.dataFile.partition)))
-                .toDF("__graft_dpath", TagCol))
-            val delDf = spark.read.schema(eqSchemaOf(eqCols))
-              .parquet(files.map(_.dataFile.filePath): _*)
-              .withColumn("__graft_dfp", col("_metadata.file_path"))
-              .join(delTagDf, col("__graft_dfp") === col("__graft_dpath"))
-              .select((eqCols.map(col) :+ col(TagCol)): _*)
+            val delDf = IceScan.readFiles(spark, files, eqSchemaOf(eqCols))
+              .select((eqCols.map(col) :+ ManifestParquetFormat.partitionTag.as(TagCol)): _*)
             // NULL-SAFE key equality (<=>): the Iceberg spec's equality
             // deletes match null to null — a USING join would silently
             // never mask a null-keyed row (it then survives forever next
@@ -1340,26 +1321,23 @@ object IceScan {
           }
           for ((eqIds, files) <- globalAt.groupBy(_.dataFile.equalityIds).toSeq.sortBy(_._1.mkString(","))) {
             val eqCols = eqIds.flatMap(id => schema.fieldById(id)).map(_.name)
-            val delDf = spark.read.schema(eqSchemaOf(eqCols))
-              .parquet(files.map(_.dataFile.filePath): _*)
+            val delDf = IceScan.readFiles(spark, files, eqSchemaOf(eqCols))
             val bd = maybeBroadcast(delDf, files.map(_.dataFile.fileSizeInBytes).sum)
             acc = acc.join(bd,
               eqCols.map(c => acc(c) <=> bd(c)).reduce(_ && _), "left_anti")
           }
         }
       }
-      val newerDf = if (remaining.nonEmpty) Some(tagged(readFiles(remaining))) else None
+      val newerDf = if (remaining.nonEmpty) Some(readData(remaining)) else None
       (Option(acc), newerDf) match {
         case (Some(a), Some(n)) => a.unionByName(n)
         case (Some(a), None) => a
         case (None, Some(n)) => n
-        case (None, None) => tagged(readFiles(Nil))
+        case (None, None) => readData(Nil)
       }
     }
 
     val folded = fold()
-    val untagged = if (scoped.nonEmpty) folded.drop(TagCol) else folded
-    val result = maskPositions(untagged)
-    if (needPath && !withPos) result.drop("__graft_path") else result
+    maskPositions(if (scoped.nonEmpty) folded.drop(TagCol) else folded)
   }
 }

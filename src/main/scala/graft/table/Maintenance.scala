@@ -230,7 +230,7 @@ object Maintenance {
       .map(e => graft.spark.IceScan.qualifiedPath(hconf, e.dataFile.filePath))
       .toDF("live_path")
     val total = pos.map(_.dataFile.recordCount).sum
-    val kept = spark.read.parquet(pos.map(_.dataFile.filePath): _*)
+    val kept = graft.spark.IceScan.readFiles(spark, pos, graft.spark.IceWrite.PosDeleteSchema.toSpark)
       .join(live, col("file_path") === col("live_path"), "left_semi")
       .cache() // read twice: the dangling count + the consolidated write
     val keptCount = kept.count()
@@ -278,8 +278,7 @@ object Maintenance {
     // distributed per-file bitmap build over the surviving delete rows; only
     // the serialized vectors come to the driver
     val perFile: Seq[(String, Array[Byte])] =
-      spark.read.schema(graft.spark.IceWrite.PosDeleteSchema.toSpark)
-        .parquet(pos.map(_.dataFile.filePath): _*)
+      graft.spark.IceScan.readFiles(spark, pos, graft.spark.IceWrite.PosDeleteSchema.toSpark)
         .join(live, col("file_path") === col("live_path"), "left_semi")
         .select(col("file_path"), col("pos"))
         .toDF("_1", "_2").as[(String, Long)]
@@ -351,8 +350,7 @@ object Maintenance {
     * Returns (equality files before, positional files after, positions
     * written). */
   def convertEqualityDeletes(spark: SparkSession, table: IceTable): (Int, Int, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     import graft.spark.{IceScan, IceWrite}
     val snap = table.currentSnapshot(None).getOrElse(return (0, 0, 0L))
     val all = table.entries(snap)
@@ -365,117 +363,92 @@ object Maintenance {
     if (eq.isEmpty) return (0, oldPos.size, 0L)
     val data = all.filter(_.dataFile.content == ContentData)
     val schema = table.metadata.currentSchema
-    val hconf = spark.sparkContext.hadoopConfiguration
+    // the scan's scoping rule, so the conversion masks what the scan does
+    val scopedOf = IceScan.scopedDelete(data)
+    val tagCol = graft.spark.ManifestParquetFormat.partitionTag
+    val seqCol = graft.spark.ManifestParquetFormat.sequenceNumber
 
-    // the scan's scoping rule (IceSpark.buildDataFrame): a delete with a
-    // real partition tuple of the data arity is partition-scoped
-    val arity = data.headOption.map(_.dataFile.partition.size).getOrElse(0)
-    def scopedOf(d: ManifestEntry): Boolean = {
-      val p = d.dataFile.partition
-      arity > 0 && p.size == arity && p.exists(_._2 != null)
-    }
-
-    // field-id column resolution for every read below (restored: all
-    // actions complete inside this call — the positionDeleteFiles pattern)
-    val fieldIdConfs = Seq("spark.sql.parquet.fieldId.read.enabled",
-      "spark.sql.parquet.fieldId.read.ignoreMissing")
-    val prev = fieldIdConfs.map(k => k -> spark.conf.getOption(k))
-    fieldIdConfs.foreach(spark.conf.set(_, "true"))
-    try {
-      // ONE group per eq-id KEY SET (not per delete wave): sequence points
-      // and partition scopes become per-row join predicates, so each
-      // candidate data file is read once however many waves key on it
-      val groups = eq.groupBy(_.dataFile.equalityIds)
-        .toSeq.sortBy(_._1.mkString(","))
-      val parts = groups.flatMap { case (eqIds, files) =>
-        val eqCols = eqIds.flatMap(id => schema.fieldById(id)).map(_.name)
-        // an unconvertible group must ABORT the op: rewriteDeletes below
-        // drops ALL equality files, so skipping this group would silently
-        // resurface its deleted rows forever
-        require(eqCols.size == eqIds.size,
-          s"cannot convert equality-delete group keyed on field ids " +
-            s"${eqIds.mkString(", ")}: ${eqIds.count(id => schema.fieldById(id).isEmpty)} " +
-            "id(s) no longer resolve in the current schema (a schema evolution dropped " +
-            "a keyed column) — the conversion is aborted; no deletes were rewritten")
-        // per delete file: (qualified path, sequence point, scope tag | null)
-        val delMeta = files.map { f =>
-          (IceScan.qualifiedPath(hconf, f.dataFile.filePath),
-            f.sequenceNumber.getOrElse(0L),
-            if (scopedOf(f)) IceScan.pkTag(f.dataFile.partition) else null)
-        }
-        // a data file is a candidate iff at least one delete of the set
-        // applies to it (strictly older; tag-matched for scoped deletes)
-        val candidates = data.filter { e =>
-          val dseq = e.sequenceNumber.getOrElse(0L)
-          lazy val dtag = IceScan.pkTag(e.dataFile.partition)
-          delMeta.exists { case (_, ds, tag) =>
-            dseq < ds && (tag == null || tag == dtag) }
-        }
-        if (candidates.isEmpty) None
-        else {
-          val candMeta = candidates.map(e =>
-            (IceScan.qualifiedPath(hconf, e.dataFile.filePath),
-              e.sequenceNumber.getOrElse(0L),
-              IceScan.pkTag(e.dataFile.partition)))
-          val rows = spark.read
-            .schema(IceScan.readSparkSchema(table, schema.project(eqIds)))
-            .parquet(candidates.map(_.dataFile.filePath): _*)
-            .select(eqCols.map(col) ++ Seq(
-              col("_metadata.file_path").as("file_path"),
-              col("_metadata.row_index").as("pos")): _*)
-          val lhs = rows.join(
-            broadcast(candMeta.toDF("__gp_dp", "__gp_dseq", "__gp_dtag")),
-            rows("file_path") === col("__gp_dp")).drop("__gp_dp")
-          val rhs = spark.read
-            .schema(IceScan.readSparkSchema(table, schema.project(eqIds)))
-            .parquet(files.map(_.dataFile.filePath): _*)
-            .withColumn("__gp_dfp", col("_metadata.file_path"))
-            .join(broadcast(delMeta.toDF("__gp_ddp", "__gp_delseq", "__gp_deltag")),
-              col("__gp_dfp") === col("__gp_ddp"))
-            .select(eqCols.map(col) ++ Seq(col("__gp_delseq"), col("__gp_deltag")): _*)
-          // delete-side broadcast is SIZE-GATED like the MoR read fold
-          // (VERDICT r15 #5): months of accumulated MERGE residue in one
-          // key-set group can exceed the broadcast ceiling — above the
-          // gate, drop the hint and let the null-safe eq-column equi-keys
-          // carry a shuffled hash/sort-merge join (seq + tag stay as join
-          // predicates either way)
-          val l = lhs.as("d")
-          val rhsAliased = rhs.as("x")
-          val r = if (IceScan.deleteFitsBroadcast(spark,
-              files.map(_.dataFile.fileSizeInBytes).sum)) broadcast(rhsAliased)
-            else rhsAliased
-          val cond = (eqCols.map(c => col(s"d.$c") <=> col(s"x.$c")) :+
-            (col("d.__gp_dseq") < col("x.__gp_delseq")) :+
-            (col("x.__gp_deltag").isNull || col("x.__gp_deltag") === col("d.__gp_dtag")))
-            .reduce(_ && _)
-          Some(l.join(r, cond, "left_semi").select(col("file_path"), col("pos")))
-        }
+    // ONE group per eq-id KEY SET (not per delete wave): sequence points
+    // and partition scopes become per-row join predicates, so each
+    // candidate data file is read once however many waves key on it
+    val groups = eq.groupBy(_.dataFile.equalityIds)
+      .toSeq.sortBy(_._1.mkString(","))
+    val parts = groups.flatMap { case (eqIds, files) =>
+      val eqCols = eqIds.flatMap(id => schema.fieldById(id)).map(_.name)
+      // an unconvertible group must ABORT the op: rewriteDeletes below
+      // drops ALL equality files, so skipping this group would silently
+      // resurface its deleted rows forever
+      require(eqCols.size == eqIds.size,
+        s"cannot convert equality-delete group keyed on field ids " +
+          s"${eqIds.mkString(", ")}: ${eqIds.count(id => schema.fieldById(id).isEmpty)} " +
+          "id(s) no longer resolve in the current schema (a schema evolution dropped " +
+          "a keyed column) — the conversion is aborted; no deletes were rewritten")
+      // per delete file: (sequence point, scope tag | null)
+      val delPoints = files.map(f => (f.sequenceNumber.getOrElse(0L),
+        if (scopedOf(f)) IceScan.pkTag(f.dataFile.partition) else null))
+      // a data file is a candidate iff at least one delete of the set
+      // applies to it (strictly older; tag-matched for scoped deletes)
+      val candidates = data.filter { e =>
+        val dseq = e.sequenceNumber.getOrElse(0L)
+        lazy val dtag = IceScan.pkTag(e.dataFile.partition)
+        delPoints.exists { case (ds, tag) => dseq < ds && (tag == null || tag == dtag) }
       }
-      val carried =
-        if (oldPos.isEmpty) Nil
-        else Seq(spark.read.schema(IceWrite.PosDeleteSchema.toSpark)
-          .parquet(oldPos.map(_.dataFile.filePath): _*)
-          .select(col("file_path"), col("pos")))
-      val masked = (parts ++ carried) match {
-        case Nil => None
-        case xs => Some(xs.reduce(_ unionByName _).distinct().cache())
+      if (candidates.isEmpty) None
+      else {
+        val eqSchema = IceScan.readSparkSchema(table, schema.project(eqIds))
+        // data rows with their file's sequence point and partition tag,
+        // read from the per-file `_metadata` constants
+        val lhs = IceScan.readFiles(spark, candidates, eqSchema)
+          .select(eqCols.map(col) ++ Seq(
+            col("_metadata.file_path").as("file_path"),
+            col("_metadata.row_index").as("pos"),
+            seqCol.as("__gp_dseq"), tagCol.as("__gp_dtag")): _*)
+        // delete rows with their file's sequence point and scope tag: null
+        // for global deletes, which match every partition
+        val (scopedFiles, globalFiles) = files.partition(scopedOf)
+        val rhs = Seq(scopedFiles -> tagCol, globalFiles -> lit(null).cast("string"))
+          .collect { case (fs, tag) if fs.nonEmpty =>
+            IceScan.readFiles(spark, fs, eqSchema)
+              .select(eqCols.map(col) ++ Seq(seqCol.as("__gp_delseq"), tag.as("__gp_deltag")): _*)
+          }.reduce(_ unionByName _)
+        // delete-side broadcast is SIZE-GATED like the MoR read fold
+        // (VERDICT r15 #5): months of accumulated MERGE residue in one
+        // key-set group can exceed the broadcast ceiling — above the
+        // gate, drop the hint and let the null-safe eq-column equi-keys
+        // carry a shuffled hash/sort-merge join (seq + tag stay as join
+        // predicates either way)
+        val l = lhs.as("d")
+        val rhsAliased = rhs.as("x")
+        val r = if (IceScan.deleteFitsBroadcast(spark,
+            files.map(_.dataFile.fileSizeInBytes).sum)) broadcast(rhsAliased)
+          else rhsAliased
+        val cond = (eqCols.map(c => col(s"d.$c") <=> col(s"x.$c")) :+
+          (col("d.__gp_dseq") < col("x.__gp_delseq")) :+
+          (col("x.__gp_deltag").isNull || col("x.__gp_deltag") === col("d.__gp_dtag")))
+          .reduce(_ && _)
+        Some(l.join(r, cond, "left_semi").select(col("file_path"), col("pos")))
       }
-      val n = masked.map(_.count()).getOrElse(0L)
-      val newFiles =
-        if (n == 0L) Nil
-        else IceWrite.writeDataFiles(spark, table, masked.get, IceWrite.PosDeleteSchema,
-          content = ContentPositionDeletes, outFiles = IceWrite.fileCountHint(n))
-      masked.foreach(_.unpersist())
-      val committed = table.newTransaction(None).rewriteDeletes(dvKeep, newFiles).commit()
-      val after = committed.currentSnapshot(None)
-        .map(committed.entries(_).count(e => e.dataFile.content == ContentPositionDeletes &&
-          e.dataFile.fileFormat != FormatPuffin))
-        .getOrElse(0)
-      (eq.size, after, n)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
+    val carried =
+      if (oldPos.isEmpty) Nil
+      else Seq(IceScan.readFiles(spark, oldPos, IceWrite.PosDeleteSchema.toSpark)
+        .select(col("file_path"), col("pos")))
+    val masked = (parts ++ carried) match {
+      case Nil => None
+      case xs => Some(xs.reduce(_ unionByName _).distinct().cache())
+    }
+    val n = masked.map(_.count()).getOrElse(0L)
+    val newFiles =
+      if (n == 0L) Nil
+      else IceWrite.writeDataFiles(spark, table, masked.get, IceWrite.PosDeleteSchema,
+        content = ContentPositionDeletes, outFiles = IceWrite.fileCountHint(n))
+    masked.foreach(_.unpersist())
+    val committed = table.newTransaction(None).rewriteDeletes(dvKeep, newFiles).commit()
+    val after = committed.currentSnapshot(None)
+      .map(committed.entries(_).count(e => e.dataFile.content == ContentPositionDeletes &&
+        e.dataFile.fileFormat != FormatPuffin))
+      .getOrElse(0)
+    (eq.size, after, n)
   }
 
   /** Rebalances the data manifest tree without touching data: many small
@@ -521,8 +494,8 @@ object Maintenance {
     if (primFields.isEmpty) return 0
     val aggs = primFields.map(f => approx_count_distinct(col(f.name)).as(f.name))
     val ndvByFile: Map[String, Map[Int, Long]] =
-      spark.read.schema(graft.spark.IceScan.readSparkSchema(table, table.schema))
-        .parquet(entries.map(_.dataFile.filePath): _*)
+      graft.spark.IceScan.readFiles(spark, entries,
+          graft.spark.IceScan.readSparkSchema(table, table.schema))
         .groupBy(col("_metadata.file_path").as("__p"))
         .agg(aggs.head, aggs.tail: _*)
         .collect() // one row per data file — metadata scale

@@ -24,8 +24,7 @@ object ParquetStats {
 
   def dataFile(path: String, conf: Configuration, schema: IceSchema,
                partition: Seq[(String, Any)], content: Int = 0,
-               equalityIds: Seq[Int] = Nil,
-               distinctCounts: Map[Int, Long] = Map.empty): DataFile = {
+               equalityIds: Seq[Int] = Nil): DataFile = {
     val file = HadoopInputFile.fromPath(new Path(path), conf)
     val reader = ParquetFileReader.open(file)
     try {
@@ -81,7 +80,6 @@ object ParquetStats {
         columnSizes = columnSizes,
         valueCounts = valueCounts,
         nullValueCounts = nullCounts,
-        distinctCounts = distinctCounts,
         lowerBounds = lowerBounds.view.filterKeys(statsValid).toMap
           .map { case (k, v) => k -> ValueCodec.toBytes(v) },
         upperBounds = upperBounds.view.filterKeys(statsValid).toMap

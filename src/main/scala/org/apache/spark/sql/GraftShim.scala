@@ -52,40 +52,11 @@ object GraftShim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Feeds graft's manifest-aggregated statistics to the optimizer (the
-    * DSv2 `SupportsReportStatistics` analogue for graft's rewrite-based read
-    * path; reference: `datafusion_iceberg/src/statistics.rs:20-146`): the
-    * scan's file-group relations get a `CatalogStatistics` carrying the
-    * EXACT row count and on-disk byte sum from the surviving manifest
-    * entries. With `spark.sql.cbo.enabled` or planStats, Spark then sizes
-    * the plan from rows × row-width — the in-memory estimate — instead of
-    * zstd-compressed file bytes, which under-estimate broadcast memory
-    * several-fold at scale. With both off, the byte sum equals the file
-    * index's number, so default behavior is unchanged.
-    */
-  def withScanStats(spark: SparkSession, df: DataFrame,
-                    rowCount: BigInt, sizeInBytes: BigInt,
-                    ndv: Map[String, Long] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    // NDVs (from manifest distinct_counts, when the table populates them)
-    // become per-column catalog stats → CBO join-cardinality estimates
-    val colStats = ndv.map { case (name, n) =>
-      name -> CatalogColumnStat(distinctCount = Some(BigInt(n)))
-    }
-    val planned = df.queryExecution.analyzed transform {
-      case l: LogicalRelation if l.catalogTable.isEmpty =>
-        l.copy(catalogTable = Some(CatalogTable(
-          identifier = TableIdentifier("__graft_scan"),
-          tableType = CatalogTableType.EXTERNAL,
-          storage = CatalogStorageFormat.empty,
-          schema = l.schema,
-          provider = Some("parquet"),
-          stats = Some(CatalogStatistics(sizeInBytes, Some(rowCount), colStats)))))
-    }
-    ofRows(spark, planned)
-  }
+  /** A schema with every field nullable at every depth (`asNullable` is
+    * `private[spark]`) — how file sources expose a user-specified schema,
+    * so a relation built from a table schema reads like a path-built one. */
+  def nullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 
   /** Registers a listener summing a per-task metric (e.g.
     * `executorCpuTime`, `inputMetrics.recordsRead`) into the returned

@@ -9,19 +9,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class BoxStateSpec extends AnyFunSuite {
 
   test("recordPath: only untainted full runs at the official width write BENCH_full.json") {
+    // records land in the working tree that runs the bench
+    def inTree(name: String) = java.nio.file.Paths.get(sys.props("user.dir"), name).toString
     assert(Bench.recordPath(isSubset = false, tainted = false, cpus = 32) ===
-      "/root/repo/BENCH_full.json")
+      inTree("BENCH_full.json"))
     // the r13 clobber: a tainted full run must route AWAY from the record
     assert(Bench.recordPath(isSubset = false, tainted = true, cpus = 32) ===
-      "/root/repo/BENCH_tainted.json")
+      inTree("BENCH_tainted.json"))
     // the silent-default trap: local[4] produces an official-looking file
     assert(Bench.recordPath(isSubset = false, tainted = false, cpus = 4) ===
-      "/root/repo/BENCH_tainted.json")
+      inTree("BENCH_tainted.json"))
     // subset runs keep their scratch file regardless of taint
     assert(Bench.recordPath(isSubset = true, tainted = false, cpus = 32) ===
-      "/root/repo/BENCH_only.json")
+      inTree("BENCH_only.json"))
     assert(Bench.recordPath(isSubset = true, tainted = true, cpus = 4) ===
-      "/root/repo/BENCH_only.json")
+      inTree("BENCH_only.json"))
   }
 
   test("foreignShare: subtracts own-lineage ticks from the box's busy ticks") {

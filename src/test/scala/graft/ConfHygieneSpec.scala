@@ -8,11 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Session-conf hygiene: graft operations must not leak settings into
   * unrelated reads/writes in the same long-lived session. The two
-  * deliberately-persistent flags (`spark.sql.parquet.fieldId.read.*`) are
-  * pinned as behavioral no-ops for non-graft reads — a per-relation option
-  * is NOT available in stock Spark (ParquetFileFormat overwrites these keys
-  * from the session conf when building the reader, so `.option(...)` on the
-  * DataFrameReader is silently ignored; verified empirically).
+  * deliberately-persistent flags (`spark.sql.parquet.fieldId.read.*`),
+  * which every table-file read sets on the caller's session, are pinned as
+  * behavioral no-ops for non-graft reads. They have to live on the caller's
+  * session: a per-relation option is ignored (ParquetFileFormat overwrites
+  * these keys from the session conf when building the reader), and a
+  * relation planned on a child session that holds the flags reads a
+  * renamed column as all nulls once the caller's session runs the action,
+  * with the vectorized reader on and off (both checked on Spark 4.1.2).
   */
 class ConfHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
 

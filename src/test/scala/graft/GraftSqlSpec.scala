@@ -88,9 +88,9 @@ class GraftSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL partition filter prunes data files before the parquet scan") {
-    // the pruned file list is the InMemoryFileIndex the optimizer-time
-    // rewrite injected — count it from the optimized plan (IO-level gate;
-    // AQE-independent, unlike FileSourceScanExec traversal)
+    // the pruned file list is the manifest-backed file index the
+    // optimizer-time rewrite injected — count it from the optimized plan
+    // (IO-level gate; AQE-independent, unlike FileSourceScanExec traversal)
     def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect {
         case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>

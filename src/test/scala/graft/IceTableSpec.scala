@@ -732,13 +732,13 @@ class IceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     table = IceWrite.append(spark, table, batch1) // 2 partitions (2 dates)
     val snap = table.currentSnapshot(None).get
     val all = table.dataFiles(snap).map(_.dataFile.filePath)
-    val pruned = IceScan.prunedDataFilePaths(spark, table,
-      Seq(col("date") === lit("2020-01-01")), snap)
+    val pruned = IceScan.prunedDataFiles(spark, table,
+      Seq(col("date") === lit("2020-01-01")), snap).map(_.dataFile.filePath)
     assert(pruned.nonEmpty && pruned.size < all.size,
       s"delete-path pruning read ${pruned.size}/${all.size} files")
     // foldable scalar calls must prune too (resolveFilters constant-folds)
-    val prunedFoldable = IceScan.prunedDataFilePaths(spark, table,
-      Seq(col("date") === to_date(lit("2020-01-01"))), snap)
+    val prunedFoldable = IceScan.prunedDataFiles(spark, table,
+      Seq(col("date") === to_date(lit("2020-01-01"))), snap).map(_.dataFile.filePath)
     assert(prunedFoldable.toSet == pruned.toSet,
       s"foldable predicate did not prune: ${prunedFoldable.size}/${all.size}")
     // and the delete itself is still exact
@@ -761,6 +761,46 @@ class IceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     table = IceWrite.appendPositionDeletes(spark, table, col("pid") === 1)
     assert(IceScan.scan(spark, table).filter(col("pid") === 1).count() == 0)
     assert(IceScan.scan(spark, table).count() == 2)
+  }
+
+  test("every table-file reader resolves a renamed column by field id on a fresh session") {
+    import spark.implicits._
+    import graft.table.Maintenance
+    // each reader runs first on its own fresh session (no graft read has
+    // set the field-id flags there yet); the files carry the OLD name v
+    val cat = freshCatalog()
+    val schema = IceSchema(0, Seq(
+      NestedField(1, "id", required = false, IceType.LongT),
+      NestedField(2, "v", required = false, IceType.LongT)))
+    val rows = (1L to 10L).map(i => (i, i % 7)) // 7 distinct v values
+    def renamed(name: String): graft.table.IceTable = {
+      val ident = TableIdent(Seq("test"), name)
+      val t = IceWrite.append(spark, cat.createTable(ident, schema, PartitionSpec(0, Nil)),
+        rows.toDF("id", "v"))
+      t.newTransaction(None).setSchema(IceSchema(t.schema.schemaId,
+        t.schema.fields.map(f => if (f.name == "v") f.copy(name = "w") else f),
+        t.schema.identifierFieldIds)).commit()
+      cat.loadTable(ident).get
+    }
+    def contents(t: graft.table.IceTable): Seq[(Long, Long)] =
+      IceScan.scan(spark.newSession(), t).orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val survivors = rows.filterNot(_._2 == 3L) // w = 3 is ids 3 and 10
+
+    assert(contents(renamed("rs_scan")) == rows)
+    assert(contents(IceWrite.appendPositionDeletes(spark.newSession(), renamed("rs_pos"),
+      col("w") === 3L)) == survivors)
+    assert(contents(IceWrite.appendDeletionVectors(spark.newSession(), renamed("rs_dv"),
+      col("w") === 3L)) == survivors)
+    val eq = IceWrite.appendEqualityDeletes(spark, renamed("rs_eq"), Seq(3L).toDF("w"),
+      equalityIds = Seq(2))
+    assert(Maintenance.convertEqualityDeletes(spark.newSession(), eq) == ((1, 1, 2L)))
+    assert(contents(cat.loadTable(TableIdent(Seq("test"), "rs_eq")).get) == survivors)
+    val stats = renamed("rs_stats")
+    assert(Maintenance.computeStats(spark.newSession(), stats) == 1)
+    val counted = cat.loadTable(TableIdent(Seq("test"), "rs_stats")).get
+    assert(counted.entries(counted.currentSnapshot(None).get)
+      .map(_.dataFile.distinctCounts.get(2)) == Seq(Some(7L)))
   }
 
   test("rewrite_position_delete_files consolidates masks; reads and eq-delete sequencing unchanged") {

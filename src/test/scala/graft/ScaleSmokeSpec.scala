@@ -141,9 +141,9 @@ class ScaleSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val official = sys.props.contains("graft.scale.smoke.dir") &&
       checks.keySet == ExpectedChecks && checks.values.forall(identity) &&
       !taintVerdict
-    val path = if (official) "/root/repo/SCALE_SMOKE.json"
-               else "/root/repo/SCALE_SMOKE_ci.json"
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+    val path = java.nio.file.Paths.get(sys.props("user.dir"),
+      if (official) "SCALE_SMOKE.json" else "SCALE_SMOKE_ci.json")
+    java.nio.file.Files.write(path,
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 

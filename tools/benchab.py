@@ -23,9 +23,10 @@ today's box -- any round-over-round inflation is box-state, and the A/B
 anchors the next benchdiff.  A ratio well above 1.0 on a quiet box is a
 REAL regression; the per-query table names the movers.
 
-Both trees' Bench mains write /root/repo/BENCH_*.json (absolute paths),
-so each run's record is snapshotted immediately and the repo's committed
-records are restored from git afterwards.
+Each tree's Bench main writes its BENCH_*.json into its own checkout (the
+working directory it runs in), so each run's record is snapshotted
+immediately and this checkout's committed records are restored from git
+afterwards.
 
 Usage: python3 tools/benchab.py OLD_COMMIT [--runs 2] [--sf /root/testdata/sf0.1] [--cpus 32]
 """
@@ -38,7 +39,8 @@ import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+# the checkout this script lives in (tools/ is one level below its root)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKTREE = "/tmp/benchab_old"
 RECORDS = ["BENCH_full.json", "BENCH_tainted.json", "BENCH_only.json"]
 
@@ -154,7 +156,7 @@ def main():
             settle()
             new_recs.append(run_bench(REPO, args.sf, args.cpus, f"new#{i + 1}"))
     finally:
-        # both Bench mains wrote /root/repo/BENCH_*.json -- restore any
+        # the new side's Bench wrote this checkout's BENCH_*.json -- restore any
         # committed record (one checkout per file: a single multi-pathspec
         # checkout aborts wholesale on the first untracked name)
         for rec in RECORDS:
