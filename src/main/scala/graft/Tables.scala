@@ -84,7 +84,8 @@ object Tables {
     tsUnitCache.computeIfAbsent(
       s"$file#$column#${st.getModificationTime}#${st.getLen}", { _ =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       try {
         reader.getFooter.getFileMetaData.getSchema.getType(Seq(column): _*)
           .getLogicalTypeAnnotation match {

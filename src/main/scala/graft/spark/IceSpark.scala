@@ -1,11 +1,24 @@
 package graft.spark
 
-import java.net.URLDecoder
 import java.util.UUID
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.{CoalesceExec, SQLExecution, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType}
 
 import graft.core.{Pruning, Transform}
 import graft.spec.{IceSchema, IceType, Snapshot}
@@ -16,11 +29,18 @@ import graft.table.{IceTable, ParquetStats}
   * table.rs:740-792 + iceberg-rust/src/arrow/write.rs:89-266).
   *
   * The reference's per-partition fan-out stream becomes
-  * `repartition(partitionExprs)` + `partitionBy` parquet tasks — Spark's
-  * shuffle is the cluster-scale analogue of the reference's in-process
-  * channel split (SURVEY §3.2). File rolling uses maxRecordsPerFile derived
-  * from the 512 MB target (write.rs:66); compression matches the reference
-  * default zstd level 1 (table/mod.rs:75-85).
+  * `repartition(partitionExprs)` + hive-style partition-dir parquet tasks —
+  * Spark's shuffle is the cluster-scale analogue of the reference's
+  * in-process channel split (SURVEY §3.2). File rolling uses
+  * maxRecordsPerFile derived from the 512 MB target (write.rs:66);
+  * compression matches the reference default zstd level 1
+  * (table/mod.rs:75-85).
+  *
+  * Like the reference's writer, each write returns its own `DataFile`s: one
+  * planned write runs through Spark's `FileFormatWriter`, and every task
+  * reads the footer of each file it closes and returns the stats with its
+  * task commit ([[DataFileTracker]], S10's "accumulate during write"). The
+  * driver lists nothing and opens no footer.
   */
 object IceWrite {
 
@@ -88,8 +108,7 @@ object IceWrite {
     * must not pass work that mutates shared session state (setting the
     * reader's constant field-id flags is the one benign exception).
     * If `a` throws, the pending `b` job finishes into its own orphaned
-    * staging dir and is never committed — the same abandonment any failed
-    * write leaves. */
+    * staging dir and is never committed. */
   private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -413,92 +432,110 @@ object IceWrite {
           }
         }
       }
-    // physical partition-dir columns carry a reserved prefix: partitionBy
-    // REMOVES its columns from the file contents, and an identity-transform
-    // partition field shares its source column's name — without the prefix
-    // the source column itself would vanish from the data files
+    // physical partition-dir columns carry a reserved prefix: the writer
+    // REMOVES partition columns from the file contents, and an
+    // identity-transform partition field shares its source column's name —
+    // without the prefix the source column itself would vanish from the
+    // data files
     def physName(pf: graft.spec.PartitionField): String = PartColPrefix + pf.name
-    val writer = if (partFields.nonEmpty) {
-      val sparkSchema = aligned.schema
-      val withParts = partFields.foldLeft(aligned) { (acc, pf) =>
-        val srcName = writeSchema.fieldById(pf.sourceId).get.name
-        acc.withColumn(physName(pf), pf.transform.column(col(srcName), sparkSchema(srcName).dataType))
+    // the write plan is built ONCE: the write executes the query's own
+    // physical plan, with no separate sizing or command planning pass
+    val (laidOut, layout): (DataFrame, SparkPlan => SparkPlan) =
+      if (partFields.nonEmpty) {
+        val sparkSchema = aligned.schema
+        val partCols = partFields.map(pf => col(physName(pf)))
+        val repart = aligned.select(col("*") +: partFields.map { pf =>
+          val srcName = writeSchema.fieldById(pf.sourceId).get.name
+          pf.transform.column(col(srcName), sparkSchema(srcName).dataType).as(physName(pf))
+        }: _*).repartition(partCols: _*)
+        // local sort prefixed by the partition-dir columns: one shuffle task
+        // may hold SEVERAL dirs, and each dir's files only get tight bounds /
+        // clustering (e.g. partitioned z-order) if its rows arrive contiguous
+        // and ordered
+        val effSort = localSort ++ sortCols
+        (if (effSort.nonEmpty) repart.sortWithinPartitions(partCols ++ effSort: _*) else repart,
+          plan => plan)
+      } else if (keepLayout) (aligned, plan => plan)
+      else {
+        // write fan-in gated on the optimizer's output-size estimate: small
+        // writes coalesce (fewer, larger files keep the manifest tree small),
+        // but a write whose estimated bytes already justify ≥inParts
+        // target-size files keeps FULL parallelism — unconditional /4 would
+        // quarter cluster-scale writes. An explicit outFiles hint wins:
+        // callers that KNOW the output cardinality (MV merges bounded by
+        // group count + manifest-exact stored rows) skip the optimizer's
+        // join-size guesses, which over-estimate badly and fan tiny outputs
+        // across the cluster. inParts is the partition count of the very RDD
+        // the write then consumes.
+        val order =
+          if (sortCols.isEmpty) Nil
+          else aligned.sortWithinPartitions(sortCols: _*).queryExecution.analyzed.asInstanceOf[Sort].order
+        (aligned, { plan =>
+          val input = PlannedRddExec(plan)
+          val nOut = outFiles.getOrElse {
+            val inParts = input.rdd.getNumPartitions
+            val targetFileBytes = props.getOrElse("write.target-file-size-bytes",
+              (512L << 20).toString).toLong
+            val estBytes = aligned.queryExecution.optimizedPlan.stats.sizeInBytes
+            val idealFiles = ((estBytes + targetFileBytes - 1) / targetFileBytes)
+              .min(BigInt(inParts)).max(BigInt(1)).toInt
+            math.min(inParts, math.max(idealFiles, math.max(1, inParts / 4)))
+          }
+          if (order.isEmpty) CoalesceExec(nOut, input) // coalesce above inParts is a no-op
+          else SortExec(order, global = false, ShuffleExchangeExec(RangePartitioning(order, nOut), input))
+        })
       }
-      val repart = withParts.repartition(partFields.map(pf => col(physName(pf))): _*)
-      // local sort prefixed by the partition-dir columns: one shuffle task
-      // may hold SEVERAL dirs, and each dir's files only get tight bounds /
-      // clustering (e.g. partitioned z-order) if its rows arrive contiguous
-      // and ordered
-      val effSort = localSort ++ sortCols
-      (if (effSort.nonEmpty)
-        repart.sortWithinPartitions(partFields.map(pf => col(physName(pf))) ++ effSort: _*)
-      else repart)
-        .write.partitionBy(partFields.map(physName): _*)
-    } else if (keepLayout) {
-      aligned.write
-    } else {
-      // write fan-in gated on the optimizer's output-size estimate: small
-      // writes coalesce (fewer, larger files keep driver-side footer
-      // scraping and the manifest tree small), but a write whose estimated
-      // bytes already justify ≥inParts target-size files keeps FULL
-      // parallelism — unconditional /4 would quarter cluster-scale writes
-      // an explicit outFiles hint wins: callers that KNOW the output
-      // cardinality (MV merges bounded by group count + manifest-exact
-      // stored rows) skip the optimizer's join-size guesses — which
-      // over-estimate badly and fan tiny outputs across the cluster — AND
-      // the physical-planning pass that .rdd forces just to count partitions
-      val nOut = outFiles.getOrElse {
-        val inParts = aligned.rdd.getNumPartitions
-        val targetFileBytes = props.getOrElse("write.target-file-size-bytes",
-          (512L << 20).toString).toLong
-        val estBytes = aligned.queryExecution.optimizedPlan.stats.sizeInBytes
-        val idealFiles = ((estBytes + targetFileBytes - 1) / targetFileBytes)
-          .min(BigInt(inParts)).max(BigInt(1)).toInt
-        math.min(inParts, math.max(idealFiles, math.max(1, inParts / 4)))
-      }
-      (if (sortCols.nonEmpty)
-        aligned.repartitionByRange(nOut, sortCols: _*).sortWithinPartitions(sortCols: _*)
-      else aligned.coalesce(nOut)).write // coalesce above inParts is a no-op
-    }
 
     // parquet bloom filters (point-lookup row-group skipping): table property
     // write.parquet.bloom-filter-enabled.column.<col>=true feeds the writer's
     // per-column option; parquet-mr then skips row groups on = predicates
     val BloomProp = "write.parquet.bloom-filter-enabled.column."
-    val withBlooms = props.collect {
+    val options = CaseInsensitiveMap(props.collect {
       case (k, v) if k.startsWith(BloomProp) =>
         s"parquet.bloom.filter.enabled#${k.stripPrefix(BloomProp)}" -> v
-    }.foldLeft(writer) { case (w, (k, v)) => w.option(k, v) }
-
-    withBlooms
-      .option("compression", props.getOrElse("write.parquet.compression-codec", "zstd"))
-      .option("maxRecordsPerFile",
-        props.getOrElse("write.max-records-per-file", "10000000"))
-      .parquet(stagingDir)
-
-    collectDataFiles(spark, table, stagingDir, writeSchema, partFields.map(_.name), content, equalityIds)
+    } ++ Map(
+      "compression" -> props.getOrElse("write.parquet.compression-codec", "zstd"),
+      "maxRecordsPerFile" -> props.getOrElse("write.max-records-per-file", "10000000")))
+    val hadoopConf = writeSession.sessionState.newHadoopConfWithOptions(options)
+    // each task commit moves its files straight into the staging dir, so
+    // the job commit on the driver lists and renames nothing. The staging
+    // dir is private until the manifest commit, which names only the files
+    // of committed tasks, so no reader can see a partial job; a failed job's
+    // staging dir is removed below.
+    hadoopConf.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
+    val (basicStats, taskConf) = org.apache.spark.sql.GraftShim.basicWriteStatsTracker(hadoopConf)
+    val staging = new Path(stagingDir)
+    val fs = staging.getFileSystem(hadoopConf)
+    val partTypes = partFields.map(pf => laidOut.schema(physName(pf)).dataType)
+    val tracker = new DataFileTracker(taskConf, fs.makeQualified(staging).toUri.getPath,
+      writeSchema, partFields.map(_.name), partTypes, content, equalityIds)
+    val committer = FileCommitProtocol.instantiate(
+      writeSession.sessionState.conf.fileCommitProtocolClass,
+      jobId = UUID.randomUUID().toString, outputPath = stagingDir)
+    val qe = laidOut.queryExecution
+    try SQLExecution.withNewExecutionId(qe) {
+      val plan = layout(qe.executedPlan)
+      val partAttrs = partFields.map(pf => plan.output.find(_.name == physName(pf)).get)
+      FileFormatWriter.write(
+        writeSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan,
+        new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(stagingDir, Map.empty, plan.output), hadoopConf,
+        partAttrs, bucketSpec = None, statsTrackers = Seq(basicStats, tracker), options)
+    } catch {
+      case e: Throwable =>
+        try fs.delete(staging, true) catch { case d: Exception => e.addSuppressed(d) }
+        throw e
+    }
+    withDistinctCounts(spark, table, writeSchema, content, tracker.files)
   }
 
-  /** Walks the staging dir, parses hive-style partition dirs back to
-    * canonical values, scrapes footers → DataFile stats (S10).
-    */
-  private def collectDataFiles(spark: SparkSession, table: IceTable, stagingDir: String,
-                               writeSchema: IceSchema, partNames: Seq[String],
-                               content: Int, equalityIds: Seq[Int]): Seq[DataFile] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(new java.net.URI(stagingDir), conf)
-    val partTypes: Map[String, IceType] = if (partNames.nonEmpty) {
-      table.spec.partitionType(table.schema).fields.map(f => f.name -> f.fieldType).toMap
-    } else Map.empty
-
-    val files = statsFiles(sortedPathsOf(fs, stagingDir), stagingDir, conf, writeSchema,
-      partTypes, content, equalityIds)
-
-    // distinct_counts population (A4; reference leaves the manifest field
-    // empty, parquet.rs:85-90): one extra per-file approx_count_distinct
-    // aggregation over the just-written files, opt-in via table property —
-    // unlike footer scraping it reads data pages, so it is priced as a
-    // deliberate write-time trade for optimizer NDV stats
+  /** distinct_counts population (A4; reference leaves the manifest field
+    * empty, parquet.rs:85-90): one extra per-file approx_count_distinct
+    * aggregation over the just-written files, opt-in via table property —
+    * unlike the footer stats it reads data pages, so it is priced as a
+    * deliberate write-time trade for optimizer NDV stats. */
+  private def withDistinctCounts(spark: SparkSession, table: IceTable, writeSchema: IceSchema,
+                                 content: Int, files: Seq[DataFile]): Seq[DataFile] = {
     val primFields = writeSchema.fields.filter(_.fieldType match {
       case _: IceType.StructT | _: IceType.ListT | _: IceType.MapT => false
       case _ => true
@@ -522,6 +559,68 @@ object IceWrite {
     }
   }
 
+  /** The child's RDD, built once: the write sizes its fan-in from this
+    * RDD's partition count and then consumes the same RDD, so the query is
+    * planned and executed a single time. */
+  private case class PlannedRddExec(child: SparkPlan) extends UnaryExecNode {
+    @transient lazy val rdd: RDD[InternalRow] = child.execute()
+    override def output: Seq[Attribute] = child.output
+    override protected def doExecute(): RDD[InternalRow] = rdd
+    override protected def withNewChildInternal(newChild: SparkPlan): PlannedRddExec =
+      copy(child = newChild)
+  }
+
+  /** One write's `DataFile` collector (Spark's `BasicWriteJobStatsTracker`
+    * is the model). Each task reads the footer of every file it closes,
+    * with the write's own Hadoop conf, and hands the stats back with its
+    * task commit; the driver receives only the committed tasks' stats and
+    * sorts them by path (the manifest order). The partition tuple is the
+    * typed row the writer split on — no directory name is parsed back. A
+    * file's committed path is the staging dir plus the temp path's last
+    * `partNames.size + 1` segments (partition dirs and file name). Each
+    * write owns its tracker, so concurrent writes share no state. */
+  private final class DataFileTracker(conf: () => Configuration, stagingPath: String,
+                                      schema: IceSchema, partNames: Seq[String],
+                                      partTypes: Seq[DataType], content: Int,
+                                      equalityIds: Seq[Int]) extends WriteJobStatsTracker {
+    @transient @volatile private var collected: Seq[DataFile] = Nil
+
+    def files: Seq[DataFile] = collected
+
+    override def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
+      private var partition: Seq[(String, Any)] = Nil
+      private val open = scala.collection.mutable.Map.empty[String, Seq[(String, Any)]]
+      private val done = scala.collection.mutable.ArrayBuffer.empty[DataFile]
+
+      // a partition's first row arrives BEFORE the previous file closes,
+      // so each file keeps the partition it was opened under
+      override def newPartition(values: InternalRow): Unit =
+        partition = partNames.indices.map(i => partNames(i) -> partitionValue(values, i))
+      override def newFile(path: String): Unit = open(path) = partition
+      override def closeFile(path: String): Unit = {
+        val tail = new Path(path).toUri.getPath.split('/').takeRight(partNames.size + 1)
+        done += ParquetStats.dataFile(path, conf(), schema, open.remove(path).getOrElse(partition),
+          content, equalityIds).copy(filePath = (stagingPath +: tail).mkString("/"))
+      }
+      override def newRow(path: String, row: InternalRow): Unit = ()
+      override def getFinalStats(taskCommitTime: Long): WriteTaskStats = WrittenFiles(done.toSeq)
+    }
+
+    override def processStats(stats: Seq[WriteTaskStats], jobCommitDuration: Long): Unit =
+      collected = stats.flatMap { case WrittenFiles(fs) => fs }.sortBy(_.filePath)
+
+    /** The canonical manifest value: Int for transform outputs, int and
+      * date (epoch days), Long for long, String for string. */
+    private def partitionValue(row: InternalRow, i: Int): Any =
+      if (row.isNullAt(i)) null
+      else partTypes(i) match {
+        case _: StringType => row.getUTF8String(i).toString
+        case t => row.get(i, t)
+      }
+  }
+
+  private final case class WrittenFiles(files: Seq[DataFile]) extends WriteTaskStats
+
   /** Imports EXISTING parquet files into the table IN PLACE (no copy, no
     * rewrite): footer-scrapes each file under `sourceDir` (hive-style
     * `name=value` dirs map to identity partition values), appends them in
@@ -543,14 +642,13 @@ object IceWrite {
       "add_files supports identity-partitioned or unpartitioned tables " +
         "(transform values cannot be derived from directory names)")
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(new java.net.URI(sourceDir), conf)
+    val fs = new Path(sourceDir).getFileSystem(conf)
     val partTypes: Map[String, IceType] =
       table.spec.partitionType(table.schema).fields.map(f => f.name -> f.fieldType).toMap
     val paths = sortedPathsOf(fs, sourceDir)
     require(paths.nonEmpty, s"no parquet files under $sourceDir")
     val specOrder = table.spec.fields.map(_.name)
-    val files0 = statsFiles(paths, sourceDir.stripSuffix("/"), conf, table.schema,
-      partTypes, ContentData, Nil)
+    val files0 = statsFiles(paths, sourceDir.stripSuffix("/"), conf, table.schema, partTypes)
     // every required column AND every partition source column must exist in
     // every imported file: a missing optional column reads as null (fine),
     // a missing required one is corruption waiting for a scan — and unlike
@@ -605,30 +703,27 @@ object IceWrite {
     paths.toSeq.sorted
   }
 
-  private def statsFiles(sortedPaths: Seq[String], baseDir: String,
-                         conf: org.apache.hadoop.conf.Configuration,
-                         writeSchema: IceSchema, partTypes: Map[String, IceType],
-                         content: Int, equalityIds: Seq[Int]): Seq[DataFile] = {
-    // footer scraping is per-file independent driver IO — a partitioned
-    // write emits one file per (task, dir) and a serial scrape of hundreds
-    // of footers dominates small-table commit latency (measured: ~60% of a
-    // month-partitioned append). Bounded thread pool; result order stays
-    // the sorted path order, so manifests are deterministic.
+  private def statsFiles(sortedPaths: Seq[String], baseDir: String, conf: Configuration,
+                         schema: IceSchema, partTypes: Map[String, IceType]): Seq[DataFile] = {
+    // footer scraping of imported files (they have no writer to report
+    // their stats) is per-file independent driver IO: a bounded thread
+    // pool; result order stays the sorted path order, so manifests are
+    // deterministic.
     def statsOf(p: String): DataFile = {
       val rel = p.stripPrefix(baseDir).split('/').filter(_.nonEmpty)
       val partition: Seq[(String, Any)] = rel.init.flatMap { seg =>
         val i = seg.indexOf('=')
         if (i < 0) None
         else {
-          val name = seg.take(i).stripPrefix(PartColPrefix)
-          val raw = URLDecoder.decode(seg.drop(i + 1), "UTF-8")
+          val name = seg.take(i)
+          val raw = ExternalCatalogUtils.unescapePathName(seg.drop(i + 1))
           val v: Any =
             if (raw == "__HIVE_DEFAULT_PARTITION__") null
             else parsePartitionValue(partTypes.get(name), raw)
           Some(name -> v)
         }
       }.toSeq
-      ParquetStats.dataFile(p, conf, writeSchema, partition, content, equalityIds)
+      ParquetStats.dataFile(p, conf, schema, partition)
     }
     if (sortedPaths.size <= 1) sortedPaths.map(statsOf)
     else {

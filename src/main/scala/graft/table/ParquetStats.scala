@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -26,7 +27,9 @@ object ParquetStats {
                partition: Seq[(String, Any)], content: Int = 0,
                equalityIds: Seq[Int] = Nil): DataFile = {
     val file = HadoopInputFile.fromPath(new Path(path), conf)
-    val reader = ParquetFileReader.open(file)
+    // read options from the caller's conf: the no-conf overload builds (and
+    // loads the XML resources of) a fresh Hadoop Configuration per file
+    val reader = ParquetFileReader.open(file, HadoopReadOptions.builder(conf).build())
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala

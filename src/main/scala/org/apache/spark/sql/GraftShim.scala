@@ -37,6 +37,19 @@ object GraftShim {
     () => wrapped.value
   }
 
+  /** Spark's own write-stats tracker (files, bytes and rows written: the
+    * SQL write metrics and each task's output metrics) over a serialized
+    * copy of `conf`, plus an accessor to that same copy (the wrapper is
+    * `private[spark]`) — a second tracker that captures the accessor
+    * shares the one copy in the task binary. */
+  def basicWriteStatsTracker(conf: org.apache.hadoop.conf.Configuration)
+      : (org.apache.spark.sql.execution.datasources.WriteJobStatsTracker,
+         () => org.apache.hadoop.conf.Configuration) = {
+    import org.apache.spark.sql.execution.datasources.BasicWriteJobStatsTracker
+    val wrapped = new org.apache.spark.util.SerializableConfiguration(conf)
+    (new BasicWriteJobStatsTracker(wrapped, BasicWriteJobStatsTracker.metrics), () => wrapped.value)
+  }
+
   /** Resolves a registered DSv2 catalog plugin by name (`catalogManager` is
     * `private[sql]`) — used by graft's SQL commands to reach the graft
     * catalog instance behind `spark.sql.catalog.<name>`.

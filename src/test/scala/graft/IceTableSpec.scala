@@ -1330,4 +1330,99 @@ class IceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cold == warm)
     assert(cold.nonEmpty)
   }
+
+  private val tagSchema = IceSchema(0, Seq(
+    NestedField(1, "id", required = false, IceType.LongT),
+    NestedField(2, "tag", required = false, IceType.StringT)))
+  private val tagSpec = PartitionSpec(0, Seq(PartitionField(2, 1000, "tag", Transform.Identity)))
+
+  test("string identity-partition values with path characters round-trip and prune") {
+    import spark.implicits._
+    Seq("C++", "a b", "x%y", "p/q", "k=v").zipWithIndex.foreach { case (v, i) =>
+      var t = freshCatalog().createTable(TableIdent(Seq("test"), s"tag$i"), tagSchema, tagSpec)
+      t = IceWrite.append(spark, t, Seq((1L, v)).toDF("id", "tag"))
+      assert(t.dataFiles(t.currentSnapshot(None).get).map(_.dataFile.partition) == Seq(Seq("tag" -> v)),
+        s"manifest partition value of '$v'")
+      assert(IceScan.scan(spark, t, Seq(col("tag") === v)).count() == 1L, s"pruned scan of '$v'")
+      assert(IceScan.scan(spark, t).count() == 1L)
+    }
+  }
+
+  test("add_files reads Spark-escaped partition dirs back to their values (tag=C++)") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val ext = Files.createTempDirectory("graft-ext").toString
+    val values = Seq("C++", "x%y")
+    values.zipWithIndex.foreach { case (v, i) =>
+      // the dir name Spark's partitioned writer gives the value ("C++" stays as is)
+      Seq((i.toLong, v)).toDF("id", "tag").write
+        .parquet(s"$ext/${ExternalCatalogUtils.getPartitionPathString("tag", v)}")
+    }
+    assert(new java.io.File(s"$ext/tag=C++").isDirectory)
+    val t0 = freshCatalog().createTable(TableIdent(Seq("test"), "imported_tags"), tagSchema, tagSpec)
+    val (t, files) = IceWrite.addFiles(spark, t0, ext)
+    assert(files.map(_.partition).toSet == values.map(v => Seq("tag" -> v)).toSet)
+    values.foreach(v =>
+      assert(IceScan.scan(spark, t, Seq(col("tag") === v)).count() == 1L, s"pruned scan of '$v'"))
+  }
+
+  test("a table location with a space: append, the three delete kinds and add_files") {
+    implicit val s: SparkSession = spark
+    import s.implicits._
+    val cat = new FileCatalog(Files.createTempDirectory("graft wh").toString)
+    val byProduct = PartitionSpec(0, Seq(PartitionField(3, 1000, "product_id", Transform.Identity)))
+    var t = cat.createTable(TableIdent(Seq("test"), "spaced"), ordersSchema, byProduct)
+    assert(t.location.contains(" "))
+    def ids: Seq[Long] = IceScan.scan(spark, t).select("id").as[Long].collect().toSeq.sorted
+    t = IceWrite.append(spark, t, batch1)
+    t = IceWrite.append(spark, t, batch2)
+    assert(ids == (1L to 9L))
+    t = IceWrite.appendEqualityDeletes(spark, t, Seq(Tuple1(2L)).toDF("id"), Seq(1))
+    assert(ids == Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L, 9L))
+    t = IceWrite.appendPositionDeletes(spark, t, col("id") === 5L)
+    assert(ids == Seq(1L, 3L, 4L, 6L, 7L, 8L, 9L))
+    t = IceWrite.appendDeletionVectors(spark, t, col("id") === 8L)
+    assert(ids == Seq(1L, 3L, 4L, 6L, 7L, 9L))
+    assert(IceScan.scan(spark, t, Seq(col("product_id") === 1L)).select("id").as[Long]
+      .collect().toSeq.sorted == Seq(1L, 3L))
+    val ext = Files.createTempDirectory("graft ext").toString
+    Seq((10L, 1L, 4L, "2020-03-03", 5)).toDF("id", "customer_id", "product_id", "date", "amount")
+      .withColumn("date", to_date($"date")).write.parquet(s"$ext/product_id=4")
+    t = IceWrite.addFiles(spark, t, ext)._1
+    assert(ids == Seq(1L, 3L, 4L, 6L, 7L, 9L, 10L))
+    assert(IceScan.scan(spark, t, Seq(col("product_id") === 4L)).count() == 1L)
+  }
+
+  test("a failed write commits nothing: append and replaceWith throw, snapshot and rows unchanged") {
+    implicit val s: SparkSession = spark
+    val cat = freshCatalog()
+    var t = cat.createTable(TableIdent(Seq("test"), "failing"), ordersSchema, daySpec)
+    t = IceWrite.append(spark, t, batch1)
+    val snap = t.currentSnapshot(None).map(_.snapshotId)
+    def rows(x: graft.table.IceTable) =
+      IceScan.scan(spark, x).collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    val before = rows(t)
+    def dataFilesOnDisk: Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val dataDir = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(t.location).toUri.getPath, "data")
+      val walk = Files.walk(dataDir)
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally walk.close()
+    }
+    val onDisk = dataFilesOnDisk
+    val bad = batch2.withColumn("amount",
+      when(col("id") === 8L, raise_error(lit("boom"))).otherwise(col("amount")))
+    def assertFailsWithBoom(write: => Any): Unit = {
+      val err = intercept[Exception](write)
+      val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage))
+      assert(messages.exists(_.contains("boom")), err.toString)
+      val now = t.refresh()
+      assert(now.currentSnapshot(None).map(_.snapshotId) == snap)
+      assert(rows(now) == before)
+      assert(dataFilesOnDisk == onDisk) // the failed job leaves no file behind
+    }
+    assertFailsWithBoom(IceWrite.append(spark, t, bad))
+    assertFailsWithBoom(IceWrite.replaceWith(spark, t, bad))
+  }
 }

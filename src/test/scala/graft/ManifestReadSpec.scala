@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, LocatedFileStatus, Path, RemoteIterator}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -15,17 +15,27 @@ import graft.spark.{IceScan, IceWrite}
 import graft.table.IceTable
 import graft.table.ManifestModel._
 
-/** The local file system with every stat and listing recorded, so a spec
-  * can see which paths a piece of code touched (`fs.file.impl`). */
+/** The local file system with every stat, listing and open recorded, so a
+  * spec can see which paths a piece of code touched, and from which side:
+  * a thread with no `TaskContext` is the driver (`fs.file.impl`). */
 class CountingLocalFileSystem extends LocalFileSystem {
-  private def seen(op: String, p: Path): Unit = CountingLocalFileSystem.calls.add(op -> p.toString)
+  private def seen(op: String, p: Path): Unit = CountingLocalFileSystem.calls.add(
+    CountingLocalFileSystem.Call(op, p.toString, onDriver = org.apache.spark.TaskContext.get() == null))
   override def getFileStatus(p: Path): FileStatus = { seen("getFileStatus", p); super.getFileStatus(p) }
   override def listStatus(p: Path): Array[FileStatus] = { seen("listStatus", p); super.listStatus(p) }
   override def exists(p: Path): Boolean = { seen("exists", p); super.exists(p) }
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = { seen("open", p); super.open(p, bufferSize) }
+  override def listFiles(p: Path, recursive: Boolean): RemoteIterator[LocatedFileStatus] = {
+    seen("listFiles", p); super.listFiles(p, recursive)
+  }
+  override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
+    seen("listLocatedStatus", p); super.listLocatedStatus(p)
+  }
 }
 
 object CountingLocalFileSystem {
-  val calls = new ConcurrentLinkedQueue[(String, String)]()
+  final case class Call(op: String, path: String, onDriver: Boolean)
+  val calls = new ConcurrentLinkedQueue[Call]()
 }
 
 /** The manifest-backed reader ([[IceScan.readFiles]]): planning a scan
@@ -84,7 +94,7 @@ class ManifestReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     import scala.jdk.CollectionConverters._
     val dataDir = new Path(t.location).toUri.getPath + "/data/"
-    val onTableFiles = CountingLocalFileSystem.calls.asScala.toSeq.filter(_._2.contains(dataDir))
+    val onTableFiles = CountingLocalFileSystem.calls.asScala.toSeq.filter(_.path.contains(dataDir))
     assert(onTableFiles.isEmpty,
       s"scan planning touched table files: ${onTableFiles.take(5).mkString(", ")}")
     assert(full.count() == 198L) // ids 5 and 7 masked
