@@ -503,6 +503,8 @@ object IceWrite {
     // of committed tasks, so no reader can see a partial job; a failed job's
     // staging dir is removed below.
     hadoopConf.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
+    // nothing reads a `_SUCCESS` marker: the manifest names the files
+    hadoopConf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
     val (basicStats, taskConf) = org.apache.spark.sql.GraftShim.basicWriteStatsTracker(hadoopConf)
     val staging = new Path(stagingDir)
     val fs = staging.getFileSystem(hadoopConf)
