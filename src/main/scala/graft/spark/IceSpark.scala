@@ -5,18 +5,13 @@ import java.util.UUID
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.internal.io.FileCommitProtocol
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
-import org.apache.spark.sql.execution.{CoalesceExec, SQLExecution, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
 
@@ -465,15 +460,14 @@ object IceWrite {
         // callers that KNOW the output cardinality (MV merges bounded by
         // group count + manifest-exact stored rows) skip the optimizer's
         // join-size guesses, which over-estimate badly and fan tiny outputs
-        // across the cluster. inParts is the partition count of the very RDD
-        // the write then consumes.
-        val order =
-          if (sortCols.isEmpty) Nil
-          else aligned.sortWithinPartitions(sortCols: _*).queryExecution.analyzed.asInstanceOf[Sort].order
+        // across the cluster. inParts is the partition count of the query's
+        // RDD, built once from its plan; the coalesce or range shape is then
+        // planned over that same RDD (a LogicalRDD), so the optimizer still
+        // owns the sort expressions and the query is not planned twice.
         (aligned, { plan =>
-          val input = PlannedRddExec(plan)
+          val input = plan.execute()
           val nOut = outFiles.getOrElse {
-            val inParts = input.rdd.getNumPartitions
+            val inParts = input.getNumPartitions
             val targetFileBytes = props.getOrElse("write.target-file-size-bytes",
               (512L << 20).toString).toLong
             val estBytes = aligned.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -481,8 +475,12 @@ object IceWrite {
               .min(BigInt(inParts)).max(BigInt(1)).toInt
             math.min(inParts, math.max(idealFiles, math.max(1, inParts / 4)))
           }
-          if (order.isEmpty) CoalesceExec(nOut, input) // coalesce above inParts is a no-op
-          else SortExec(order, global = false, ShuffleExchangeExec(RangePartitioning(order, nOut), input))
+          val in = org.apache.spark.sql.GraftShim.ofRows(writeSession, LogicalRDD(plan.output, input)(
+            writeSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+          val out =
+            if (sortCols.isEmpty) in.coalesce(nOut) // coalesce above inParts is a no-op
+            else in.repartitionByRange(nOut, sortCols: _*).sortWithinPartitions(sortCols: _*)
+          out.queryExecution.executedPlan
         })
       }
 
@@ -559,17 +557,6 @@ object IceWrite {
       files.map(d => d.copy(distinctCounts =
         distinctByFile.getOrElse(new Path(d.filePath).getName, Map.empty)))
     }
-  }
-
-  /** The child's RDD, built once: the write sizes its fan-in from this
-    * RDD's partition count and then consumes the same RDD, so the query is
-    * planned and executed a single time. */
-  private case class PlannedRddExec(child: SparkPlan) extends UnaryExecNode {
-    @transient lazy val rdd: RDD[InternalRow] = child.execute()
-    override def output: Seq[Attribute] = child.output
-    override protected def doExecute(): RDD[InternalRow] = rdd
-    override protected def withNewChildInternal(newChild: SparkPlan): PlannedRddExec =
-      copy(child = newChild)
   }
 
   /** One write's `DataFile` collector (Spark's `BasicWriteJobStatsTracker`

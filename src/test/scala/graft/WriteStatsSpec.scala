@@ -105,6 +105,31 @@ class WriteStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertScraped(t, files, t.schema)
   }
 
+  // a sort order from another engine's metadata may carry any transform;
+  // the range fan-in must evaluate each (day's `to_date` only runs once the
+  // optimizer has replaced it)
+  private val tsSchema = IceSchema(0, Seq(
+    NestedField(1, "id", required = false, IceType.LongT),
+    NestedField(3, "d", required = false, IceType.DateT),
+    NestedField(4, "v", required = false, IceType.StringT),
+    NestedField(5, "ts", required = false, IceType.TimestamptzT)))
+  for ((name, field) <- Seq(
+      "day" -> SortField(3, Transform.Day, "asc", "nulls-first"),
+      "month" -> SortField(3, Transform.Month, "desc", "nulls-last"),
+      "hour" -> SortField(5, Transform.Hour, "asc", "nulls-first"),
+      "truncate" -> SortField(4, Transform.Truncate(2), "asc", "nulls-last"),
+      "bucket" -> SortField(1, Transform.Bucket(3), "asc", "nulls-first")))
+    test(s"unpartitioned write sorted by $name: entries equal the scraped ones") {
+      var t = new FileCatalog(Files.createTempDirectory("graft-ws-wh").toString)
+        .createTable(TableIdent(Seq("db"), s"sorted_$name"), tsSchema, PartitionSpec(0, Nil))
+      t = t.newTransaction(None).setSortOrder(SortOrder(1, Seq(field))).commit()
+      val df = rows(200).select(col("id"), col("d"), col("v"),
+        timestamp_seconds(unix_date(col("d")).cast("long") * 86400L + col("id") % 24 * 3600L).as("ts"))
+      val files = IceWrite.writeDataFiles(spark, t, df, t.schema)
+      assert(files.map(_.recordCount).sum == 200L)
+      assertScraped(t, files, t.schema)
+    }
+
   test("scoped and global equality-delete writes: entries equal the scraped ones") {
     import spark.implicits._
     val t = table("eq", identityP)

@@ -68,7 +68,8 @@ CATEGORIES = [
 
 def call_site(name):
     """graft.spark.IceWrite$.writeDataFiles -> IceWrite.writeDataFiles,
-    graft.spark.IceWrite$PlannedRddExec.rdd -> IceWrite.PlannedRddExec.rdd
+    graft.spark.IceWrite$DataFileTracker.processStats ->
+    IceWrite.DataFileTracker.processStats
     (a lambda body counts as its enclosing method); None outside graft and
     for the JVM's synthetic lambda classes."""
     if not name.startswith("graft.") or "$$Lambda" in name:
