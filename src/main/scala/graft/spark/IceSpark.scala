@@ -494,7 +494,12 @@ object IceWrite {
     } ++ Map(
       "compression" -> props.getOrElse("write.parquet.compression-codec", "zstd"),
       "maxRecordsPerFile" -> props.getOrElse("write.max-records-per-file", "10000000")))
-    val hadoopConf = writeSession.sessionState.newHadoopConfWithOptions(options)
+    // the write's conf carries its keys but not their per-key source
+    // records: serializing a conf gzips every key's sources, ~8 ms of driver
+    // CPU per copy of the ~1100-key conf, and each write serializes two
+    // copies (the job's and the trackers') twice (closure check, task binary)
+    val hadoopConf = new Configuration(false)
+    hadoopConf.addResource(writeSession.sessionState.newHadoopConfWithOptions(options))
     // each task commit moves its files straight into the staging dir, so
     // the job commit on the driver lists and renames nothing. The staging
     // dir is private until the manifest commit, which names only the files
