@@ -72,7 +72,7 @@ object FuzzyJoin {
     CallCache.run { pin =>
       val ids = Seq("id_a", "id_b").map(col)
       candidateBranches(pin)(df, idCol, strCol, maxDist)
-        .map(_.select(ids: _*)).reduce(_ unionByName _)
+        .map(_.select(ids: _*)).reduce(_ union _)
     }(_.count())
 
   /** The [[editDistanceJoin]] plan; `pin` marks the frames a branch
@@ -92,12 +92,14 @@ object FuzzyJoin {
     // distinct-after-verify returns the identical row set.
     def verify(cand: DataFrame): DataFrame = cand
       // thresholded Levenshtein: banded DP, returns -1 past the threshold
-      .withColumn("dist", levenshtein(col("s_a"), col("s_b"), k))
+      .select(col("id_a"), col("id_b"), levenshtein(col("s_a"), col("s_b"), k).as("dist"))
       .filter(col("dist") >= 0)
       .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
       .distinct()
 
-    candidateBranches(pin)(df, idCol, strCol, maxDist).map(verify).reduce(_ unionByName _)
+    // the branches share their column order: one positional union, with no
+    // by-name resolution pass over the analysed branch plans
+    candidateBranches(pin)(df, idCol, strCol, maxDist).map(verify).reduce(_ union _)
   }
 
   /** Upper length bound for the deletion-neighborhood branch (strings up
@@ -110,7 +112,10 @@ object FuzzyJoin {
     graft.core.SysProps.int("graft.fuzzy.symdelete.maxlen", 40, min = 0)
 
   /** Branch candidate frames `(id_a, id_b, s_a, s_b)` (symdelete, prefix,
-    * segment, tiny); the variant and prefix frames go through `pin`. */
+    * segment, tiny); the variant and prefix frames go through `pin`. Each
+    * stage is one projection (no `withColumn` chains): the classic Dataset
+    * analyses the whole growing plan at every step, so the step count is
+    * the plan-construction cost. */
   private def candidateBranches(pin: CallCache.Pin)(
       df: DataFrame, idCol: String, strCol: String, maxDist: Int): Seq[DataFrame] = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
@@ -123,8 +128,8 @@ object FuzzyJoin {
     val symMax = symDeleteMaxLen
     val useSym = k <= 2 && symMax > medMax
 
-    val base = df.select(col(idCol).cast("long").as("id"), col(strCol).as("s"))
-      .withColumn("len", length(col("s")))
+    val base = df.select(col(idCol).cast("long").as("id"), col(strCol).as("s"),
+      length(col(strCol)).as("len"))
 
     // ---- branch 0: DELETION-NEIGHBORHOOD blocking (SymSpell family —
     // public: Garbe's symmetric-delete spell correction; the completeness
@@ -163,8 +168,7 @@ object FuzzyJoin {
         concat(col("s").substr(lit(1), col("i") - 1),
           col("s").substr(col("i") + 1, col("j") - col("i") - 1),
           col("s").substr(col("j") + 1, col("len") - col("j"))).as("v"))
-    val variants0 = (if (k >= 2) d0.unionByName(d1).unionByName(d2)
-                     else d0.unionByName(d1))
+    val variants0 = (if (k >= 2) d0.union(d1).union(d2) else d0.union(d1))
       .dropDuplicates("id", "v")
     val variants = if (useSym) pin(variants0) else variants0
     val symCand =
@@ -241,15 +245,20 @@ object FuzzyJoin {
     // source length Ls, the substrings that could equal source segment i —
     // the segment's own span displaced by at most k (the complete PassJoin
     // position window)
+    val probeCols = Seq("id", "s", "len", "Ls", "i").map(col)
     val segProbe = base.filter(col("len") >= q - k && col("len") <= medMax + k)
-      .withColumn("Ls", explode(sequence(col("len") - k, col("len") + k)))
+      .select(col("id"), col("s"), col("len"),
+        explode(sequence(col("len") - k, col("len") + k)).as("Ls"))
       .filter(col("Ls") >= q && col("Ls") <= medMax)
-      .withColumn("i", explode(sequence(lit(0), lit(k))))
-      .withColumn("slen", segLen(col("Ls"), col("i")))
-      .withColumn("p_lo", greatest(segStart(col("Ls"), col("i")) - k, lit(0)))
-      .withColumn("p_hi", least(segStart(col("Ls"), col("i")) + k, col("len") - col("slen")))
+      .select(col("id"), col("s"), col("len"), col("Ls"),
+        explode(sequence(lit(0), lit(k))).as("i"))
+      .select(probeCols :+ segLen(col("Ls"), col("i")).as("slen") :+
+        greatest(segStart(col("Ls"), col("i")) - k, lit(0)).as("p_lo"): _*)
+      // p_hi reads the staged slen (its other reader is the substring below)
+      .select(probeCols ++ Seq(col("slen"), col("p_lo"),
+        least(segStart(col("Ls"), col("i")) + k, col("len") - col("slen")).as("p_hi")): _*)
       .filter(col("p_lo") <= col("p_hi"))
-      .withColumn("p", explode(sequence(col("p_lo"), col("p_hi"))))
+      .select(probeCols :+ col("slen") :+ explode(sequence(col("p_lo"), col("p_hi"))).as("p"): _*)
       .select(col("id").as("id_y"), col("s").as("s_y"), col("len").as("len_y"),
         col("Ls"), col("i"), col("s").substr(col("p") + 1, col("slen")).as("sub"))
     val segCand = idx.join(segProbe,
@@ -269,7 +278,8 @@ object FuzzyJoin {
     // The constant bucket key is pmod(id, 1) — always 0, but NOT
     // constant-foldable: a literal key would fold to `true` and the join
     // would plan as a nested loop instead of a (single-key) hash join.
-    val tiny = base.filter(col("len") <= k).withColumn("_one", pmod(col("id"), lit(1)))
+    val tiny = base.filter(col("len") <= k)
+      .select(col("id"), col("s"), col("len"), pmod(col("id"), lit(1)).as("_one"))
     val tinyOther = base.filter(col("len") <= 2 * k)
       .select(pmod(col("id"), lit(1)).as("_one"), col("id").as("id_y"),
         col("s").as("s_y"), col("len").as("len_y"))

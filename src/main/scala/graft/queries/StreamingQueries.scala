@@ -59,7 +59,7 @@ object StreamingQueries {
     "q113_stream_upsert" -> ((s, d) => {
       val cat = new FileCatalog(Files.createTempDirectory("graft_upswh").toString)
       val ckpt = Files.createTempDirectory("graft_upsck").toString
-      val ch = s.read.parquet(s"$d/orders.parquet").select(
+      val ch = graft.Tables.orders(s, d).select(
         (col("o_orderkey") % 1000).as("k"),
         col("o_totalprice").cast("double").as("v"),
         col("o_orderkey").as("lsn"),

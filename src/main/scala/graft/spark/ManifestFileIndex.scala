@@ -16,6 +16,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * as constant `_metadata` fields. Planning makes no listing and no stat
   * call — the manifest already holds what `InMemoryFileIndex` would ask the
   * file system for; a file deleted outside the table fails at the action.
+  * It also serves the pipeline's inputs ([[graft.Tables]]): there the files
+  * come from one listing per read, and the schema from a memo keyed by
+  * their state, so a read infers and lists nothing more.
   * Equality is by file list, so two reads of the same files share cache
   * entries and exchanges as path-built relations do. */
 private[graft] final case class ManifestFileIndex(files: Seq[FileStatusWithMetadata])

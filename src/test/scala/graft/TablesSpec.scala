@@ -20,6 +20,8 @@ import graft.pipeline.TimeSeries
   * every timestamp 1000× (collapsing 30 days into 43 minutes). These tests
   * write the SAME logical events under both physical units and assert the
   * read — and every TimeSeries entry point above it — is unit-invariant.
+  * The input reader itself: one listing per read, a schema memo keyed by
+  * file state and inference settings, and clear errors for bad inputs.
   */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -68,31 +70,39 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     * historical layouts exactly.
     */
   private def writeRawFile(dir: String, unit: TimeUnit): Unit = {
-    val unitName = unit.name // NANOS | MICROS
-    val schema = MessageTypeParser.parseMessageType(
+    val scale = if (unit == TimeUnit.NANOS) 1000L else 1L
+    writeParquetFile(s"$dir/events.parquet",
       s"""message events {
         |  optional int64 event_id;
-        |  optional int64 ts (TIMESTAMP($unitName,false));
+        |  optional int64 ts (TIMESTAMP(${unit.name},false));
         |  optional int64 user_id;
         |  optional binary event_type (STRING);
         |  optional double value;
         |  optional binary props (STRING);
-        |}""".stripMargin)
+        |}""".stripMargin,
+      logical.map { case (id, us, uid, et, v, p) =>
+        Map("event_id" -> id, "ts" -> us * scale, "user_id" -> uid, "event_type" -> et,
+          "value" -> v, "props" -> p)
+      })
+  }
+
+  /** One parquet FILE at `path` with the given message type, one row per
+    * entry of `rows` (field name → Long, Double or String value). */
+  private def writeParquetFile(path: String, message: String, rows: Seq[Map[String, Any]]): Unit = {
+    val schema = MessageTypeParser.parseMessageType(message)
     val conf = new Configuration()
     GroupWriteSupport.setSchema(schema, conf)
-    val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
       .withConf(conf).withType(schema).build()
     val f = new SimpleGroupFactory(schema)
-    val scale = if (unit == TimeUnit.NANOS) 1000L else 1L
-    try logical.foreach { case (id, us, uid, et, v, p) =>
+    try rows.foreach { row =>
       val g = f.newGroup()
-      g.add("event_id", id)
-      g.add("ts", us * scale)
-      g.add("user_id", uid)
-      g.add("event_type", et)
-      g.add("value", v)
-      g.add("props", p)
+      row.foreach {
+        case (k, v: Long) => g.add(k, v)
+        case (k, v: Double) => g.add(k, v)
+        case (k, v: String) => g.add(k, v)
+        case (k, v) => fail(s"unsupported value $v for $k")
+      }
       writer.write(g)
     } finally writer.close()
   }
@@ -161,6 +171,108 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w33ns = run("q33_stream_ingest", nanosDir)
     assert(w33us.nonEmpty && w33us == w33ns,
       "q33 stream ingest differs between physical timestamp units")
+  }
+
+  /** Spark jobs started while `body` runs: a fence job follows it, and the
+    * listener bus delivers job starts in order, so every earlier start has
+    * been seen once the fence's has. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == "fence"))
+          fenced.countDown()
+        else if (fenced.getCount > 0) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job start never seen")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a second read of an unchanged input starts no job and touches it only through its listing") {
+    val d = Files.createTempDirectory("graft_memo").toString
+    spark.range(0, 100, 1, 2).selectExpr("id", "cast(id AS STRING) AS v")
+      .write.parquet(s"$d/parts.parquet") // a directory of two part files
+    assert(jobsDuring(Tables.t(spark, d, "parts")) >= 1, "the first read infers the schema")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.file.impl", classOf[CountingLocalFileSystem].getName)
+    hconf.set("fs.file.impl.disable.cache", "true")
+    CountingLocalFileSystem.calls.clear()
+    val jobs = try jobsDuring(Tables.t(spark, d, "parts").queryExecution.executedPlan)
+    finally {
+      hconf.unset("fs.file.impl")
+      hconf.unset("fs.file.impl.disable.cache")
+    }
+    assert(jobs == 0, s"a memoized read ran $jobs Spark jobs")
+    import scala.jdk.CollectionConverters._
+    val onInput = CountingLocalFileSystem.calls.asScala.toSeq.filter(_.path.contains(d))
+    val reads = onInput.filter(c => Set("open", "listFiles", "listLocatedStatus")(c.op))
+    assert(reads.isEmpty, s"the memoized read opened or listed the input: ${reads.mkString(", ")}")
+    assert(onInput.count(_.op == "listStatus") == 1,
+      s"expected the one listing of the directory: ${onInput.mkString(", ")}")
+    assert(Tables.t(spark, d, "parts").count() == 100L)
+  }
+
+  test("an in-place regeneration with an added column is seen on the next read") {
+    val d = Files.createTempDirectory("graft_regen").toString
+    val path = s"$d/regen.parquet"
+    writeParquetFile(path, "message t { optional int64 id; }", Seq(Map("id" -> 1L)))
+    assert(Tables.t(spark, d, "regen").columns.toSeq == Seq("id"))
+    new java.io.File(path).delete()
+    Thread.sleep(10) // a distinct mtime even on coarse-grained filesystems
+    writeParquetFile(path, "message t { optional int64 id; optional binary extra (STRING); }",
+      Seq(Map("id" -> 2L, "extra" -> "x")))
+    val again = Tables.t(spark, d, "regen")
+    assert(again.columns.toSeq == Seq("id", "extra"))
+    assert(again.collect().map(_.toString).toSeq == Seq("[2,x]"))
+  }
+
+  test("each binaryAsString setting reads an unannotated BINARY column with its own schema") {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val d = Files.createTempDirectory("graft_bin").toString
+    writeParquetFile(s"$d/raw.parquet", "message t { optional int64 id; optional binary b; }",
+      Seq(Map("id" -> 1L, "b" -> "abc")))
+    val key = "spark.sql.parquet.binaryAsString"
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(Tables.t(spark, d, "raw").schema("b").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      val asString = Tables.t(spark, d, "raw")
+      assert(asString.schema("b").dataType == StringType)
+      assert(asString.select("b").head().getString(0) == "abc")
+      spark.conf.set(key, "false")
+      assert(Tables.t(spark, d, "raw").schema("b").dataType == BinaryType)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a directory of part files reads the same rows as spark.read.parquet") {
+    val path = s"$microsDir/events.parquet"
+    assert(new java.io.File(path).isDirectory)
+    val viaTables = Tables.t(spark, microsDir, "events")
+    val viaSpark = spark.read.parquet(path)
+    assert(viaTables.schema == viaSpark.schema)
+    val rows = sortedRows(viaTables)
+    assert(rows == sortedRows(viaSpark) && rows.size == logical.size)
+  }
+
+  test("a missing or partitioned input fails naming the table and the path") {
+    val d = Files.createTempDirectory("graft_missing").toString
+    val missing = intercept[IllegalArgumentException](Tables.t(spark, d, "nosuch"))
+    assert(missing.getMessage.contains("'nosuch'") && missing.getMessage.contains(s"$d/nosuch.parquet"),
+      missing.getMessage)
+    spark.range(4).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(s"$d/hive.parquet")
+    val nested = intercept[IllegalArgumentException](Tables.t(spark, d, "hive"))
+    assert(nested.getMessage.contains("'hive'") && nested.getMessage.contains(s"$d/hive.parquet"),
+      nested.getMessage)
   }
 
   test("TimeSeries entry points are unit-invariant (sessionize/funnel/retention/rolling)") {

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Driver-sample split of a JFR recording of a perfbench run.
 
-    python3 tools/jfr_split.py <file.jfr> [--top N] [--stack-depth D]
+    python3 tools/jfr_split.py <file.jfr> [--top N] [--stack-depth D] [--by-op]
 
 Record one with an unmodified benchmark run, for example:
 
@@ -22,8 +22,21 @@ It prints two tables of shares of the driver samples:
   - by graft call site: for every graft method, the share of driver samples
     with that method anywhere on the stack (inclusive, so nested call sites
     add up to more than 100 %).
+
+With `--by-op` it prints a third table: every driver sample, on any thread,
+goes to the op the main thread is running at that instant, so scheduler,
+listener and cleaner threads' time has an owner. An op is the main thread's
+outermost graft frame (one query of a `*.queries` registry is one op, as
+is one table-layer call such as `IceWrite.append`). A main-thread sample
+with no graft frame (the benchmark running the returned plan) stays in the
+op of the sample before it; a driver sample takes the op of the latest
+main-thread sample at or before it. An op is named by its call site; below
+a query registry by the first graft call site under it, the most frequent
+two when there are several (`FuzzyJoin.editDistanceJoin` for q86,
+`TextOps.textStats + Tables.documents` for q20).
 """
 import argparse
+import bisect
 import collections
 import json
 import subprocess
@@ -79,6 +92,49 @@ def call_site(name):
         method = method[len("$anonfun$"):].split("$")[0]
     owner = ".".join(p for p in cls.rsplit(".", 1)[-1].split("$") if p and not p.isdigit())
     return f"{owner}.{method}"
+
+
+def op_of(frames):
+    """(op, call site naming it) of a main-thread sample (see the module
+    doc), or None when no graft frame is on its stack. The site is None for
+    a sample in a registry's query body with no graft call below it."""
+    outer = [name for name in reversed(frames) if call_site(name)]
+    if not outer:
+        return None
+    sites = []
+    for site in map(call_site, outer):
+        if not sites or sites[-1] != site:
+            sites.append(site)
+    if sites[0].endswith(".queries"):
+        return outer[0], sites[1] if len(sites) > 1 else None
+    return outer[0], sites[0]
+
+
+def by_op(samples, lo, hi):
+    """Driver samples in [lo, hi] per op of the main thread at their
+    instant, how many of them are the main thread's own, and each op's
+    name."""
+    main = sorted((t, op_of(frames)) for t, thread, frames in samples
+                  if lo <= t <= hi and thread == "main")
+    none = "(before the first op)"
+    times, ops, current, sites = [], [], none, collections.defaultdict(collections.Counter)
+    for t, op in main:
+        if op:
+            current, site = op
+            if site:
+                sites[current][site] += 1
+        times.append(t)
+        ops.append(current)
+    counts, own = collections.Counter(), collections.Counter()
+    for t, thread, _ in samples:
+        if lo <= t <= hi and not thread.startswith(EXECUTOR_THREAD):
+            i = bisect.bisect_right(times, t) - 1
+            op = ops[i] if i >= 0 else none
+            counts[op] += 1
+            own[op] += thread == "main"
+    names = {op: " + ".join(site for site, _ in sites[op].most_common(2)) or call_site(op) or op
+             for op in counts}
+    return counts, own, names
 
 
 def category(frames):
@@ -157,6 +213,8 @@ def main():
     ap.add_argument("jfr")
     ap.add_argument("--top", type=int, default=25, help="call sites to print")
     ap.add_argument("--stack-depth", type=int, default=512)
+    ap.add_argument("--by-op", action="store_true",
+                    help="also split all driver threads' samples by the main thread's op")
     args = ap.parse_args()
 
     samples = list(load_samples(args.jfr, args.stack_depth))
@@ -178,6 +236,13 @@ def main():
     for frames in driver:
         by_site.update({site for site in map(call_site, frames) if site})
     table("by graft call site (inclusive)", by_site, len(driver), args.top)
+
+    if args.by_op:
+        counts, own, names = by_op(samples, lo, hi)
+        print(f"by op of the main thread, all driver threads ({len(driver)} driver samples)")
+        for op, n in counts.most_common(args.top):
+            print(f"  {100.0 * n / len(driver):5.1f} %  {n:6d}  (main {own[op]:5d})  {names[op]}")
+        print()
 
 
 if __name__ == "__main__":
