@@ -210,6 +210,45 @@ object IceWrite {
       d.contentOffset.getOrElse(sys.error(s"DV entry ${d.filePath} lacks content_offset")),
       d.contentSizeInBytes.getOrElse(sys.error(s"DV entry ${d.filePath} lacks content_size"))))
 
+  /** One data file's new deletion vector: the `fresh` positions the delete
+    * rows named, unioned into `vector` with the file's existing vector,
+    * which `supersedes` names. */
+  private[graft] final case class DeletionVector(path: String,
+                                                 vector: graft.table.Roaring.Bitmap64,
+                                                 fresh: Long,
+                                                 supersedes: Option[ManifestEntry])
+
+  /** Per-data-file deletion vectors for the (file_path, pos) rows of
+    * `positions`, sorted by path — the one builder behind
+    * [[appendDeletionVectors]] and
+    * [[graft.table.Maintenance.convertPositionDeletesToDVs]]. The bitmaps
+    * are built DISTRIBUTED (one group per data file, its positions sorted
+    * into a roaring bitmap); only the serialized vectors come to the driver,
+    * which unions each with that file's vector among the `existing` DV
+    * entries (V3: at most one DV per data file). */
+  private[graft] def deletionVectors(spark: SparkSession, positions: DataFrame,
+                                     existing: Seq[ManifestEntry]): Seq[DeletionVector] = {
+    import graft.table.Roaring
+    import spark.implicits._
+    val perFile = positions.toDF("_1", "_2").as[(String, Long)]
+      .groupByKey(_._1)
+      .mapGroups { (path, it) =>
+        val arr = it.map(_._2).toArray
+        java.util.Arrays.sort(arr)
+        (path, Roaring.Bitmap64.fromSorted(arr).serialize)
+      }
+      .collect()
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val byPath: Map[String, ManifestEntry] = existing.iterator
+      .flatMap(e => e.dataFile.referencedDataFile.map(_ -> e)).toMap
+    perFile.toSeq.sortBy(_._1).map { case (p, bytes) =>
+      val fresh = Roaring.Bitmap64.deserialize(bytes)
+      val old = byPath.get(p)
+      DeletionVector(p, old.fold(fresh)(e => fresh.union(readDvBitmap(hconf, e.dataFile))),
+        fresh.cardinality, old)
+    }
+  }
+
   /** Deletes the current-snapshot rows matching `predicate` as Iceberg-V3
     * DELETION VECTORS (beyond the reference, which panics on ALL content=1
     * files, table.rs:422-424): one Puffin file per commit holding one
@@ -225,85 +264,60 @@ object IceWrite {
     * replacement vector, committed via [[graft.table.Transaction.rewriteDeletes]]
     * so the superseded entry leaves the live snapshot in the same commit.
     *
-    * The per-file bitmaps are built DISTRIBUTED (groupByKey over the matched
-    * positions — each group is one data file's positions); only the
-    * serialized vectors come to the driver, which writes the single puffin
-    * artifact — byte volume proportional to the compressed vectors, never
-    * to the table. Blob-level snapshot/sequence stamps inside the puffin
-    * footer are informational (-1 until commit assigns them); the MANIFEST
-    * carries the authoritative numbers, and readers locate blobs by the
-    * manifest's content_offset/content_size without touching the footer.
+    * The per-file bitmaps are built distributed ([[deletionVectors]]); only
+    * the serialized vectors come to the driver, which writes the single
+    * puffin artifact — byte volume proportional to the compressed vectors,
+    * never to the table. Blob-level snapshot/sequence stamps inside the
+    * puffin footer are informational (-1 until commit assigns them); the
+    * MANIFEST carries the authoritative numbers, and readers locate blobs by
+    * the manifest's content_offset/content_size without touching the footer.
     */
   def appendDeletionVectors(spark: SparkSession, table: IceTable,
                             predicate: org.apache.spark.sql.Column,
                             branch: Option[String] = None): IceTable = {
-    import graft.table.{Puffin, Roaring}
     val snap = table.currentSnapshot(branch)
       .getOrElse(throw new IllegalStateException("cannot delete from an empty table"))
-    val perFile: Seq[(String, Array[Byte])] =
-      matchedPositions(spark, table, predicate, branch).map { matches =>
-        import spark.implicits._
-        matches.toDF("_1", "_2").as[(String, Long)]
-          .groupByKey(_._1)
-          .mapGroups { (path, it) =>
-            val arr = it.map(_._2).toArray
-            java.util.Arrays.sort(arr)
-            (path, Roaring.Bitmap64.fromSorted(arr).serialize)
-          }
-          .collect().toSeq
-      }.getOrElse(Nil)
-    if (perFile.isEmpty) return table
-
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val positions = matchedPositions(spark, table, predicate, branch).getOrElse(return table)
     val all = table.entries(snap)
-    val existing: Map[String, ManifestEntry] = all.iterator
-      .filter(e => e.dataFile.content == ContentPositionDeletes &&
-        e.dataFile.fileFormat == FormatPuffin)
-      .flatMap(e => e.dataFile.referencedDataFile.map(_ -> e)).toMap
-    val merged: Seq[(String, Roaring.Bitmap64, Option[ManifestEntry])] =
-      perFile.sortBy(_._1).map { case (p, bytes) =>
-        val fresh = Roaring.Bitmap64.deserialize(bytes)
-        existing.get(p) match {
-          case Some(e) => (p, fresh.union(readDvBitmap(hconf, e.dataFile)), Some(e))
-          case None => (p, fresh, None)
-        }
-      }
-    commitDeletionVectors(spark, table, branch, all,
-      merged.map(m => (m._1, m._2)), merged.flatMap(_._3))
+    val vectors = deletionVectors(spark, positions, all.filter(e =>
+      e.dataFile.content == ContentPositionDeletes && e.dataFile.fileFormat == FormatPuffin))
+    if (vectors.isEmpty) table
+    else commitDeletionVectors(spark, table, branch, all, vectors, dropAlso = Nil)
   }
 
-  /** Writes one puffin file holding `vectors` (referenced path → bitmap) and
-    * commits the DV entries: a pure append when `drop` is empty, otherwise a
-    * delete-tree rewrite that keeps every live delete entry of `all` EXCEPT
-    * the superseded `drop` set. Shared by [[appendDeletionVectors]] and
+  /** Writes one puffin file holding `vectors` and commits their DV entries:
+    * a pure append when nothing is dropped, otherwise a delete-tree rewrite
+    * that keeps every live delete entry of `all` EXCEPT the vectors'
+    * superseded DVs and `dropAlso`. Shared by [[appendDeletionVectors]] and
     * [[graft.table.Maintenance.convertPositionDeletesToDVs]]. */
   private[graft] def commitDeletionVectors(spark: SparkSession, table: IceTable,
                                            branch: Option[String],
                                            all: Seq[ManifestEntry],
-                                           vectors: Seq[(String, graft.table.Roaring.Bitmap64)],
-                                           drop: Seq[ManifestEntry]): IceTable = {
+                                           vectors: Seq[DeletionVector],
+                                           dropAlso: Seq[ManifestEntry]): IceTable = {
     import graft.table.Puffin
     val hconf = spark.sparkContext.hadoopConfiguration
     val puffinPath = s"${table.location}/data/${UUID.randomUUID()}-deletes.puffin"
-    val blobs = vectors.map { case (p, bm) =>
-      Puffin.BlobSpec(Puffin.dvBlobBytes(bm), Puffin.DeletionVectorV1,
-        properties = Map("referenced-data-file" -> p,
-          "cardinality" -> bm.cardinality.toString))
+    val blobs = vectors.map { dv =>
+      Puffin.BlobSpec(Puffin.dvBlobBytes(dv.vector), Puffin.DeletionVectorV1,
+        properties = Map("referenced-data-file" -> dv.path,
+          "cardinality" -> dv.vector.cardinality.toString))
     }
     val (fileLen, metas) = Puffin.write(hconf, puffinPath, blobs,
       snapshotId = -1L, sequenceNumber = -1L)
-    val dvFiles = vectors.zip(metas).map { case ((p, bm), meta) =>
+    val dvFiles = vectors.zip(metas).map { case (dv, meta) =>
       DataFile(
         content = ContentPositionDeletes,
         filePath = puffinPath,
         fileFormat = FormatPuffin,
         partition = Seq.empty,
-        recordCount = bm.cardinality,
+        recordCount = dv.vector.cardinality,
         fileSizeInBytes = fileLen,
-        referencedDataFile = Some(p),
+        referencedDataFile = Some(dv.path),
         contentOffset = Some(meta.offset),
         contentSizeInBytes = Some(meta.length))
     }
+    val drop = dropAlso ++ vectors.flatMap(_.supersedes)
     if (drop.isEmpty)
       table.newTransaction(branch).appendDeletes(dvFiles).commit()
     else {
@@ -1169,17 +1183,18 @@ object IceScan {
     * always CollectLeft-broadcasts the delete side (table.rs:484-692); at
     * 100 TB a large delete generation belongs in a shuffled join instead.
     * Compares the IN-MEMORY estimate: manifest `file_size_in_bytes`
-    * (compressed) × an expansion factor — zstd delete files deserialize to
-    * several times their footprint, so a file just under the raw threshold
-    * can't still blow the executors up. */
+    * (compressed) × 4 — zstd delete files deserialize to several times
+    * their footprint, so a file just under the raw threshold can't still
+    * blow the executors up. `spark.graft.delete.broadcast-threshold`
+    * (bytes, default 64 MiB; 0 forces the shuffled join) must be a whole
+    * number ≥ 0, else the gate fails naming the key and the value. */
   private[graft] def deleteFitsBroadcast(spark: SparkSession, manifestBytes: Long): Boolean = {
-    val broadcastThreshold: Long = spark.conf
-      .getOption("spark.graft.delete.broadcast-threshold")
-      .map(_.toLong).getOrElse(64L << 20)
-    val expansionFactor: Long = spark.conf
-      .getOption("spark.graft.delete.broadcast-expansion")
-      .map(_.toLong).getOrElse(4L)
-    manifestBytes * expansionFactor <= broadcastThreshold
+    val broadcastThreshold: Long =
+      spark.conf.getOption("spark.graft.delete.broadcast-threshold").fold(64L << 20) { raw =>
+        raw.toLongOption.filter(_ >= 0L).getOrElse(throw new IllegalArgumentException(
+          s"spark.graft.delete.broadcast-threshold must be a whole number of bytes >= 0, got '$raw'"))
+      }
+    manifestBytes * 4L <= broadcastThreshold
   }
 
   /** Assembles the (possibly merge-on-read) DataFrame. Equality deletes are

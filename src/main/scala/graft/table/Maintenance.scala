@@ -53,16 +53,6 @@ object Maintenance {
     val expire = bySeq.filterNot(s => keepIds.contains(s.snapshotId))
     if (expire.isEmpty && staleRefs.isEmpty) return table
 
-    def filesOf(snapIds: Set[Long]): (Set[String], Set[String], Set[String]) = {
-      val snaps = snapIds.flatMap(m.snapshotById)
-      val lists = snaps.map(_.manifestList)
-      val manifests = snaps.flatMap(s => table.manifests(s)).map(_.manifestPath)
-      val data = snaps.flatMap(s => table.entries(s)).map(_.dataFile.filePath)
-      (lists, manifests, data)
-    }
-    val (keepLists, keepManifests, keepData) = filesOf(keepIds.intersect(m.snapshots.keySet))
-    val (expLists, expManifests, expData) = filesOf(expire.map(_.snapshotId).toSet)
-
     val committed = table.catalog.updateTable(CommitTable(table.ident,
       Seq(TableRequirement.AssertRefSnapshotId(m.MainBranch, m.currentSnapshotId)),
       staleRefs.map(TableUpdate.RemoveSnapshotRef) :+
@@ -71,13 +61,11 @@ object Maintenance {
 
     // physical deletes AFTER the metadata commit: a failure here leaks
     // orphans (re-runnable) instead of corrupting a live snapshot — and is
-    // logged + counted (Cleanup.rm), never thrown: the expiration COMMIT
+    // logged + counted (Cleanup), never thrown: the expiration COMMIT
     // has landed, so an IO hiccup here must not look like a failed expire
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ctx = s"snapshot expiration of ${table.ident}"
-    Cleanup.rm(conf, expData -- keepData, ctx)
-    Cleanup.rm(conf, expManifests -- keepManifests, ctx)
-    Cleanup.rm(conf, expLists -- keepLists, ctx)
+    Cleanup.deleteUnreachable(spark.sparkContext.hadoopConfiguration, table,
+      removed = expire, kept = committed.snapshots.values,
+      context = s"snapshot expiration of ${table.ident}")
     table
   }
 
@@ -164,10 +152,7 @@ object Maintenance {
     if (all.exists(_.dataFile.content != ContentData))
       throw new IllegalStateException(
         "rewriteDataFiles on a table with row-level deletes: run compact() to fold them first")
-    val m = table.metadata
-    val current = table.entries(snap,
-        manifestFilter = ml => ml.content == 0 && ml.partitionSpecId == m.defaultSpecId)
-      .filter(_.dataFile.content == ContentData)
+    val current = currentSpecData(table, snap)
     // group key normalizes binary partition values: Array[Byte] compares by
     // reference, which would split equal partitions into singleton groups
     // and silently binpack nothing
@@ -209,7 +194,6 @@ object Maintenance {
     * Returns (positional delete files before, after, dangling rows
     * dropped). */
   def rewritePositionDeleteFiles(spark: SparkSession, table: IceTable): (Int, Int, Long) = {
-    import org.apache.spark.sql.functions.col
     val snap = table.currentSnapshot(None).getOrElse(return (0, 0, 0L))
     val all = table.entries(snap)
     // parquet positional files only: deletion vectors are already one
@@ -218,20 +202,8 @@ object Maintenance {
       .partition(_.dataFile.fileFormat == FormatPuffin)
     if (pos.isEmpty) return (0, 0, 0L)
     val eq = all.filter(_.dataFile.content == ContentEqualityDeletes)
-    // live-path filter joins against the manifest-derived path list (driver
-    // metadata already in hand — never a storage listing). Delete rows store
-    // `_metadata.file_path` verbatim (FileSystem-qualified, any scheme), so
-    // the manifest paths qualify driver-side through the SAME Hadoop
-    // resolution the MoR scan uses — exact string equality on any
-    // filesystem, local or remote
-    import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = all.filter(_.dataFile.content == ContentData)
-      .map(e => graft.spark.IceScan.qualifiedPath(hconf, e.dataFile.filePath))
-      .toDF("live_path")
     val total = pos.map(_.dataFile.recordCount).sum
-    val kept = graft.spark.IceScan.readFiles(spark, pos, graft.spark.IceWrite.PosDeleteSchema.toSpark)
-      .join(live, col("file_path") === col("live_path"), "left_semi")
+    val kept = livePositions(spark, all, pos)
       .cache() // read twice: the dangling count + the consolidated write
     val keptCount = kept.count()
     val dropped = total - keptCount
@@ -264,45 +236,13 @@ object Maintenance {
     * Returns (parquet positional files before, DV entries after, positions
     * vectorized). */
   def convertPositionDeletesToDVs(spark: SparkSession, table: IceTable): (Int, Int, Long) = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
     val snap = table.currentSnapshot(None).getOrElse(return (0, 0, 0L))
     val all = table.entries(snap)
     val (dvs, pos) = all.filter(_.dataFile.content == ContentPositionDeletes)
       .partition(_.dataFile.fileFormat == FormatPuffin)
     if (pos.isEmpty) return (0, dvs.size, 0L)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = all.filter(_.dataFile.content == ContentData)
-      .map(e => graft.spark.IceScan.qualifiedPath(hconf, e.dataFile.filePath))
-      .toDF("live_path")
-    // distributed per-file bitmap build over the surviving delete rows; only
-    // the serialized vectors come to the driver
-    val perFile: Seq[(String, Array[Byte])] =
-      graft.spark.IceScan.readFiles(spark, pos, graft.spark.IceWrite.PosDeleteSchema.toSpark)
-        .join(live, col("file_path") === col("live_path"), "left_semi")
-        .select(col("file_path"), col("pos"))
-        .toDF("_1", "_2").as[(String, Long)]
-        .groupByKey(_._1)
-        .mapGroups { (path, it) =>
-          val arr = it.map(_._2).toArray
-          java.util.Arrays.sort(arr)
-          (path, Roaring.Bitmap64.fromSorted(arr).serialize)
-        }
-        .collect().toSeq
-    val existing: Map[String, ManifestEntry] = dvs.iterator
-      .flatMap(e => e.dataFile.referencedDataFile.map(_ -> e)).toMap
-    var vectorized = 0L
-    val merged: Seq[(String, Roaring.Bitmap64, Option[ManifestEntry])] =
-      perFile.sortBy(_._1).map { case (p, bytes) =>
-        val fresh = Roaring.Bitmap64.deserialize(bytes)
-        vectorized += fresh.cardinality
-        existing.get(p) match {
-          case Some(e) =>
-            (p, fresh.union(graft.spark.IceWrite.readDvBitmap(hconf, e.dataFile)), Some(e))
-          case None => (p, fresh, None)
-        }
-      }
-    if (merged.isEmpty) {
+    val vectors = graft.spark.IceWrite.deletionVectors(spark, livePositions(spark, all, pos), dvs)
+    if (vectors.isEmpty) {
       // every parquet position was dangling: drop the files, keep eq + DVs
       val keepAll = all.filter(e => e.dataFile.content != ContentData &&
         !pos.exists(_ eq e))
@@ -310,12 +250,40 @@ object Maintenance {
       return (pos.size, dvs.size, 0L)
     }
     val committed = graft.spark.IceWrite.commitDeletionVectors(spark, table, None, all,
-      merged.map(m => (m._1, m._2)), drop = pos ++ merged.flatMap(_._3))
+      vectors, dropAlso = pos)
     val after = committed.currentSnapshot(None)
       .map(committed.entries(_).count(e => e.dataFile.content == ContentPositionDeletes &&
         e.dataFile.fileFormat == FormatPuffin)).getOrElse(0)
-    (pos.size, after, vectorized)
+    (pos.size, after, vectors.map(_.fresh).sum)
   }
+
+  /** The rows of the parquet positional-delete files `pos` whose
+    * `file_path` names a data file live in `all`: dangling masks (of
+    * compacted or rewritten files) drop. The semi-join runs against the
+    * manifest-derived path list (driver metadata already in hand — never a
+    * storage listing). Delete rows store `_metadata.file_path` verbatim
+    * (FileSystem-qualified, any scheme), so the manifest paths qualify
+    * driver-side through the SAME Hadoop resolution the MoR scan uses —
+    * exact string equality on any filesystem, local or remote. */
+  private def livePositions(spark: SparkSession, all: Seq[ManifestEntry],
+                            pos: Seq[ManifestEntry]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val live = all.filter(_.dataFile.content == ContentData)
+      .map(e => graft.spark.IceScan.qualifiedPath(hconf, e.dataFile.filePath))
+      .toDF("live_path")
+    graft.spark.IceScan.readFiles(spark, pos, graft.spark.IceWrite.PosDeleteSchema.toSpark)
+      .join(live, col("file_path") === col("live_path"), "left_semi")
+  }
+
+  /** The snapshot's DATA entries in manifests under the table's CURRENT
+    * default spec — the set a manifest rewrite can re-encode (foreign-spec
+    * partition records cannot be). */
+  private def currentSpecData(table: IceTable, snap: graft.spec.Snapshot): Seq[ManifestEntry] =
+    table.entries(snap,
+        manifestFilter = ml => ml.content == 0 && ml.partitionSpecId == table.metadata.defaultSpecId)
+      .filter(_.dataFile.content == ContentData)
 
   /** Converts every EQUALITY delete into POSITIONAL deletes — the MoR
     * read-cost maintenance op. An equality delete's masked-row set is
@@ -460,10 +428,7 @@ object Maintenance {
     val before = table.manifests(snap).count(_.content == 0)
     // only manifests under the CURRENT spec rebalance; foreign-spec
     // manifests carry over (their partition records cannot be re-encoded)
-    val entries = table.entries(snap,
-        manifestFilter = ml => ml.content == 0 &&
-          ml.partitionSpecId == table.metadata.defaultSpecId)
-      .filter(_.dataFile.content == ContentData)
+    val entries = currentSpecData(table, snap)
     if (entries.isEmpty) return (before, before)
     val committed = table.newTransaction(None).rewriteManifests(entries).commit()
     val after = committed.currentSnapshot(None)
@@ -481,10 +446,7 @@ object Maintenance {
     val snap = table.currentSnapshot(None).getOrElse(return 0)
     // current-spec files only — the stats rewrite rides rewriteManifests,
     // which cannot re-encode foreign-spec partition records
-    val entries = table.entries(snap,
-        manifestFilter = ml => ml.content == 0 &&
-          ml.partitionSpecId == table.metadata.defaultSpecId)
-      .filter(_.dataFile.content == ContentData)
+    val entries = currentSpecData(table, snap)
     if (entries.isEmpty) return 0
     val primFields = table.schema.fields.filter(_.fieldType match {
       case _: graft.spec.IceType.StructT | _: graft.spec.IceType.ListT |
@@ -513,7 +475,7 @@ object Maintenance {
   /** Compaction: rewrites current content as one balanced file set via a
     * replace transaction. The replace commit drops the superseded snapshots
     * from metadata AND physically deletes the files only they referenced
-    * (Transaction.deleteReplacedFiles — ref-shared files survive), so
+    * (Cleanup.deleteUnreachable — ref-shared files survive), so
     * compaction is metadata-clean and disk-clean in one step. */
   def compact(spark: SparkSession, table: IceTable): IceTable =
     compactWith(spark, table, identity)

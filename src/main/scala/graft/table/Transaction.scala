@@ -15,17 +15,23 @@ import graft.table.ManifestModel._
   * requirements. Executors are never involved — at 100 TB this stays
   * O(manifests), and the manifest tree is kept balanced by the reference's
   * sqrt law so scan planning stays fast as file count grows.
+  *
+  * A transaction carries at most ONE content operation — an append (data
+  * and/or delete files), a replace, a data-manifest rewrite or a
+  * delete-manifest rewrite — beside any metadata changes (schema, spec,
+  * sort order, properties, tags). A second content operation fails at its
+  * builder, naming both. Each operation computes only what is its own: its
+  * manifest list, operation name, summary keys and assigned row ids (and,
+  * for replace, the snapshots it supersedes). One snapshot step in
+  * `commitOnce` does the rest for every kind: it mints the snapshot id and
+  * sequence number, writes the manifest list, totals the new list's data
+  * manifests, builds the snapshot and emits the ref requirement with the
+  * snapshot and ref updates.
   */
 class Transaction(table: IceTable, branch: Option[String]) {
   import Transaction._
 
-  private var appendedData: Seq[DataFile] = Nil
-  private var appendedDeletes: Seq[DataFile] = Nil
-  private var replaceFiles: Option[Seq[DataFile]] = None
-  private var rewriteEntries: Option[Seq[ManifestEntry]] = None
-  private var rewriteAdded: Seq[DataFile] = Nil
-  private var rewriteDeleteEntries: Option[Seq[ManifestEntry]] = None
-  private var rewriteDeleteAdded: Seq[DataFile] = Nil
+  private var content: Option[Content] = None
   private var propertyUpdates: Map[String, String] = Map.empty
   private var propsRetrySafe = true // vacuous while no property updates
   private var propertyRemovals: Seq[String] = Nil
@@ -47,41 +53,40 @@ class Transaction(table: IceTable, branch: Option[String]) {
     extraSummary ++= kv; this
   }
 
-  def appendData(files: Seq[DataFile]): Transaction = {
-    require(rewriteEntries.isEmpty && rewriteDeleteEntries.isEmpty,
-      "manifest rewrites cannot combine with appends or replace in one transaction")
-    appendedData ++= files; this
+  /** The one exclusivity rule: appends of data and delete files accumulate
+    * into one append; any other pair of content operations fails, naming
+    * both. Appending nothing is not an operation. */
+  private def setContent(op: String, next: Content): Transaction = {
+    content = (content, next) match {
+      case (cur, Append(d, x)) if d.isEmpty && x.isEmpty => cur
+      case (None, n) => Some(n)
+      case (Some(Append(d0, x0)), Append(d, x)) => Some(Append(d0 ++ d, x0 ++ x))
+      case (Some(cur), _) => throw new IllegalArgumentException(
+        s"$op cannot combine with ${cur.name} in one transaction: " +
+          "a transaction carries one content operation")
+    }
+    this
   }
+
+  def appendData(files: Seq[DataFile]): Transaction = setContent("appendData", Append(files, Nil))
   def appendDeletes(files: Seq[DataFile]): Transaction = {
-    require(rewriteEntries.isEmpty && rewriteDeleteEntries.isEmpty,
-      "manifest rewrites cannot combine with appends or replace in one transaction")
     // row-level (merge-on-read) deletes are a format V2 feature; a V1 table
     // has no sequence numbers to order them against (Iceberg spec, and
     // table_metadata.rs V1 serde omits sequence numbers entirely)
     if (table.metadata.formatVersion < 2)
       throw new IllegalStateException(
         "row-level deletes require format-version 2 (V1 tables are copy-on-write only)")
-    appendedDeletes ++= files; this
+    setContent("appendDeletes", Append(Nil, files))
   }
   /** Replace all table content with `files` (compaction / full rewrite, T3). */
-  def replace(files: Seq[DataFile]): Transaction = {
-    require(rewriteEntries.isEmpty && rewriteDeleteEntries.isEmpty,
-      "manifest rewrites cannot combine with appends or replace in one transaction")
-    replaceFiles = Some(files); this
-  }
+  def replace(files: Seq[DataFile]): Transaction = setContent("replace", Replace(files))
   /** Rewrite the DATA manifest tree only: a new snapshot referencing the
     * SAME data files through freshly balanced manifests — entries keep their
     * sequence/snapshot numbers (MoR delete ordering depends on them), delete
     * manifests carry over untouched, and history is preserved (unlike
     * `replace`, no snapshots are removed). Zero data IO. */
-  def rewriteManifests(entries: Seq[ManifestEntry]): Transaction = {
-    require(entries.forall(e => e.sequenceNumber.isDefined && e.dataFile.content == ContentData),
-      "rewriteManifests takes inherited DATA entries (explicit sequence numbers)")
-    require(appendedData.isEmpty && appendedDeletes.isEmpty && replaceFiles.isEmpty &&
-      rewriteDeleteEntries.isEmpty,
-      "rewriteManifests cannot combine with appends or replace in one transaction")
-    rewriteEntries = Some(entries); this
-  }
+  def rewriteManifests(entries: Seq[ManifestEntry]): Transaction =
+    rewriteData("rewriteManifests", entries, Nil)
   /** Partial data-file rewrite (binpack compaction): a new snapshot where
     * `keep` entries survive with their ORIGINAL sequence numbers (MoR
     * ordering preserved) and `added` files replace the rewritten originals
@@ -89,9 +94,12 @@ class Transaction(table: IceTable, branch: Option[String]) {
     * untouched — superseded files stay reachable through older snapshots
     * until expiration; unlike `rewriteManifests`, the data file set
     * changes. */
-  def rewriteFiles(keep: Seq[ManifestEntry], added: Seq[DataFile]): Transaction = {
-    rewriteManifests(keep)
-    rewriteAdded = added; this
+  def rewriteFiles(keep: Seq[ManifestEntry], added: Seq[DataFile]): Transaction =
+    rewriteData("rewriteFiles", keep, added)
+  private def rewriteData(op: String, keep: Seq[ManifestEntry], added: Seq[DataFile]): Transaction = {
+    require(keep.forall(e => e.sequenceNumber.isDefined && e.dataFile.content == ContentData),
+      s"$op takes inherited DATA entries (explicit sequence numbers)")
+    setContent(op, RewriteData(keep, added))
   }
   /** Rewrite the DELETE manifest tree only (positional-delete compaction):
     * a new snapshot where `keep` delete entries survive with their ORIGINAL
@@ -142,10 +150,7 @@ class Transaction(table: IceTable, branch: Option[String]) {
     }
     require(added.forall(_.content == ContentPositionDeletes),
       "only positional delete files may enter at a fresh sequence number")
-    require(appendedData.isEmpty && appendedDeletes.isEmpty && replaceFiles.isEmpty &&
-      rewriteEntries.isEmpty,
-      "rewriteDeletes cannot combine with other content operations in one transaction")
-    rewriteDeleteEntries = Some(keep); rewriteDeleteAdded = added; this
+    setContent("rewriteDeletes", RewriteDeletes(keep, added))
   }
   /** Property updates carried by this commit. `ownedExclusively` declares
     * that the CALLER is the only writer of these keys (e.g. a streaming
@@ -197,6 +202,11 @@ class Transaction(table: IceTable, branch: Option[String]) {
     * race, then a ref-moved failure once the metadata lands), so the budget
     * is 2× a small contention fan-in plus slack, with linear backoff to let
     * in-flight metadata writes surface before the re-read.
+    *
+    * A replace then deletes the files only its superseded snapshots
+    * reached (T3 reference parity: transaction/mod.rs:339-353 →
+    * table/mod.rs:359-411), strictly after the commit lands and through
+    * [[Cleanup.deleteUnreachable]], which never throws.
     */
   def commit(): IceTable = {
     // retryable shapes: a pure data append (two concurrent appenders don't
@@ -206,21 +216,31 @@ class Transaction(table: IceTable, branch: Option[String]) {
     // else writes), and the degenerate owned-properties-ONLY commit (an
     // empty micro-batch's ledger stamp) — everything else surfaces the
     // conflict (read-modify-write semantics)
-    val pureDataAppend = replaceFiles.isEmpty && rewriteEntries.isEmpty &&
-      rewriteDeleteEntries.isEmpty &&
-      newSchema.isEmpty && newSpecFields.isEmpty && newSortOrder.isEmpty &&
-      !resetSortOrder && propsRetrySafe && propertyRemovals.isEmpty &&
-      refUpdates.isEmpty && appendedDeletes.isEmpty &&
-      (appendedData.nonEmpty || propertyUpdates.nonEmpty)
+    val pureDataAppend = (content match {
+      case Some(Append(_, deletes)) => deletes.isEmpty
+      case Some(_) => false
+      case None => propertyUpdates.nonEmpty
+    }) && newSchema.isEmpty && newSpecFields.isEmpty && newSortOrder.isEmpty &&
+      !resetSortOrder && propsRetrySafe && propertyRemovals.isEmpty && refUpdates.isEmpty
     val maxAttempts = if (pureDataAppend) 10 else 1
     // captured BEFORE the commit mutates table.metadata: the pre-commit
     // metadata is what knows which snapshots a replace supersedes
-    val oldMeta = if (replaceFiles.isDefined) Some(table.metadata) else None
+    val oldMeta = content.collect { case _: Replace => table.metadata }
     var attempt = 1
     while (true) {
       try {
         val committed = commitOnce()
-        oldMeta.foreach(old => deleteReplacedFiles(old, committed.metadata))
+        oldMeta.foreach { old =>
+          val kept = committed.metadata.snapshots
+          // the active session's Hadoop conf carries filesystem credentials /
+          // endpoints (s3a, custom defaultFS) a bare Configuration would lack
+          val conf = org.apache.spark.sql.SparkSession.getActiveSession
+            .map(_.sparkContext.hadoopConfiguration)
+            .getOrElse(new org.apache.hadoop.conf.Configuration())
+          Cleanup.deleteUnreachable(conf, table,
+            removed = old.snapshots.values.filterNot(s => kept.contains(s.snapshotId)),
+            kept = kept.values, context = s"replace cleanup of ${table.ident}")
+        }
         return committed
       }
       catch {
@@ -233,55 +253,6 @@ class Transaction(table: IceTable, branch: Option[String]) {
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** Physical cleanup after a REPLACE commit (T3 reference parity: the
-    * reference deletes the superseded data/manifest/list files once the
-    * commit lands, transaction/mod.rs:339-353 → table/mod.rs:359-411).
-    * Deletes only files of snapshots the commit actually REMOVED, minus
-    * anything a surviving snapshot (the new head, or a branch/tag lineage
-    * the replace guard kept) still references — a file shared across refs
-    * survives. Runs strictly AFTER the metadata commit and best-effort
-    * per file: a failed delete leaks a re-runnable orphan (see
-    * Maintenance.removeOrphanFiles), never a corrupt live snapshot.
-    */
-  private def deleteReplacedFiles(oldMeta: graft.spec.TableMetadata,
-                                  newMeta: graft.spec.TableMetadata): Unit =
-    // the COMMIT has already landed: nothing in this cleanup may propagate —
-    // a read hiccup on an old manifest would otherwise make the caller
-    // believe a committed replace failed (and e.g. re-run a compaction).
-    // Any skipped deletion is a re-runnable orphan, not a correctness loss —
-    // but never a SILENT one: Cleanup.rm WARNs per path and counts failures
-    // so a chronically failing cleanup is visible before remove_orphan_files
-    // is ever run by hand.
-    try {
-      val removedIds = oldMeta.snapshots.keySet -- newMeta.snapshots.keySet
-      if (removedIds.isEmpty) return
-      def filesOf(meta: graft.spec.TableMetadata, ids: Set[Long]): (Set[String], Set[String], Set[String]) = {
-        val snaps = ids.flatMap(meta.snapshotById)
-        val lists = snaps.map(_.manifestList)
-        val mans = snaps.flatMap(s => table.manifests(s)).map(_.manifestPath)
-        val data = snaps.flatMap(s => table.entries(s)).map(_.dataFile.filePath)
-        (lists, mans, data)
-      }
-      val (expLists, expMans, expData) = filesOf(oldMeta, removedIds)
-      val (keepLists, keepMans, keepData) = filesOf(newMeta, newMeta.snapshots.keySet)
-      // the active session's Hadoop conf carries filesystem credentials /
-      // endpoints (s3a, custom defaultFS) a bare Configuration would lack
-      val conf = org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration())
-      val ctx = s"replace cleanup of ${table.ident}"
-      Cleanup.rm(conf, expData -- keepData, ctx)
-      Cleanup.rm(conf, expMans -- keepMans, ctx)
-      Cleanup.rm(conf, expLists -- keepLists, ctx)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        Cleanup.failedDeletes.incrementAndGet()
-        org.slf4j.LoggerFactory.getLogger("graft.table.Cleanup").warn(
-          s"replace cleanup of ${table.ident} aborted before deleting " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}) — superseded files " +
-            "remain as re-collectable orphans (see remove_orphan_files)")
-    }
 
   /** Iceberg V3 row lineage (`write.row-lineage.enabled=true`): assigns
     * `first_row_id` sequentially from the table's next-row-id to DATA files
@@ -308,8 +279,73 @@ class Transaction(table: IceTable, branch: Option[String]) {
       (out, next - m.nextRowId)
     }
 
-  private def lineageSummary(assigned: Long): Map[String, String] =
-    if (assigned > 0L) Map("assigned-row-ids" -> assigned.toString) else Map.empty
+  /** What content operation `c` alone decides about its snapshot; the
+    * shared snapshot step in [[commitOnce]] does the rest. */
+  private def produce(c: Content, m: graft.spec.TableMetadata, parent: Option[Snapshot],
+                      branchName: String, schema: IceSchema,
+                      snapshotId: Long, seq: Long): Produced = {
+    // new files enter at THIS snapshot's sequence number; kept entries keep
+    // their inherited numbers (both written explicitly)
+    def added(f: DataFile) = ManifestEntry(StatusAdded, Some(snapshotId), Some(seq), Some(seq), f)
+    def parentManifests = parent.map(p => table.manifests(p)).getOrElse(Nil)
+    c match {
+      case Append(data0, deletes) =>
+        // carry over existing manifests; merge new data files into the best one
+        val (dataManifests, deleteManifests) = parentManifests.partition(_.content == 0)
+        val (data, assignedRows) = assignRowIds(m, data0)
+        val mergedData =
+          if (data.isEmpty) dataManifests
+          else mergeAppend(table, schema, dataManifests, data, snapshotId, seq)
+        val newDeleteManifests =
+          if (deletes.isEmpty) Nil
+          else Seq(writeManifest(table, schema, deletes.map(added), snapshotId, seq, content = 1))
+        // operation by file mix (operation.rs:108-115)
+        val op = if (deletes.isEmpty) "append" else if (data.isEmpty) "delete" else "overwrite"
+        Produced(mergedData ++ deleteManifests ++ newDeleteManifests, op,
+          Map("added-data-files" -> data.size.toString,
+            "added-delete-files" -> deletes.size.toString,
+            "added-records" -> data.map(_.recordCount).sum.toString), assignedRows)
+      case Replace(files0) =>
+        val (files, assignedRows) = assignRowIds(m, files0)
+        // a bare replace supersedes the table's history (reference semantics:
+        // transaction/mod.rs:339-353 captures old metadata and deletes its
+        // files post-commit) — but only the history no OTHER ref still
+        // reaches: a branch or tag pointing into the old lineage keeps its
+        // snapshots (and, downstream, their files) alive. Without this guard
+        // RemoveSnapshots would also silently drop those refs.
+        val refProtected: Set[Long] = m.refs.collect {
+          case (name, r) if name != branchName => m.ancestorsOf(r.snapshotId)
+        }.flatten.toSet
+        Produced(writeSplitManifests(table, schema, files.map(added), snapshotId, seq, files.size),
+          "replace",
+          Map("added-data-files" -> files.size.toString,
+            "added-records" -> files.map(_.recordCount).sum.toString), assignedRows,
+          Seq(TableUpdate.RemoveSnapshots(m.snapshots.keys.filterNot(refProtected).toSeq)))
+      case RewriteData(keep, added0) =>
+        val (addedFiles, assignedRows) = assignRowIds(m, added0)
+        val dataManifests = writeSplitManifests(table, schema,
+          keep.map(_.copy(status = StatusExisting)) ++ addedFiles.map(added),
+          snapshotId, seq, keep.size + addedFiles.size)
+        // carry over untouched: delete manifests AND data manifests under a
+        // FOREIGN spec — their partition records cannot be re-encoded under
+        // the current spec's Avro schema (spec evolution; compaction migrates)
+        val carried = parentManifests.filter(ml =>
+          ml.content != 0 || ml.partitionSpecId != m.defaultSpecId)
+        Produced(dataManifests ++ carried, "replace",
+          Map("rewritten-data-manifests" -> dataManifests.size.toString,
+            "added-data-files" -> addedFiles.size.toString,
+            "added-records" -> addedFiles.map(_.recordCount).sum.toString), assignedRows)
+      case RewriteDeletes(keep, addedFiles) =>
+        val allDel = keep.map(_.copy(status = StatusExisting)) ++ addedFiles.map(added)
+        val deleteManifests =
+          if (allDel.isEmpty) Nil
+          else Seq(writeManifest(table, schema, allDel, snapshotId, seq, content = 1))
+        // data manifests carry over untouched (any spec) — this op never
+        // changes what data exists, only how its delete masks are stored
+        Produced(parentManifests.filter(_.content == 0) ++ deleteManifests, "delete",
+          Map("rewritten-delete-files" -> addedFiles.size.toString))
+    }
+  }
 
   private def commitOnce(): IceTable = {
     val m = table.metadata
@@ -360,145 +396,29 @@ class Transaction(table: IceTable, branch: Option[String]) {
       updates :+= TableUpdate.SetSnapshotRef(name, id, "tag", maxAge, minKeep)
     }
 
-    val schemaForWrite = newSchema.getOrElse(m.currentSchema)
-
-    if (replaceFiles.isDefined) {
-      val (files, assignedRows) = assignRowIds(m, replaceFiles.get)
+    // the one snapshot step, shared by every content operation
+    content.foreach { c =>
       val snapshotId = newSnapshotId()
       val seq = m.lastSequenceNumber + 1
-      val entries = files.map(f =>
-        ManifestEntry(StatusAdded, Some(snapshotId), Some(seq), Some(seq), f))
-      val manifests = writeSplitManifests(table, schemaForWrite, entries, snapshotId, seq, files.size)
+      val p = produce(c, m, parent, branchName, newSchema.getOrElse(m.currentSchema),
+        snapshotId, seq)
       val listPath = s"${m.location}/metadata/snap-$snapshotId-$seq-${UUID.randomUUID()}.avro"
-      ManifestIO.writeManifestList(listPath, manifests)
-      val snap = Snapshot(snapshotId, parent.map(_.snapshotId), seq,
-        System.currentTimeMillis(), listPath,
-        Map("operation" -> "replace",
-          "added-data-files" -> files.size.toString,
-          "added-records" -> files.map(_.recordCount).sum.toString,
-          "total-records" -> files.map(_.recordCount).sum.toString,
-          "total-data-files" -> files.size.toString) ++ lineageSummary(assignedRows) ++ extraSummary,
-        Some(m.currentSchemaId),
-        firstRowId = if (assignedRows > 0L) Some(m.nextRowId) else None)
-      requirements :+= TableRequirement.AssertRefSnapshotId(branchName, expectedRef)
-      // a bare replace supersedes the table's history (reference semantics:
-      // transaction/mod.rs:339-353 captures old metadata and deletes its
-      // files post-commit) — but only the history no OTHER ref still
-      // reaches: a branch or tag pointing into the old lineage keeps its
-      // snapshots (and, downstream, their files) alive. Without this guard
-      // RemoveSnapshots would also silently drop those refs.
-      val refProtected: Set[Long] = m.refs.collect {
-        case (name, r) if name != branchName => m.ancestorsOf(r.snapshotId)
-      }.flatten.toSet
-      updates :+= TableUpdate.RemoveSnapshots(
-        m.snapshots.keys.filterNot(refProtected).toSeq)
-      updates :+= TableUpdate.AddSnapshot(snap)
-      updates :+= TableUpdate.SetSnapshotRef(branchName, snapshotId, "branch")
-    } else if (rewriteEntries.isDefined) {
-      val entries = rewriteEntries.get
-      val snapshotId = newSnapshotId()
-      val seq = m.lastSequenceNumber + 1
-      // binpack additions enter at THIS snapshot's sequence number; kept
-      // entries keep their inherited numbers (both written explicitly)
-      val (rewriteStamped, assignedRows) = assignRowIds(m, rewriteAdded)
-      val addedEntries = rewriteStamped.map(f =>
-        ManifestEntry(StatusAdded, Some(snapshotId), Some(seq), Some(seq), f))
-      val dataManifests = writeSplitManifests(table, schemaForWrite,
-        entries.map(_.copy(status = StatusExisting)) ++ addedEntries,
-        snapshotId, seq, entries.size + addedEntries.size)
-      // carry over untouched: delete manifests AND data manifests under a
-      // FOREIGN spec — their partition records cannot be re-encoded under
-      // the current spec's Avro schema (spec evolution; compaction migrates)
-      val carried = parent.map(p => table.manifests(p)).getOrElse(Nil)
-        .filter(ml => ml.content != 0 ||
-          (ml.content == 0 && ml.partitionSpecId != m.defaultSpecId))
-      val listPath = s"${m.location}/metadata/snap-$snapshotId-$seq-${UUID.randomUUID()}.avro"
-      ManifestIO.writeManifestList(listPath, dataManifests ++ carried)
-      // totals include CARRIED data manifests (foreign-spec layouts), not
-      // just the rewritten current-spec entries — same contract as append
-      val allData = dataManifests ++ carried.filter(_.content == 0)
-      val snap = Snapshot(snapshotId, parent.map(_.snapshotId), seq,
-        System.currentTimeMillis(), listPath,
-        Map("operation" -> "replace",
-          "rewritten-data-manifests" -> dataManifests.size.toString,
-          "added-data-files" -> rewriteAdded.size.toString,
-          "added-records" -> rewriteAdded.map(_.recordCount).sum.toString,
-          "total-records" -> allData.map(ml => ml.addedRowsCount + ml.existingRowsCount).sum.toString,
-          "total-data-files" -> allData.map(ml => ml.addedFilesCount + ml.existingFilesCount).sum.toString) ++ lineageSummary(assignedRows) ++ extraSummary,
-        Some(m.currentSchemaId),
-        firstRowId = if (assignedRows > 0L) Some(m.nextRowId) else None)
-      requirements :+= TableRequirement.AssertRefSnapshotId(branchName, expectedRef)
-      updates :+= TableUpdate.AddSnapshot(snap)
-      updates :+= TableUpdate.SetSnapshotRef(branchName, snapshotId, "branch")
-    } else if (rewriteDeleteEntries.isDefined) {
-      val keep = rewriteDeleteEntries.get
-      val snapshotId = newSnapshotId()
-      val seq = m.lastSequenceNumber + 1
-      val addedEntries = rewriteDeleteAdded.map(f =>
-        ManifestEntry(StatusAdded, Some(snapshotId), Some(seq), Some(seq), f))
-      val allDel = keep.map(_.copy(status = StatusExisting)) ++ addedEntries
-      val deleteManifests: Seq[ManifestListEntry] =
-        if (allDel.isEmpty) Nil
-        else Seq(writeManifest(table, schemaForWrite, allDel, snapshotId, seq, content = 1))
-      // data manifests carry over untouched (any spec) — this op never
-      // changes what data exists, only how its delete masks are stored
-      val carried = parent.map(p => table.manifests(p)).getOrElse(Nil).filter(_.content == 0)
-      val listPath = s"${m.location}/metadata/snap-$snapshotId-$seq-${UUID.randomUUID()}.avro"
-      ManifestIO.writeManifestList(listPath, carried ++ deleteManifests)
-      val snap = Snapshot(snapshotId, parent.map(_.snapshotId), seq,
-        System.currentTimeMillis(), listPath,
-        Map("operation" -> "delete",
-          "rewritten-delete-files" -> rewriteDeleteAdded.size.toString,
-          "total-records" -> carried.map(ml => ml.addedRowsCount + ml.existingRowsCount).sum.toString,
-          "total-data-files" -> carried.map(ml => ml.addedFilesCount + ml.existingFilesCount).sum.toString) ++ extraSummary,
-        Some(m.currentSchemaId))
-      requirements :+= TableRequirement.AssertRefSnapshotId(branchName, expectedRef)
-      updates :+= TableUpdate.AddSnapshot(snap)
-      updates :+= TableUpdate.SetSnapshotRef(branchName, snapshotId, "branch")
-    } else if (appendedData.nonEmpty || appendedDeletes.nonEmpty) {
-      val snapshotId = newSnapshotId()
-      val seq = m.lastSequenceNumber + 1
-      // carry over existing manifests; merge new data files into the best one
-      val existing: Seq[ManifestListEntry] =
-        parent.map(p => table.manifests(p)).getOrElse(Nil)
-      val (dataManifests, deleteManifests) = existing.partition(_.content == 0)
-
-      val (appendStamped, assignedRows) = assignRowIds(m, appendedData.toSeq)
-      val mergedData: Seq[ManifestListEntry] =
-        if (appendStamped.isEmpty) dataManifests
-        else mergeAppend(table, schemaForWrite, dataManifests, appendStamped, snapshotId, seq)
-
-      val newDeleteManifests: Seq[ManifestListEntry] =
-        if (appendedDeletes.isEmpty) Nil
-        else {
-          val entries = appendedDeletes.map(f =>
-            ManifestEntry(StatusAdded, Some(snapshotId), Some(seq), Some(seq), f))
-          Seq(writeManifest(table, schemaForWrite, entries, snapshotId, seq, content = 1))
-        }
-
-      val allManifests = mergedData ++ deleteManifests ++ newDeleteManifests
-      val listPath = s"${m.location}/metadata/snap-$snapshotId-$seq-${UUID.randomUUID()}.avro"
-      ManifestIO.writeManifestList(listPath, allManifests)
-      // operation by file mix (operation.rs:108-115)
-      val op =
-        if (appendedDeletes.nonEmpty && appendedData.nonEmpty) "overwrite"
-        else if (appendedDeletes.nonEmpty) "delete"
-        else "append"
-      // running totals from the DATA manifest list entries (added + existing
+      ManifestIO.writeManifestList(listPath, p.manifests)
+      // running totals from the new list's DATA manifests (added + existing
       // counts are already aggregated per manifest — no file-level scan)
-      val totalRecords = mergedData.map(ml => ml.addedRowsCount + ml.existingRowsCount).sum
-      val totalFiles = mergedData.map(ml => ml.addedFilesCount + ml.existingFilesCount).sum
+      val data = p.manifests.filter(_.content == 0)
+      val totals = Map(
+        "total-records" -> data.map(ml => ml.addedRowsCount + ml.existingRowsCount).sum.toString,
+        "total-data-files" -> data.map(ml => ml.addedFilesCount + ml.existingFilesCount).sum.toString)
+      val lineage =
+        if (p.assignedRows > 0L) Map("assigned-row-ids" -> p.assignedRows.toString) else Map.empty
       val snap = Snapshot(snapshotId, parent.map(_.snapshotId), seq,
         System.currentTimeMillis(), listPath,
-        Map("operation" -> op,
-          "added-data-files" -> appendedData.size.toString,
-          "added-delete-files" -> appendedDeletes.size.toString,
-          "added-records" -> appendedData.map(_.recordCount).sum.toString,
-          "total-records" -> totalRecords.toString,
-          "total-data-files" -> totalFiles.toString) ++ lineageSummary(assignedRows) ++ extraSummary,
+        Map("operation" -> p.operation) ++ p.summary ++ totals ++ lineage ++ extraSummary,
         Some(m.currentSchemaId),
-        firstRowId = if (assignedRows > 0L) Some(m.nextRowId) else None)
+        firstRowId = if (p.assignedRows > 0L) Some(m.nextRowId) else None)
       requirements :+= TableRequirement.AssertRefSnapshotId(branchName, expectedRef)
+      updates ++= p.updates
       updates :+= TableUpdate.AddSnapshot(snap)
       updates :+= TableUpdate.SetSnapshotRef(branchName, snapshotId, "branch")
     }
@@ -507,7 +427,7 @@ class Transaction(table: IceTable, branch: Option[String]) {
     val committed = table.catalog.updateTable(CommitTable(table.ident, requirements, updates))
     table.metadata = committed
     // replace-op physical file cleanup happens in commit(), strictly after
-    // this method returns the landed metadata (deleteReplacedFiles)
+    // this method returns the landed metadata
     table
   }
 }
@@ -517,6 +437,33 @@ object Transaction {
   val MinDatafilesPerManifest = 4
 
   def newSnapshotId(): Long = math.abs(UUID.randomUUID().getLeastSignificantBits)
+
+  /** The one content operation a transaction carries; `name` is the
+    * builder that set it, for the exclusivity message. */
+  private sealed trait Content { def name: String }
+  private final case class Append(data: Seq[DataFile], deletes: Seq[DataFile]) extends Content {
+    def name: String =
+      if (deletes.isEmpty) "appendData" else if (data.isEmpty) "appendDeletes"
+      else "appendData + appendDeletes"
+  }
+  private final case class Replace(files: Seq[DataFile]) extends Content {
+    def name: String = "replace"
+  }
+  private final case class RewriteData(keep: Seq[ManifestEntry], added: Seq[DataFile])
+      extends Content {
+    def name: String = if (added.isEmpty) "rewriteManifests" else "rewriteFiles"
+  }
+  private final case class RewriteDeletes(keep: Seq[ManifestEntry], added: Seq[DataFile])
+      extends Content {
+    def name: String = "rewriteDeletes"
+  }
+
+  /** What one content operation contributes to its snapshot: the new
+    * manifest list, the operation name and its own summary keys, the row
+    * ids it assigned, and updates that precede the snapshot's own. */
+  private final case class Produced(manifests: Seq[ManifestListEntry], operation: String,
+                                    summary: Map[String, String], assignedRows: Long = 0L,
+                                    updates: Seq[TableUpdate] = Nil)
 
   /** limit = 4 + ceil(sqrt(total)) (operation.rs:645-666). */
   def manifestLimit(totalFiles: Int): Int =

@@ -211,6 +211,22 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.unset("spark.graft.delete.broadcast-threshold")
   }
 
+  test("a malformed delete broadcast threshold fails naming the key and the value") {
+    val key = "spark.graft.delete.broadcast-threshold"
+    for (v <- Seq("64MB", "-1", "1.5")) {
+      spark.conf.set(key, v)
+      try {
+        val msg = intercept[IllegalArgumentException](
+          IceScan.deleteFitsBroadcast(spark, 1L)).getMessage
+        assert(msg.contains(key) && msg.contains(s"'$v'"), msg)
+      } finally spark.conf.unset(key)
+    }
+    spark.conf.set(key, "0")
+    try assert(!IceScan.deleteFitsBroadcast(spark, 1L) && IceScan.deleteFitsBroadcast(spark, 0L))
+    finally spark.conf.unset(key)
+    assert(IceScan.deleteFitsBroadcast(spark, 16L << 20) && !IceScan.deleteFitsBroadcast(spark, (16L << 20) + 1))
+  }
+
   test("convertPositionDeletesToDVs folds parquet positions (and old DVs) into vectors") {
     implicit val s: SparkSession = spark
     val cat = freshCatalog()
