@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
   *
   * Candidate generation is a pure EQUI-join in every branch — never an
   * all-pairs comparison — followed by an exact thresholded-Levenshtein
-  * verify on the survivors. Three complete-by-construction branches keyed
-  * on string length (`k` = the distance budget, `q` = `k+1`):
+  * verify on the survivors. Four complete-by-construction branches: the
+  * deletion-neighborhood branch (branch 0 below) for strings up to
+  * `graft.fuzzy.symdelete.maxlen`, then three keyed on string length
+  * (`k` = the distance budget, `q` = `k+1`):
   *
   *  - **len > (k+1)²−1 — Ed-Join prefix filtering** (Xiao, Wang, Lin,
   *    "Ed-Join", PVLDB 1(1), public): one edit destroys at most `q`
@@ -266,7 +268,7 @@ object FuzzyJoin {
           idx("seg") === segProbe("sub") && idx("id_x") =!= segProbe("id_y"))
       // route by the pair's SHORTER side: it must fall in the indexed band
       // [q, medMax] — below q the pair belongs to the tiny branch, above
-      // medMax to the prefix branch (keeps the three branches disjoint)
+      // medMax to the prefix branch (keeps the four branches disjoint)
       .filter(least(col("len_x"), col("len_y")).between(q, medMax))
       .select(
         least(col("id_x"), col("id_y")).as("id_a"),

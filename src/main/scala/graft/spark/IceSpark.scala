@@ -785,8 +785,8 @@ object IceScan {
     * (Object.toString is identity-based and would give the SAME partition
     * different tags per manifest entry); null renders as a reserved
     * sentinel. Every [[readFiles]] row carries its file's tag as the
-    * `_metadata.partition_tag` constant — the key of the MoR fold's
-    * scoped-delete anti-joins and of Maintenance's eq->pos conversion. */
+    * `_metadata.partition_tag` constant — the key of the MoR read's
+    * scoped equality masks and of Maintenance's eq->pos conversion. */
   private[graft] def pkTag(p: Seq[(String, Any)]): String = p.map {
     case (_, null) => "\u0000"
     case (_, b: Array[Byte]) => b.map("%02x".format(_)).mkString
@@ -796,7 +796,7 @@ object IceScan {
     case (_, v) => v.toString
   }.mkString("\u0001")
 
-  /** The delete-scoping rule, shared by the MoR read fold and the eq->pos
+  /** The delete-scoping rule, shared by the MoR read masks and the eq->pos
     * conversion in [[graft.table.Maintenance]]: a delete file written
     * unpartitioned (global equality delete) round-trips through the
     * manifest's partition struct as all-null values, so only a delete with
@@ -1143,7 +1143,7 @@ object IceScan {
           // the partition-space predicate excludes the tuple, every row
           // the file could mask is itself outside the scan's (re-applied,
           // inexact-pruning contract) predicate — planning the file would
-          // widen the MoR fold for nothing. At 100 TB this is what keeps a
+          // widen the MoR masks for nothing. At 100 TB this is what keeps a
           // partition-pruned scan's delete side O(affected partitions),
           // not O(table's delete history). Global deletes (no real
           // tuple), foreign-name tuples, and anything the evaluator can't
@@ -1178,10 +1178,11 @@ object IceScan {
     }
   }
 
-  /** The delete-side broadcast size gate, shared by the MoR read fold and
-    * the eq→pos conversion in [[graft.table.Maintenance]]. The reference
-    * always CollectLeft-broadcasts the delete side (table.rs:484-692); at
-    * 100 TB a large delete generation belongs in a shuffled join instead.
+  /** The delete-side size gate, shared by the MoR read masks and the
+    * eq→pos conversion in [[graft.table.Maintenance]]. The reference always
+    * CollectLeft-broadcasts the delete side (table.rs:484-692); under the
+    * gate the read masks through the executor-side delete index instead,
+    * and at 100 TB a large delete generation belongs in a shuffled join.
     * Compares the IN-MEMORY estimate: manifest `file_size_in_bytes`
     * (compressed) × 4 — zstd delete files deserialize to several times
     * their footprint, so a file just under the raw threshold can't still
@@ -1197,45 +1198,65 @@ object IceScan {
     manifestBytes * 4L <= broadcastThreshold
   }
 
-  /** Assembles the (possibly merge-on-read) DataFrame. Equality deletes are
-    * compiled to anti-join chains in sequence-number order (J1,
-    * table.rs:484-692): a delete file masks exactly the data files with
-    * strictly smaller sequence numbers in its partition. The delete side is
-    * broadcast — the Spark analogue of the reference's CollectLeft hash join.
+  /** Assembles the (possibly merge-on-read) DataFrame: ONE read of all data
+    * files, then the delete masks. The reference compiles equality deletes
+    * into a sequence-ordered chain of broadcast anti-joins (J1,
+    * table.rs:484-692); here the sequence rule rides each row instead. The
+    * read carries `_metadata.sequence_number`, the partition tag,
+    * `file_path` and `row_index` only when a delete kind needs them, so the
+    * plan does not grow with the number of delete commits.
     *
-    * Partition scoping lives in the JOIN KEY, not the plan shape: one global
-    * sequence-ordered fold covers every partition, with partition-scoped
-    * delete files anti-joining on (equality cols, partition tag) — the tag
-    * is a canonical rendering of the manifest's partition tuple, which
-    * [[readFiles]] attaches to both sides as the `_metadata.partition_tag`
-    * constant. Union width is therefore O(distinct delete sequence points),
-    * not O(delete-affected partitions): thousands of affected partitions at
-    * 100 TB no longer explode the logical plan.
+    * Deletes that fit the gate ([[deleteFitsBroadcast]]) mask through one
+    * executor-side index, as Iceberg Java's `DeleteFilter` does: the plan
+    * carries only a descriptor of the delete files, and no delete scan,
+    * exchange or join. Equality deletes become one
+    * [[graft.spark.expressions.EqDeleted]] filter (key, plus the tag when
+    * partition-scoped, to the max delete sequence number, which must exceed
+    * the row's); parquet position deletes and deletion vectors become one
+    * [[graft.spark.expressions.DvDeleted]] filter. Executors decode each
+    * delete file once per JVM, on first probe.
+    *
+    * Past the gate, each (equality ids, scoped) group is one anti-join on
+    * the null-safe keys, the tag when scoped, and `data_seq < delete_seq`;
+    * parquet position deletes anti-join on (file_path, pos), and deletion
+    * vectors decode distributed into the same anti-join shape.
     */
   private def buildDataFrame(spark: SparkSession, table: IceTable, schema: IceSchema,
                              sparkSchema: org.apache.spark.sql.types.StructType,
                              data: Seq[ManifestEntry], allDeletes: Seq[ManifestEntry],
                              rowLineage: Boolean = false): DataFrame = {
     import spark.implicits._
+    import graft.spark.expressions.{DeleteRef, DvDeleted, EqDeleted, EqGroup}
+    import org.apache.spark.sql.GraftShim
     // positional deletes reference explicit (file path, row position) pairs;
-    // since paths are unique, one global application at the end is exact — a
-    // path added after the delete can never appear in it. Two physical
-    // carriers share that contract: parquet delete-row files (anti-join) and
-    // V3 deletion vectors (bitmap filter).
-    val (posAll, deletes) = allDeletes.partition(_.dataFile.content == ContentPositionDeletes)
+    // since paths are unique, one global application is exact — a path
+    // added after the delete can never appear in it. Two physical carriers
+    // share that contract: parquet delete-row files and V3 deletion vectors.
+    val (posAll, eqAll) = allDeletes.partition(_.dataFile.content == ContentPositionDeletes)
     val (dvDeletes, posDeletes) = posAll.partition(_.dataFile.fileFormat == FormatPuffin)
     // row lineage derives ids from (file, position), so a lineage scan needs
     // the same metadata columns the positional masks do
     val withPos = posAll.nonEmpty || rowLineage
-
-    val (scoped, global) = deletes.partition(scopedDelete(data))
-    // the partition-tag key column of the scoped-delete anti-joins
+    val PathCol = "__graft_path"
+    val PosCol = "__graft_pos"
+    // the data sequence number and partition tag the equality masks key on
+    val SeqCol = "__graft_seq"
     val TagCol = "__graft_pk"
 
-    // delete-side broadcast size gate on the manifest's file_size_in_bytes,
-    // which the driver already holds ([[deleteFitsBroadcast]])
-    def maybeBroadcast(df: DataFrame, manifestBytes: Long): DataFrame =
-      if (deleteFitsBroadcast(spark, manifestBytes)) broadcast(df) else df
+    // one group per (equality ids present in the read schema, scoped?)
+    val isScoped = scopedDelete(data)
+    val eqGroups: Seq[((Seq[Int], Boolean), Seq[ManifestEntry])] = eqAll
+      .groupBy(e => (e.dataFile.equalityIds.filter(id => schema.fieldById(id).isDefined), isScoped(e)))
+      .toSeq.sortBy { case ((ids, scoped), _) => (ids.mkString(","), scoped) }
+    eqGroups.collectFirst { case ((Nil, _), es) => es.head }.foreach(e => throw new IllegalStateException(
+      s"equality delete ${e.dataFile.filePath} has no key column in the read schema"))
+    val withTag = eqGroups.exists(_._1._2)
+    def fits(es: Seq[ManifestEntry]): Boolean =
+      deleteFitsBroadcast(spark, es.map(_.dataFile.fileSizeInBytes).sum)
+    val (eqIndexed, eqJoined) = eqGroups.partition(g => fits(g._2))
+    val posIndexed = posDeletes.nonEmpty && fits(posDeletes)
+    val dvIndexed = dvDeletes.nonEmpty && deleteFitsBroadcast(spark,
+      dvDeletes.map(e => e.dataFile.contentSizeInBytes.getOrElse(e.dataFile.fileSizeInBytes)).sum)
 
     // Iceberg V3 initial-defaults: a file written BEFORE a defaulted column
     // existed reads that column as the default, not null. Per-file decision
@@ -1269,9 +1290,9 @@ object IceScan {
       if (entries.isEmpty) {
         import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
         var fields = sparkSchema.fields
-        if (withPos) fields = fields ++ Seq(StructField("__graft_path", StringType),
-          StructField("__graft_pos", LongType))
-        if (scoped.nonEmpty) fields = fields :+ StructField(TagCol, StringType)
+        if (withPos) fields = fields ++ Seq(StructField(PathCol, StringType), StructField(PosCol, LongType))
+        if (eqAll.nonEmpty) fields = fields :+ StructField(SeqCol, LongType)
+        if (withTag) fields = fields :+ StructField(TagCol, StringType)
         if (rowLineage) fields = fields ++ lineageStructFields
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(fields))
@@ -1288,14 +1309,14 @@ object IceScan {
       } else readFileGroup(entries)
 
     /** One read of a data-file group, with the `_metadata` columns the
-      * masks, the scoped-delete fold and row lineage key on. Lineage:
-      * virtual files derive `_row_id` as first_row_id + row position and
-      * take the file's sequence number; MATERIALIZED files keep their
-      * stored `_row_id` and COALESCE a null `_last_updated_sequence_number`
-      * to the file's sequence number — an UPDATE writes replacement rows
-      * with their preserved ids but leaves the sequence column null,
-      * because the commit's sequence number is only final at commit time
-      * (CAS retries re-stamp manifests, never parquet). */
+      * masks and row lineage key on. Lineage: virtual files derive
+      * `_row_id` as first_row_id + row position and take the file's
+      * sequence number; MATERIALIZED files keep their stored `_row_id` and
+      * COALESCE a null `_last_updated_sequence_number` to the file's
+      * sequence number — an UPDATE writes replacement rows with their
+      * preserved ids but leaves the sequence column null, because the
+      * commit's sequence number is only final at commit time (CAS retries
+      * re-stamp manifests, never parquet). */
     def readFileGroup(entries: Seq[ManifestEntry],
                       materializedLineage: Boolean = false): DataFrame = {
       val readSchema =
@@ -1303,10 +1324,11 @@ object IceScan {
           org.apache.spark.sql.types.StructType(sparkSchema.fields ++ lineageStructFields)
         else sparkSchema
       val meta = scala.collection.immutable.ListMap.newBuilder[String, Column]
-      if (withPos) meta ++= Seq("__graft_path" -> col("_metadata.file_path"),
-        "__graft_pos" -> col("_metadata.row_index"))
-      if (scoped.nonEmpty) meta += TagCol -> ManifestParquetFormat.partitionTag
+      if (withPos) meta ++= Seq(PathCol -> col("_metadata.file_path"),
+        PosCol -> col("_metadata.row_index"))
       val seq = ManifestParquetFormat.sequenceNumber
+      if (eqAll.nonEmpty) meta += SeqCol -> seq
+      if (withTag) meta += TagCol -> ManifestParquetFormat.partitionTag
       if (rowLineage && materializedLineage)
         meta += "_last_updated_sequence_number" -> coalesce(col("_last_updated_sequence_number"), seq)
       else if (rowLineage) {
@@ -1322,126 +1344,108 @@ object IceScan {
       if (extra.isEmpty) df else df.withColumns(extra)
     }
 
-    def maskParquetPositions(df: DataFrame): DataFrame =
-      if (posDeletes.isEmpty) df
-      else {
-        val delDf = IceScan.readFiles(spark, posDeletes, IceWrite.PosDeleteSchema.toSpark)
-          .select(col("file_path").as("__graft_path"), col("pos").as("__graft_pos"))
-        df.join(maybeBroadcast(delDf, posDeletes.map(_.dataFile.fileSizeInBytes).sum),
-          Seq("__graft_path", "__graft_pos"), "left_anti")
-      }
-
-    /** Deletion vectors: the scale path. When the vectors fit the broadcast
-      * gate, the delete side is a per-executor Map[path → bitmap] probed by a
-      * FILTER — no join, no shuffle, plan width constant in the number of
-      * vectors. Past the gate, vectors decode DISTRIBUTED (one task per
-      * blob, positioned range reads) into (path, pos) rows and fall back to
-      * the same anti-join shape as parquet positional deletes.
-      */
-    def maskDvPositions(df: DataFrame): DataFrame =
-      if (dvDeletes.isEmpty) df
-      else {
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val dvBytes = dvDeletes.map(e =>
-          e.dataFile.contentSizeInBytes.getOrElse(e.dataFile.fileSizeInBytes)).sum
-        if (deleteFitsBroadcast(spark, dvBytes)) {
-          val blobs: Map[String, Array[Byte]] = dvDeletes.iterator.map { e =>
-            val d = e.dataFile
-            d.referencedDataFile.getOrElse(
-              sys.error(s"puffin delete entry ${d.filePath} lacks referenced_data_file")) ->
-              graft.table.Puffin.readBlobRange(hconf, d.filePath,
-                d.contentOffset.get, d.contentSizeInBytes.get)
-          }.toMap
-          val bc = spark.sparkContext.broadcast(new graft.spark.expressions.DvIndex(blobs))
-          df.filter(!org.apache.spark.sql.GraftShim.column(
-            graft.spark.expressions.DvDeleted(
-              org.apache.spark.sql.GraftShim.expression(col("__graft_path")),
-              org.apache.spark.sql.GraftShim.expression(col("__graft_pos")), bc)))
-        } else {
-          val descs = dvDeletes.map { e =>
-            val d = e.dataFile
-            (d.filePath, d.referencedDataFile.get, d.contentOffset.get, d.contentSizeInBytes.get)
-          }
-          val sconf = org.apache.spark.sql.GraftShim.serializableHadoopConf(spark)
-          val pairs = spark.createDataset(descs)
-            .repartition(math.min(descs.size,
-              spark.sparkContext.defaultParallelism))
-            .flatMap { case (pf, ref, off, len) =>
-              val bm = graft.table.Puffin.dvFromBlob(
-                graft.table.Puffin.readBlobRange(sconf(), pf, off, len))
-              val out = Array.newBuilder[(String, Long)]
-              bm.foreach(pos => out += ((ref, pos)))
-              out.result()
-            }
-            .toDF("__graft_path", "__graft_pos")
-          df.join(pairs, Seq("__graft_path", "__graft_pos"), "left_anti")
-        }
-      }
-
-    def maskPositions(df: DataFrame): DataFrame =
-      if (!withPos) df
-      else maskDvPositions(maskParquetPositions(df)).drop("__graft_path", "__graft_pos")
-
-    if (deletes.isEmpty) return maskPositions(readData(data))
-
-    /** ONE sequence-ordered fold across all partitions (table.rs:498-679):
-      * ascending sequence order, deletes before data at equal sequence (a
-      * delete masks only STRICTLY older files); data files between two
-      * delete sequence points are read as one multi-file scan — partition
-      * scoping is enforced by the tag column in the anti-join key, so the
-      * plan never fans out per partition.
-      */
-    def fold(): DataFrame = {
-      val allDels = scoped ++ global
-      val delSeqs = allDels.map(_.sequenceNumber.getOrElse(0L)).distinct.sorted
-      var acc: DataFrame = null
-      var remaining = data.sortBy(_.sequenceNumber.getOrElse(0L))
-      for (ds <- delSeqs) {
-        val (older, newer) = remaining.partition(_.sequenceNumber.getOrElse(0L) < ds)
-        if (older.nonEmpty) {
-          val df = readData(older)
-          acc = if (acc == null) df else acc.unionByName(df)
-        }
-        remaining = newer
-        if (acc != null) {
-          // delete files at this sequence, one anti-join per distinct
-          // (equality ids, scoped?) group — same-shaped files share a scan
-          def eqSchemaOf(eqCols: Seq[String]) = org.apache.spark.sql.types.StructType(
-            sparkSchema.fields.filter(f => eqCols.contains(f.name)))
-          val (scopedAt, globalAt) = allDels.filter(_.sequenceNumber.getOrElse(0L) == ds)
-            .partition(scoped.contains)
-          for ((eqIds, files) <- scopedAt.groupBy(_.dataFile.equalityIds).toSeq.sortBy(_._1.mkString(","))) {
-            val eqCols = eqIds.flatMap(id => schema.fieldById(id)).map(_.name)
-            val delDf = IceScan.readFiles(spark, files, eqSchemaOf(eqCols))
-              .select((eqCols.map(col) :+ ManifestParquetFormat.partitionTag.as(TagCol)): _*)
-            // NULL-SAFE key equality (<=>): the Iceberg spec's equality
-            // deletes match null to null — a USING join would silently
-            // never mask a null-keyed row (it then survives forever next
-            // to every replacement generation)
-            val bd = maybeBroadcast(delDf, files.map(_.dataFile.fileSizeInBytes).sum)
-            val cond = (eqCols.map(c => acc(c) <=> bd(c)) :+
-              (acc(TagCol) === bd(TagCol))).reduce(_ && _)
-            acc = acc.join(bd, cond, "left_anti")
-          }
-          for ((eqIds, files) <- globalAt.groupBy(_.dataFile.equalityIds).toSeq.sortBy(_._1.mkString(","))) {
-            val eqCols = eqIds.flatMap(id => schema.fieldById(id)).map(_.name)
-            val delDf = IceScan.readFiles(spark, files, eqSchemaOf(eqCols))
-            val bd = maybeBroadcast(delDf, files.map(_.dataFile.fileSizeInBytes).sum)
-            acc = acc.join(bd,
-              eqCols.map(c => acc(c) <=> bd(c)).reduce(_ && _), "left_anti")
-          }
-        }
-      }
-      val newerDf = if (remaining.nonEmpty) Some(readData(remaining)) else None
-      (Option(acc), newerDf) match {
-        case (Some(a), Some(n)) => a.unionByName(n)
-        case (Some(a), None) => a
-        case (None, Some(n)) => n
-        case (None, None) => readData(Nil)
-      }
+    def colsOf(ids: Seq[Int]): Seq[String] = ids.map(id => schema.fieldById(id).get.name)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    def ref(e: ManifestEntry, kind: Int, scoped: Boolean = false): DeleteRef = {
+      val d = e.dataFile
+      if (kind == DeleteRef.DeletionVector)
+        DeleteRef(d.filePath, d.fileSizeInBytes, kind, 0L, null, Nil,
+          d.contentOffset.getOrElse(sys.error(s"DV entry ${d.filePath} lacks content_offset")),
+          d.contentSizeInBytes.getOrElse(sys.error(s"DV entry ${d.filePath} lacks content_size")),
+          d.referencedDataFile.getOrElse(
+            sys.error(s"puffin delete entry ${d.filePath} lacks referenced_data_file")))
+      else
+        DeleteRef(qualifiedPath(hconf, d.filePath), d.fileSizeInBytes, kind,
+          e.sequenceNumber.getOrElse(0L), if (scoped) pkTag(d.partition) else null,
+          d.equalityIds, 0L, 0L, null)
     }
 
-    val folded = fold()
-    maskPositions(if (scoped.nonEmpty) folded.drop(TagCol) else folded)
+    var df = readData(data)
+    val keyIds = eqIndexed.flatMap(_._1._1).distinct.sorted
+    lazy val loader = deleteLoader(spark, schema, sparkSchema, keyIds,
+      parquet = eqIndexed.nonEmpty || posIndexed, vectors = dvIndexed)
+
+    if (eqIndexed.nonEmpty) {
+      val groups = eqIndexed.map { case ((ids, scoped), es) =>
+        EqGroup(ids, scoped, es.map(ref(_, DeleteRef.EqualityFile, scoped)))
+      }
+      val children = (col(SeqCol) +: (if (withTag) col(TagCol) else lit(null).cast(StringType)) +:
+        groups.flatMap(g => colsOf(g.ids).map(col))).map(GraftShim.expression)
+      df = df.filter(!GraftShim.column(EqDeleted(children, groups, loader)))
+    }
+    for (((ids, scoped), es) <- eqJoined) {
+      val eqCols = colsOf(ids)
+      val del = IceScan.readFiles(spark, es, org.apache.spark.sql.types.StructType(
+          sparkSchema.fields.filter(f => eqCols.contains(f.name))))
+        .select(eqCols.map(col) ++ (if (scoped) Seq(ManifestParquetFormat.partitionTag.as(TagCol)) else Nil) :+
+          ManifestParquetFormat.sequenceNumber.as("__graft_dseq"): _*)
+      // NULL-SAFE key equality (<=>): the Iceberg spec's equality deletes
+      // match null to null — a USING join would silently never mask a
+      // null-keyed row (it then survives forever next to every
+      // replacement generation)
+      val cond = eqCols.map(c => df(c) <=> del(c)) ++
+        (if (scoped) Seq(df(TagCol) === del(TagCol)) else Nil) :+
+        (df(SeqCol) < del("__graft_dseq"))
+      df = df.join(del, cond.reduce(_ && _), "left_anti")
+    }
+
+    val indexedPositions = (if (posIndexed) posDeletes.map(ref(_, DeleteRef.PositionFile)) else Nil) ++
+      (if (dvIndexed) dvDeletes.map(ref(_, DeleteRef.DeletionVector)) else Nil)
+    if (indexedPositions.nonEmpty)
+      df = df.filter(!GraftShim.column(DvDeleted(GraftShim.expression(col(PathCol)),
+        GraftShim.expression(col(PosCol)), indexedPositions, loader)))
+    if (posDeletes.nonEmpty && !posIndexed) {
+      val del = IceScan.readFiles(spark, posDeletes, IceWrite.PosDeleteSchema.toSpark)
+        .select(col("file_path").as(PathCol), col("pos").as(PosCol))
+      df = df.join(del, Seq(PathCol, PosCol), "left_anti")
+    }
+    if (dvDeletes.nonEmpty && !dvIndexed) {
+      // past the gate the vectors decode DISTRIBUTED (one task per blob,
+      // positioned range reads) into (path, pos) rows
+      val descs = dvDeletes.map { e =>
+        val d = e.dataFile
+        (d.filePath, d.referencedDataFile.get, d.contentOffset.get, d.contentSizeInBytes.get)
+      }
+      val sconf = GraftShim.serializableHadoopConf(spark)
+      val pairs = spark.createDataset(descs)
+        .repartition(math.min(descs.size, spark.sparkContext.defaultParallelism))
+        .flatMap { case (pf, ref, off, len) =>
+          val bm = graft.table.Puffin.dvFromBlob(graft.table.Puffin.readBlobRange(sconf(), pf, off, len))
+          val out = Array.newBuilder[(String, Long)]
+          bm.foreach(pos => out += ((ref, pos)))
+          out.result()
+        }
+        .toDF(PathCol, PosCol)
+      df = df.join(pairs, Seq(PathCol, PosCol), "left_anti")
+    }
+    df.drop(PathCol, PosCol, SeqCol, TagCol)
+  }
+
+  /** The executor-side reader of one scan's indexed delete files. Parquet
+    * delete files read through ONE Spark parquet reader over one requested
+    * schema — the positional columns, renamed so no data column can
+    * collide, then the `keyIds` columns at the scan's own types. The Hadoop
+    * conf ships once in that reader's broadcast, and once more with the
+    * loader when deletion vectors need it for their blob reads. Building
+    * the loader opens no file. */
+  private def deleteLoader(spark: SparkSession, schema: IceSchema,
+                           sparkSchema: org.apache.spark.sql.types.StructType,
+                           keyIds: Seq[Int], parquet: Boolean,
+                           vectors: Boolean): graft.spark.expressions.DeleteLoader = {
+    import org.apache.spark.sql.execution.datasources.FileFormat
+    import org.apache.spark.sql.types.StructType
+    // the conf's keys without their per-key source records, which
+    // serializing a conf would otherwise gzip ([[IceWrite.writeDataFiles]])
+    val conf = new Configuration(false)
+    conf.addResource(spark.sessionState.newHadoopConf())
+    val requested = org.apache.spark.sql.GraftShim.nullable(StructType(
+      IceWrite.PosDeleteSchema.toSpark.fields.map(f => f.copy(name = "__graft_del_" + f.name)) ++
+        keyIds.map(id => sparkSchema(schema.fieldById(id).get.name))))
+    val read =
+      if (!parquet) null
+      else new ParquetFileFormat().buildReaderWithPartitionValues(spark, requested,
+        new StructType(), requested, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    new graft.spark.expressions.DeleteLoader(read, keyIds.zipWithIndex.map { case (id, i) => id -> (i + 2) }.toMap,
+      if (vectors) org.apache.spark.sql.GraftShim.serializableConf(conf) else null)
   }
 }

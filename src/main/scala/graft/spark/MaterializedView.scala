@@ -555,23 +555,24 @@ object IceMV {
         if (!small) out.unpersist()
         RefreshResult(strategy, n)
 
-      case IncrementalAppend =>
-        val delta = deltaCompute(spark, plan, sources, state)
+      case IncrementalAppend => withPins { pin =>
+        val delta = deltaCompute(spark, plan, sources, state, pin)
         val files = IceWrite.writeDataFiles(spark, storage, delta, storage.schema)
         storage.newTransaction(None).appendData(files).updateProperties(stateProps).commit()
         RefreshResult(strategy, files.map(_.recordCount).sum)
+      }
 
-      case agg @ IncrementalAggregate(groupNames, merges0) =>
+      case agg @ IncrementalAggregate(groupNames, merges0) => withPins { pin =>
         val aggNode = plan.asInstanceOf[Aggregate]
-        val deltaChild = deltaCompute(spark, aggNode.child, sources, state)
+        val deltaChild = deltaCompute(spark, aggNode.child, sources, state, pin)
         // avg outputs merge via their hidden exact (sum, count) pair
         val merges = merges0.flatMap {
           case (n, "avg") => Seq(avgSumName(n) -> "sum", avgCntName(n) -> "count")
           case other => Seq(other)
         }
-        val deltaAgg =
+        val deltaAgg = pin(
           (if (avgCols.isEmpty) buildAggregate(aggNode, deltaChild)
-           else buildStorageAggregate(aggNode, deltaChild)).cache() // M3: cache ≈ ForkNode
+           else buildStorageAggregate(aggNode, deltaChild)).cache()) // M3: cache ≈ ForkNode
         val stored = IceScan.scan(spark, storage)
         val outCols = storage.schema.fields.map(_.name)
 
@@ -637,11 +638,20 @@ object IceMV {
         storage.newTransaction(None)
           .appendData(dataFiles).appendDeletes(delFiles)
           .updateProperties(stateProps).commit()
-        deltaAgg.unpersist()
         RefreshResult(agg, dataFiles.map(_.recordCount).sum)
+      }
 
       case Fresh => RefreshResult(Fresh, 0L)
     }
+  }
+
+  /** Runs an incremental refresh with a `pin` that registers each frame
+    * it caches, and unpersists every pinned frame once the refresh has
+    * committed or failed. */
+  private def withPins[A](body: (DataFrame => DataFrame) => A): A = {
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => pinned += df; df }
+    finally pinned.foreach(_.unpersist())
   }
 
   // -------------------------------------------------------------------
@@ -775,7 +785,8 @@ object IceMV {
     * changed occurrences, each term the plan rebuilt with subset→delta-scan
     * and rest→old-snapshot-scan bindings (J2/J3 algebra generalized). */
   private def deltaCompute(spark: SparkSession, plan: LogicalPlan,
-                           sources: Seq[IceTable], state: Map[String, String]): DataFrame = {
+                           sources: Seq[IceTable], state: Map[String, String],
+                           pin: DataFrame => DataFrame): DataFrame = {
     // occurrences of `plan` are a suffix of the full query's occurrence list
     // only when plan IS the full query; recompute for this subtree
     val occs = sourceOccurrences(plan)
@@ -797,11 +808,15 @@ object IceMV {
         snapshotId = curSnap(i), afterSequence = afterSeq.orElse(Some(0L))))
     }
 
-    val cachedDelta: Map[Int, DataFrame] = changed.map(i => i -> deltaScan(i).cache()).toMap
+    // each delta is read by 2^(changed - 1) terms: cache it only when that
+    // is more than one, and hand the cached frames to the caller to release
+    val deltas: Map[Int, DataFrame] = changed.map { i =>
+      i -> (if (changed.size > 1) pin(deltaScan(i).cache()) else deltaScan(i))
+    }.toMap
     val terms = for {
       mask <- 1 until (1 << changed.size)
       subset = changed.zipWithIndex.collect { case (occ, bit) if (mask & (1 << bit)) != 0 => occ }.toSet
-    } yield build(plan, i => if (subset.contains(i)) cachedDelta(i) else oldScan(i))
+    } yield build(plan, i => if (subset.contains(i)) deltas(i) else oldScan(i))
     terms.reduce(_ unionByName _)
   }
 

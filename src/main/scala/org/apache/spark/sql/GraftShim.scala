@@ -26,14 +26,21 @@ object GraftShim {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** `e` with NaN and -0.0 normalized as Spark normalizes join keys
+    * (`NormalizeFloatingNumbers.normalize` is `private[sql]`). */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** A task-serializable Hadoop-configuration accessor (the underlying
     * `SerializableConfiguration` is `private[spark]`, so it rides inside a
     * serializable thunk) — lets executor-side blob readers (deletion-vector
     * fallback decode) open the same FileSystem the driver planned against,
     * remote stores included. */
-  def serializableHadoopConf(spark: SparkSession): () => org.apache.hadoop.conf.Configuration = {
-    val wrapped = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+  def serializableHadoopConf(spark: SparkSession): () => org.apache.hadoop.conf.Configuration =
+    serializableConf(spark.sparkContext.hadoopConfiguration)
+
+  def serializableConf(conf: org.apache.hadoop.conf.Configuration): () => org.apache.hadoop.conf.Configuration = {
+    val wrapped = new org.apache.spark.util.SerializableConfiguration(conf)
     () => wrapped.value
   }
 

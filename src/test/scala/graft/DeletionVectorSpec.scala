@@ -191,13 +191,18 @@ class DeletionVectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.toLowerCase.contains("dvdeleted"),
       s"expected the dvdeleted filter in the plan:\n$plan")
 
-    // parquet positional deletes on an identical table DO anti-join — the
-    // shape DVs replace
+    // parquet positional deletes on an identical table ride the same
+    // filter under the gate, and anti-join past it
     var table2 = cat.createTable(TableIdent(Seq("test"), "dvplan2"), ordersSchema, daySpec)
     table2 = IceWrite.append(spark, table2, batch1)
     table2 = IceWrite.appendPositionDeletes(spark, table2, col("product_id") === 1)
     val plan2 = IceScan.scan(spark, table2).queryExecution.executedPlan.toString
-    assert(plan2.contains("LeftAnti"), "parquet positional deletes anti-join")
+    assert(!plan2.contains("LeftAnti") && plan2.toLowerCase.contains("dvdeleted"),
+      s"parquet positional deletes mask through the dvdeleted filter:\n$plan2")
+    spark.conf.set("spark.graft.delete.broadcast-threshold", "0")
+    try assert(IceScan.scan(spark, table2).queryExecution.executedPlan.toString.contains("LeftAnti"),
+      "parquet positional deletes anti-join past the gate")
+    finally spark.conf.unset("spark.graft.delete.broadcast-threshold")
 
     // past the broadcast gate the fallback decodes DISTRIBUTED and
     // anti-joins — bit-identical result set

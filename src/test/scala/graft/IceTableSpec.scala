@@ -269,11 +269,25 @@ class IceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // partitions) at scale). 1 data file + 1 delete file survive.
     val prunedScan = IceScan.scan(spark, table,
       Seq(col("date") === to_date(lit(dates.head))))
-    // inputFiles spans every relation in the MoR plan — data AND delete
-    // sides (the AQE-wrapped physical plan hides FileSourceScanExec leaves)
-    val inputFiles = prunedScan.inputFiles.length
-    assert(inputFiles == 2,
-      s"expected 1 data + 1 scoped delete file in the pruned plan, got $inputFiles")
+    // under the gate the delete files ride the mask's descriptor, not a
+    // relation: 1 data file among the relations, 1 scoped delete file in
+    // the eqdeleted filter
+    val maskedFiles = prunedScan.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: graft.spark.expressions.EqDeleted => e.groups.map(_.files.size).sum
+    })).sum
+    assert(prunedScan.inputFiles.length == 1 && maskedFiles == 1,
+      s"expected 1 data + 1 scoped delete file in the pruned plan, got " +
+        s"${prunedScan.inputFiles.length} + $maskedFiles")
+    // past the gate inputFiles spans every relation in the MoR plan — data
+    // AND delete sides (the AQE-wrapped physical plan hides
+    // FileSourceScanExec leaves)
+    spark.conf.set("spark.graft.delete.broadcast-threshold", "0")
+    try {
+      val inputFiles = IceScan.scan(spark, table,
+        Seq(col("date") === to_date(lit(dates.head)))).inputFiles.length
+      assert(inputFiles == 2,
+        s"expected 1 data + 1 scoped delete file in the pruned plan, got $inputFiles")
+    } finally spark.conf.unset("spark.graft.delete.broadcast-threshold")
     // exactness: id=1 was deleted in partition 1, ids 2..10 survive
     assert(prunedScan.count() == 9)
     assert(prunedScan.filter($"id" === 1L).count() == 0)
@@ -366,13 +380,22 @@ class IceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val scanned = IceScan.scan(spark, t)
     val after = scanned.collect().map(_.toString).sorted.toSeq
     assert(after == before, "conversion must not change scan results")
-    // the per-sequence-point fold is gone: one global positional anti-join
-    // AQE's toString prints the plan twice (Final + Initial) — count the
-    // final section only
-    val plan = scanned.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(plan.split('\n').count(_.contains("LeftAnti")) == 1,
+    // the per-sequence-point fold is gone: one global positional mask, the
+    // index filter under the gate and one anti-join past it. AQE's toString
+    // prints the plan twice (Final + Initial) — count the final section only
+    def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    val plan = finalPlan(scanned)
+    assert(!plan.contains("LeftAnti") && plan.split('\n').count(_.contains("Filter NOT dvdeleted(")) == 1,
       s"expected exactly the positional mask:\n$plan")
     assert(!plan.contains("Union"), s"data segments must not split post-conversion:\n$plan")
+    spark.conf.set("spark.graft.delete.broadcast-threshold", "0")
+    try {
+      val gated = finalPlan(IceScan.scan(spark, t))
+      assert(gated.split('\n').count(_.contains("LeftAnti")) == 1,
+        s"expected exactly the positional anti-join past the gate:\n$gated")
+      assert(!gated.contains("Union"), s"data segments must not split post-conversion:\n$gated")
+    } finally spark.conf.unset("spark.graft.delete.broadcast-threshold")
     // idempotent: a second conversion is a no-op shape-wise
     val (e2, p2, n2) = graft.table.Maintenance.convertEqualityDeletes(spark, t.refresh())
     assert(e2 == 0 && n2 == 0L && p2 == posAfter)

@@ -252,8 +252,10 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     t = IceWrite.appendEqualityDeletes(spark, t,
       (1L to 50L).toDF("id"), equalityIds = Seq(1))
     def morPlan(): String = physicalPlan(IceScan.scan(spark, t))
-    // default threshold (64 MB): the tiny delete file broadcasts
-    assert(morPlan().contains("BroadcastHashJoin"), s"small deletes should broadcast:\n${morPlan()}")
+    // default threshold (64 MB): the tiny delete file masks through the
+    // executor-side index filter, with no join and no broadcast
+    assert(!morPlan().contains("LeftAnti") && !morPlan().contains("BroadcastHashJoin") &&
+      morPlan().toLowerCase.contains("eqdeleted"), s"small deletes should mask through the index:\n${morPlan()}")
     // threshold forced to zero: same scan must fall back to a shuffled
     // anti-join. autoBroadcastJoinThreshold is disabled too — at real scale
     // a gate-exceeding delete side also exceeds Spark's 10 MB auto

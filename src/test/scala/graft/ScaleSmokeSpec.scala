@@ -571,8 +571,18 @@ class ScaleSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dvAntis = dvPlan.split('\n').count(_.contains("LeftAnti"))
     metrics("mor_dv_plan_antijoins") = dvAntis.toDouble
     check("mor_dv_filter_plan",
-      dvAntis < antis && dvPlan.toLowerCase.contains("dvdeleted"),
+      antis == 0 && dvAntis == 0 && plan.toLowerCase.contains("dvdeleted") &&
+        dvPlan.toLowerCase.contains("dvdeleted"),
       s"positional layer must be a dvdeleted filter (anti-joins $antis -> $dvAntis):\n$dvPlan")
+    // past the gate the positional layer anti-joins: parquet rows and
+    // distributed-decoded vectors alike
+    spark.conf.set("spark.graft.delete.broadcast-threshold", "0")
+    val gatedAntis = try {
+      val gatedPlan = IceScan.scan(spark, t).queryExecution.executedPlan.toString
+      gatedPlan.split('\n').count(_.contains("LeftAnti"))
+    } finally spark.conf.unset("spark.graft.delete.broadcast-threshold")
+    check("mor_dv_gated_antijoin_plan", gatedAntis > 0,
+      s"past the gate the positional layer must anti-join, got $gatedAntis anti-joins")
   }
 
   test("ppl quality scoring scales: exactly 10x scored rows, copy-0 scores bit-identical") {
